@@ -21,9 +21,10 @@ from dwds_livestream_spark.sinks.fact_sink import parquet_writer, start_fact_sin
 from dwds_livestream_spark.streaming.pipeline import collector_stream
 
 DIM = 100_000
-LINES_PER_FILE = 2_500
-FILES_PER_S = 14  # backlog files per second of --seconds: ~7 micro-batches at 8 s
-WARMUP_FILES = 16  # one micro-batch drained before the timed ones
+LINES_PER_FILE = 1_000
+# backlog files per second of --seconds; 16 files make a micro-batch, so
+# 8 s give 14 batches and 13 commit-to-commit intervals
+FILES_PER_S = 28
 
 
 def _read_fact_rows(path: str) -> tuple[Counter, int, int]:
@@ -48,24 +49,20 @@ def _read_fact_rows(path: str) -> tuple[Counter, int, int]:
 def collector_backlog(session, work: str, seed: int, seconds: int, tracer) -> dict:
     dim = Dimension(seed, DIM)
     vocab = Vocabulary(seed, DIM, 50_000)
-    warm_dir = os.path.join(work, "warm")
     in_dir = os.path.join(work, "jsonl")
     idle = os.path.join(work, "idle")
-    for d in (warm_dir, in_dir, idle):
+    for d in (in_dir, idle):
         os.makedirs(d)
     n_files = FILES_PER_S * seconds
     expected: Counter = Counter()
     mix: Counter = Counter()
     cache: dict = {}
-    for k in range(WARMUP_FILES + n_files):
+    for k in range(n_files):
         lines, m, rows = jsonl_file(seed, k, LINES_PER_FILE, dim, vocab, cache)
-        warm = k < WARMUP_FILES
-        with open(os.path.join(warm_dir if warm else in_dir, f"{k:06d}.jsonl"), "w",
-                  encoding="utf-8") as fh:
+        with open(os.path.join(in_dir, f"{k:06d}.jsonl"), "w", encoding="utf-8") as fh:
             fh.write("\n".join(lines) + "\n")
-        if not warm:
-            mix += m
-            expected += rows
+        mix += m
+        expected += rows
     tracer.mark("inputs")
 
     spark, session_s = session()
@@ -103,12 +100,6 @@ def collector_backlog(session, work: str, seed: int, seconds: int, tracer) -> di
     setup_s = session_s + reps[len(reps) // 2]
 
     tracer.mark("setup")
-    # warm-up drain into its own table: codegen and JIT of the parse and
-    # parquet writer paths; not timed, not part of the checked table
-    start(warm_dir, os.path.join(work, "fact-warm"), "ckpt-warm",
-          {"availableNow": True}).awaitTermination()
-    commits.clear()
-    tracer.mark("warmup")
 
     out = os.path.join(work, "fact")
     gc0 = jvm_gc_ms(spark)
@@ -132,7 +123,10 @@ def collector_backlog(session, work: str, seed: int, seconds: int, tracer) -> di
     extra = sum((got - expected).values())
     n_rows = sum(got.values())
     # each output file belongs to the writer call that ended first after
-    # its modification time; a batch's latency is its commit interval
+    # its modification time. A batch's latency is the interval from the
+    # previous commit to its own, so the first batch, which also carries
+    # the query start, the first file listing and the codegen of the parse
+    # and writer paths, only opens the clock.
     ends = np.array(commits)
     per_batch = Counter()
     for r, _, fs in os.walk(out):
@@ -141,8 +135,8 @@ def collector_backlog(session, work: str, seed: int, seconds: int, tracer) -> di
                 p = os.path.join(r, f)
                 i = int(np.searchsorted(ends, os.path.getmtime(p) - 1e-3))
                 per_batch[min(i, len(ends) - 1)] += _parquet_rows(p)
-    interval = np.diff(ends, prepend=t0)
-    rate = [per_batch[i] / interval[i] for i in range(len(ends))]
+    interval = np.diff(ends)
+    rows_after_first = n_rows - per_batch[0]
 
     observed = [p.get("observedMetrics", {}).get("parse", {}) for p in progress]
     n_lines = sum(o.get("n_lines", 0) for o in observed)
@@ -153,7 +147,7 @@ def collector_backlog(session, work: str, seed: int, seconds: int, tracer) -> di
         "e2e_p50_s": quantile(interval, 0.5),
         "e2e_p90_s": quantile(interval, 0.9),
         "e2e_geomean_s": geomean(interval),
-        "items_per_s": quantile(rate, 0.5),
+        "items_per_s": rows_after_first / (ends[-1] - ends[0]),
     }
     layers = phase_stats(progress)
     layers.update({

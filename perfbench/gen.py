@@ -59,7 +59,10 @@ _DATE0 = dt.date(1990, 1, 1)
 class Dimension:
     """The ``lemma ⋈ article`` dimension: one row per lemma, two or three
     rows (hidx 1..3, shuffled) for about 12% of lemmas, so the argmin
-    dedup has work. ``meta(i)`` is the row the dedup must keep."""
+    dedup has work. ``meta(i)`` is the row the dedup must keep.
+
+    The 12% homograph share and the 3% null-source share are assumptions:
+    no measured distribution of the production dimension is available."""
 
     def __init__(self, seed: int, n: int):
         rng = np.random.default_rng([seed, 1])
@@ -137,7 +140,10 @@ class Dimension:
 
 class Vocabulary:
     """Zipf-popular stream lemmas: rank r is drawn with weight
-    1/(r+1)^1.07; about 10% of ranks are lemmas the dimension lacks."""
+    1/(r+1)^1.07; about 10% of ranks are lemmas the dimension lacks.
+
+    The exponent 1.07 and the 50k-rank default size are assumptions, not
+    fitted to production request logs."""
 
     def __init__(self, seed: int, dim_n: int, size: int):
         rng = np.random.default_rng([seed, 2])
@@ -204,7 +210,10 @@ BOT_UAS = (
 LEGACY = ("dwb", "dwb2", "etymwb", "wdg", "index", "W%C3%B6rterbuch")
 _MONTHS = "Jan Feb Mar Apr May Jun Jul Aug Sep Oct Nov Dec".split()
 
-# line class -> share of lines; ``keep*`` classes produce an event
+# line class -> share of lines; ``keep*`` classes produce an event. Only
+# the one-third survivor share is a target; the split among the drop
+# classes is an assumption (no measured request mix is available), chosen
+# so that every class is exercised in each file.
 LINE_MIX = {
     "keep": 0.29,
     "keep_query": 0.04,

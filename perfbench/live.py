@@ -5,7 +5,6 @@ LivestreamHTTPServer.
 ``live_tail``: an open-loop writer process adds access-log files on
 absolute deadlines while two SSE clients listen; latency runs from each
 file's due time to the publish call that delivers its events.
-``live_backlog``: a pre-written backlog is drained with ``availableNow``.
 """
 
 from __future__ import annotations
@@ -33,11 +32,8 @@ from dwds_livestream_spark.streaming.hub import BroadcastHub
 from dwds_livestream_spark.streaming.pipeline import start_live_server
 
 TAIL_DIM = 1_000_000
-BACKLOG_DIM = 100_000
 TAIL_RATE = 1_000  # raw lines/s: 10x the reference's ~100 req/s
 TAIL_FILES_PER_S = 4
-BACKLOG_LINES_PER_FILE = 9_000  # 16 files ~ 48k events < max_publish_rows
-BACKLOG_FILES_PER_S = 5  # backlog files per second of --seconds
 WARMUP_FILES = 4
 
 
@@ -294,11 +290,10 @@ def live_tail(session, work: str, seed: int, seconds: int, tracer) -> dict:
         "e2e_p50_s": quantile(lat, 0.5),
         "e2e_p90_s": quantile(lat, 0.9),
         "e2e_geomean_s": geomean(lat),
-        # events delivered per second of offered window: the survivor
-        # rate of the offered load while the path keeps up, less while it
-        # loses events (the last publish time would make it a second
-        # latency figure, quantised by the micro-batch length)
-        "items_per_s": len(lat) / (n_files * interval),
+        # window events per second from the first file's due time to the
+        # last publish: the offered survivor rate stretched by how far the
+        # path lags behind it at the end of the window
+        "items_per_s": len(lat) / window_s,
     }
     layers = _wire_layers(rig, lpf * (WARMUP_FILES + n_files))
     batch_start = {p["batchId"]: p for p in progress}
@@ -320,6 +315,8 @@ def live_tail(session, work: str, seed: int, seconds: int, tracer) -> dict:
         "sources.backlog_files_end": float(sum(
             1 for k in written if batch_pub.get(file_batch.get(k), 0) > last_written)),
         "streaming.compute_ms_p50": _compute_ms(rig, progress),
+        # rows the snapshot loads and deduplicates (homographs included)
+        "dimension.rows": float(dim.rows),
         "hub.conflated_ratio": sum(s.dropped for s in rig.subs) / max(1, offered),
         "serving.deliver_ms_p50": 1000 * quantile(deliver, 0.5),
         "serving.events_delivered": float(sum(len(c.received) for c in clients)),
@@ -342,76 +339,3 @@ def live_tail(session, work: str, seed: int, seconds: int, tracer) -> dict:
 def _shares(mix: Counter) -> dict:
     n = sum(mix.values())
     return {c: round(mix.get(c, 0) / n, 4) for c in LINE_MIX}
-
-
-def live_backlog(session, work: str, seed: int, seconds: int, tracer) -> dict:
-    log = AccessLog(seed, BACKLOG_DIM)
-    dim = Dimension(seed, BACKLOG_DIM)
-    dim_path = os.path.join(work, "dim.parquet")
-    dim.write_parquet(dim_path)
-    warm_dir = os.path.join(work, "warm")
-    log_dir = os.path.join(work, "log")
-    idle = os.path.join(work, "idle")
-    for d in (warm_dir, log_dir, idle):
-        os.makedirs(d)
-    n_files = BACKLOG_FILES_PER_S * seconds
-    expected: Counter = Counter()
-    mix: Counter = Counter()
-    for k in range(2):
-        m, kept = log.write_file(warm_dir, k, BACKLOG_LINES_PER_FILE)
-        expected += log.expected_events(k, kept, dim)
-    for k in range(2, 2 + n_files):
-        m, kept = log.write_file(log_dir, k, BACKLOG_LINES_PER_FILE)
-        mix += m
-        expected += log.expected_events(k, kept, dim)
-
-    spark, session_s = session()
-    listener = make_phase_listener() if tracer.enabled else None
-    if listener:
-        spark.streams.addListener(listener)
-    rig, setup_s, reps = _setup(spark, tracer, dim_path, idle, work, session_s)
-    # warm-up drain: codegen and the parse path, outside the timed drain
-    rig.start(warm_dir, os.path.join(work, "ckpt-warm"), {"availableNow": True})
-    rig.query.awaitTermination()
-    n_warm = len(rig.published)
-
-    gc0 = jvm_gc_ms(spark)
-    t0 = time.time()
-    rig.start(log_dir, os.path.join(work, "ckpt"), {"availableNow": True})
-    rig.query.awaitTermination()
-    drain_s = time.time() - t0
-    gc_ms = jvm_gc_ms(spark) - gc0
-    progress = (listener.wait_for(str(rig.query.id), rig.query.lastProgress["batchId"])
-                if listener and rig.query.lastProgress else [])
-    rig.stop()
-    if listener:
-        spark.streams.removeListener(listener)
-
-    failed, check = _check(rig, expected)
-    lines_in = BACKLOG_LINES_PER_FILE * n_files
-    lat = [t - t0 for _, t, lines in rig.published[n_warm:] for _ in lines]
-    rig.loader_s, rig.publish_s = rig.loader_s[n_warm:], rig.publish_s[n_warm:]
-    e2e = {
-        "setup_s": setup_s,
-        "e2e_p50_s": quantile(lat, 0.5),
-        "e2e_p90_s": quantile(lat, 0.9),
-        "e2e_geomean_s": geomean(lat),
-        "items_per_s": lines_in / drain_s,
-    }
-    layers = _wire_layers(rig, lines_in + 2 * BACKLOG_LINES_PER_FILE)
-    layers.update(phase_stats(progress))
-    layers.update({
-        "sources.files_per_batch_mean": n_files / max(1, len(rig.published) - n_warm),
-        "streaming.compute_ms_p50": _compute_ms(rig, progress),
-        "session.gc_ms": float(gc_ms),
-        "session.peak_rss_mb": peak_rss_mb(spark),
-    })
-    return {
-        "e2e": e2e, "layers": layers, "attempted": lines_in + 2 * BACKLOG_LINES_PER_FILE,
-        "failed": failed, "check": check, "setup_reps_s": reps,
-        "load": {"backlog_lines": lines_in, "files": n_files,
-                 "lines_per_file": BACKLOG_LINES_PER_FILE,
-                 "dimension_lemmas": BACKLOG_DIM, "dimension_rows": dim.rows,
-                 "drain_s": drain_s, "mix": _shares(mix)},
-    }
-

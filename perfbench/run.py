@@ -2,7 +2,7 @@
 
     python3 perfbench/run.py --workload NAME --seed N --seconds S --trace 0|1
 
-Workloads: live_tail, live_backlog, collector_backlog, batch_queries
+Workloads: live_tail, collector_backlog, batch_queries
 (see perfbench/README.md). Inputs are generated from --seed inside
 perfbench/.work/ and removed afterwards. The last stdout line is one JSON
 object: {"correct", "attempted", "failed", "metrics"}; with --trace 0 the
@@ -65,10 +65,10 @@ def main() -> int:
     from batch import batch_queries
     from collector import collector_backlog
     from common import Tracer, describe_session, start_session
-    from live import live_backlog, live_tail
+    from live import live_tail
 
-    workloads = {"live_tail": live_tail, "live_backlog": live_backlog,
-                 "collector_backlog": collector_backlog, "batch_queries": batch_queries}
+    workloads = {"live_tail": live_tail, "collector_backlog": collector_backlog,
+                 "batch_queries": batch_queries}
     if args.workload not in workloads:
         print(f"perfbench: unknown workload {args.workload!r}; "
               f"choose from {sorted(workloads)}", file=sys.stderr)
