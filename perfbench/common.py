@@ -18,7 +18,7 @@ import numpy as np
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CPUS = min(4, os.cpu_count() or 1)
 DRIVER_MEM = "2g"
-SETUP_REPS = 3
+
 
 def quantile(values, q: float) -> float:
     return float(np.percentile(np.asarray(values, dtype=float), q * 100)) if len(values) else 0.0
@@ -56,6 +56,24 @@ def start_session(work: str):
     )
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+class CpuClock:
+    """CPU seconds (user + system, all threads) used so far by the driver
+    JVM and by this Python process, which holds the engine's Python side
+    (foreachBatch callbacks, the hub, the HTTP server). On a shared host
+    wall time also counts the time the host withholds the CPU from this
+    machine; CPU time does not."""
+
+    def __init__(self, spark):
+        self.jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+        self.tick = os.sysconf("SC_CLK_TCK")
+
+    def read(self) -> tuple[float, float]:
+        """(JVM seconds, Python seconds)."""
+        with open(f"/proc/{self.jvm_pid}/stat") as fh:
+            f = fh.read().rsplit(")", 1)[1].split()
+        return (int(f[11]) + int(f[12])) / self.tick, time.process_time()
 
 
 def describe_session(spark) -> dict:

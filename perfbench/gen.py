@@ -4,13 +4,6 @@ Every input the benchmark feeds the engine is made here from ``--seed``,
 and every expected output is derived here in plain Python from how the
 input was constructed (a line is a bot line because it was given a bot
 user agent), never by running the engine.
-
-Run as a script, this module is the open-loop load generator of the
-``live_tail`` workload: a separate process that writes access-log files
-into the watched directory on absolute deadlines.
-
-    python3 perfbench/gen.py live-writer OUT_DIR SEED FIRST COUNT \
-        START_EPOCH INTERVAL_S LINES_PER_FILE DIM_LEMMAS LOG_PATH
 """
 
 from __future__ import annotations
@@ -18,8 +11,6 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
-import sys
-import time
 from collections import Counter
 from urllib.parse import quote
 
@@ -328,116 +319,18 @@ class AccessLog:
             out[wire_json(ts, v.lemmas[r], meta)] += m
         return out
 
-    def write_file(self, directory: str, k: int, n: int) -> tuple[Counter, Counter]:
-        lines, mix, kept = self.file_lines(k, n)
-        tmp = os.path.join(directory, f".{k:06d}.log.tmp")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write("\n".join(lines))
-            fh.write("\n")
-        os.replace(tmp, os.path.join(directory, f"{k:06d}.log"))
-        return mix, kept
+
+def write_lines(directory: str, k: int, lines: list[str]) -> None:
+    """File ``k`` of the watched directory, renamed into place whole so
+    the file source never lists it half-written."""
+    tmp = os.path.join(directory, f".{k:06d}.log.tmp")
+    with open(tmp, "w", encoding="utf-8") as fh:
+        fh.write("\n".join(lines))
+        fh.write("\n")
+    os.replace(tmp, os.path.join(directory, f"{k:06d}.log"))
 
 
 def file_second(ts: str) -> int:
     """File index of a published event, from its timestamp."""
     t = dt.datetime.strptime(ts, "%Y-%m-%dT%H:%M:%SZ").replace(tzinfo=dt.timezone.utc)
     return int((t - T0).total_seconds())
-
-
-# ------------------------------------------------------------- collector
-
-JSONL_MIX = {"event": 0.985, "malformed": 0.01, "long_lemma": 0.005}
-
-
-_T0_US = int(T0.timestamp()) * 1_000_000
-
-
-def fact_tail(lemma: str, meta: dict | None) -> tuple | None:
-    """Expected fact row of one enriched event, less its timestamp:
-    (lemma[#hidx], article_type, source, date), or None when the length
-    guard drops it."""
-    m = meta or {}
-    enc = f"{lemma}#{m['hidx']}" if m.get("hidx") is not None else lemma
-    if len(enc) >= 128:
-        return None
-    return (enc, m.get("article_type"), m.get("source"), m.get("date"))
-
-
-def jsonl_file(seed: int, k: int, n: int, dim: Dimension, vocab: Vocabulary,
-               cache: dict) -> tuple[list[str], Counter, Counter]:
-    """Enriched-event JSONL lines of file ``k`` with ~1% malformed lines
-    and ~0.5% lemmas of 120-140 characters; returns the lines, the mix
-    counts and the multiset of expected fact rows (ts µs, lemma[#hidx],
-    article_type, source, date). ``cache`` memoises per-lemma parts."""
-    rng = np.random.default_rng([seed, 4, k])
-    kind = rng.choice(3, n, p=list(JSONL_MIX.values()))
-    ranks = vocab.draw(rng, n)
-    secs = rng.integers(0, 3 * 86_400, n)
-    pad = rng.integers(120, 141, n)
-    stamps = np.datetime_as_string(
-        np.datetime64(T0.replace(tzinfo=None)) + secs.astype("timedelta64[s]"), unit="s").tolist()
-    mix = Counter(tuple(JSONL_MIX)[c] for c in kind)
-    kind, ranks, secs, pad = kind.tolist(), ranks.tolist(), secs.tolist(), pad.tolist()
-    lines = []
-    rows: Counter = Counter()
-    for j in range(n):
-        r = ranks[j]
-        ts = stamps[j] + "Z"
-        lemma = vocab.lemmas[r]
-        if kind[j] == 1:
-            lines.append((
-                '{"timestamp":"' + ts + '","lemma":"' + lemma,
-                '{"lemma":"' + lemma + '","source":"WDG"}',
-                '{"timestamp":"' + ts + '","hidx":2}',
-                "not json at all",
-                "",
-            )[j % 5])
-            continue
-        key = r if kind[j] == 0 else (r, pad[j])
-        if key not in cache:
-            meta = None if vocab.missing[r] else dim.meta(int(vocab.dim_index[r]))
-            if kind[j] == 2:
-                lemma = (lemma + "x" * 140)[: pad[j]]
-            # the wire record less its leading '{"timestamp":"…",'
-            body = wire_json("", lemma, meta)[len('{"timestamp":"",'):]
-            cache[key] = (body, fact_tail(lemma, meta))
-        body, tail = cache[key]
-        lines.append('{"timestamp":"' + ts + '",' + body)
-        if tail is not None:
-            rows[(_T0_US + secs[j] * 1_000_000,) + tail] += 1
-    return lines, mix, rows
-
-
-# ----------------------------------------------------- live-tail writer
-
-def live_writer(out_dir: str, seed: int, first: int, count: int,
-                start_epoch: float, interval: float, lines_per_file: int,
-                dim_n: int, log_path: str) -> None:
-    """Write file ``first + i`` at ``start_epoch + i * interval`` (open
-    loop: a late file does not shift later deadlines), logging each
-    file's due and actual write times."""
-    log = AccessLog(seed, dim_n)
-    staged = [log.file_lines(first + i, lines_per_file)[0] for i in range(count)]
-    records = []
-    for i, lines in enumerate(staged):
-        due = start_epoch + i * interval
-        delay = due - time.time()
-        if delay > 0:
-            time.sleep(delay)
-        k = first + i
-        tmp = os.path.join(out_dir, f".{k:06d}.log.tmp")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write("\n".join(lines))
-            fh.write("\n")
-        os.replace(tmp, os.path.join(out_dir, f"{k:06d}.log"))
-        records.append({"k": k, "due": due, "written": time.time()})
-    with open(log_path, "w") as fh:
-        json.dump(records, fh)
-
-
-if __name__ == "__main__":
-    if len(sys.argv) != 11 or sys.argv[1] != "live-writer":
-        sys.exit(__doc__)
-    a = sys.argv[2:]
-    live_writer(a[0], int(a[1]), int(a[2]), int(a[3]), float(a[4]),
-                float(a[5]), int(a[6]), int(a[7]), a[8])

@@ -2,26 +2,24 @@
 DimensionSnapshot + start_live_server + BroadcastHub +
 LivestreamHTTPServer.
 
-``live_tail``: an open-loop writer process adds access-log files on
-absolute deadlines while two SSE clients listen; latency runs from each
-file's due time to the publish call that delivers its events.
+``live_tail``: groups of access-log files are added to the watched
+directory in a closed loop while two SSE clients listen; the figure is
+the CPU the engine spends per 1,000 raw lines.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
-import sys
 import time
 from collections import Counter
 from datetime import datetime
 
 from common import (
-    SETUP_REPS, SSEClient, geomean, jvm_gc_ms, make_phase_listener,
+    CpuClock, SSEClient, jvm_gc_ms, make_phase_listener,
     peak_rss_mb, phase_stats, quantile,
 )
-from gen import AccessLog, Dimension, LINE_MIX, file_second
+from gen import LINE_MIX, AccessLog, Dimension, file_second, write_lines
 
 from dwds_livestream_spark.config import DEFAULT_CONFIG
 from dwds_livestream_spark.sinks.serving import LivestreamHTTPServer
@@ -31,10 +29,13 @@ from dwds_livestream_spark.sources.dimension import (
 from dwds_livestream_spark.streaming.hub import BroadcastHub
 from dwds_livestream_spark.streaming.pipeline import start_live_server
 
-TAIL_DIM = 1_000_000
-TAIL_RATE = 1_000  # raw lines/s: 10x the reference's ~100 req/s
-TAIL_FILES_PER_S = 4
-WARMUP_FILES = 4
+# a 100k-lemma dimension: the production-size 1M one costs ~20 s of cold
+# snapshot build per set-up, more than a run's share of the budget
+TAIL_DIM = 100_000
+# one group is one second of traffic at 10x the reference's ~100 req/s,
+# as 4 files of 250 lines
+LINES_PER_GROUP = 1_000
+FILES_PER_GROUP = 4
 
 
 class LiveRig:
@@ -98,13 +99,11 @@ class LiveRig:
         )
         return time.perf_counter() - t0
 
-    def stop(self, unpersist: bool = False) -> None:
+    def stop(self) -> None:
         if self.query is not None:
             self.query.stop()
         self.server.stop()
         self.snapshot.stop()
-        if unpersist:
-            self.snapshot.current().unpersist(blocking=True)
 
     def events(self) -> Counter:
         return Counter(line for _, _, lines in self.published for line in lines)
@@ -120,33 +119,30 @@ class LiveRig:
                 return
             time.sleep(0.05)
 
-    def wait_events(self, n: int, timeout: float) -> None:
+    def wait_events(self, n: int, timeout: float) -> bool:
+        """Until ``n`` events have been published; False on timeout or
+        when the query has failed."""
         deadline = time.time() + timeout
         while time.time() < deadline:
             if sum(len(x[2]) for x in self.published) >= n:
-                return
+                return True
             if self.query is not None and self.query.exception() is not None:
-                return
+                return False
             time.sleep(0.05)
+        return False
 
 
-def _setup(spark, tracer, dim_path: str, idle_dir: str, work: str, session_s: float):
-    """SETUP_REPS full set-ups (snapshot, server, query start on an idle
-    directory); all but the last are torn down. Returns the rig and the
-    set-up time: session start plus the median repetition."""
-    reps = []
-    for i in range(SETUP_REPS):
-        rig = LiveRig(spark, tracer, dim_path)
-        s = rig.build()
-        s += rig.start(idle_dir, os.path.join(work, f"ckpt-setup{i}"),
-                       {"processingTime": DEFAULT_CONFIG.trigger_interval})
-        reps.append(s)
-        if i < SETUP_REPS - 1:
-            rig.stop(unpersist=True)
+def _setup(spark, tracer, dim_path: str, idle_dir: str, work: str):
+    """Snapshot (load + argmin dedup + cache), HTTP server and a query
+    started on an idle directory, which is then stopped: the measured
+    query reads its own directory. Returns the rig and the wall seconds."""
+    rig = LiveRig(spark, tracer, dim_path)
+    s = rig.build()
+    s += rig.start(idle_dir, os.path.join(work, "ckpt-setup"),
+                   {"processingTime": DEFAULT_CONFIG.trigger_interval})
     rig.query.stop()
     rig.query = None
-    reps.sort()
-    return rig, session_s + reps[len(reps) // 2], reps
+    return rig, s
 
 
 def _check(rig: LiveRig, expected: Counter) -> tuple[int, dict]:
@@ -193,13 +189,32 @@ def live_tail(session, work: str, seed: int, seconds: int, tracer) -> dict:
     idle = os.path.join(work, "idle")
     os.makedirs(log_dir)
     os.makedirs(idle)
+    # the whole load, generated before the engine runs: ``groups`` groups
+    # of FILES_PER_GROUP files, the first of them the warm-up
+    groups = 1 + seconds
+    lpf = LINES_PER_GROUP // FILES_PER_GROUP
+    staged, expected, mix = [], Counter(), Counter()
+    events_by_group = [0] * groups
+    for k in range(groups * FILES_PER_GROUP):
+        lines, m, kept = log.file_lines(k, lpf)
+        staged.append(lines)
+        mix += m
+        events = log.expected_events(k, kept, dim)
+        expected += events
+        events_by_group[k // FILES_PER_GROUP] += sum(events.values())
     spark, session_s = session()
     listener = make_phase_listener() if tracer.enabled else None
     if listener:
         spark.streams.addListener(listener)
 
     tracer.mark("inputs")
-    rig, setup_s, reps = _setup(spark, tracer, dim_path, idle, work, session_s)
+    clock = CpuClock(spark)
+    py0 = time.process_time()
+    rig, setup_wall = _setup(spark, tracer, dim_path, idle, work)
+    jvm_ready, py_ready = clock.read()
+    # CPU to ready: the driver JVM from its start, plus this process in
+    # the set-up calls (input generation is the benchmark's, not set-up)
+    setup_s = jvm_ready + py_ready - py0
     tracer.mark("setup")
     gc0 = jvm_gc_ms(spark)
     rig.start(log_dir, os.path.join(work, "ckpt"),
@@ -208,40 +223,21 @@ def live_tail(session, work: str, seed: int, seconds: int, tracer) -> dict:
     for c in clients:
         c.start()
 
-    lpf = TAIL_RATE // TAIL_FILES_PER_S
-    n_files = TAIL_FILES_PER_S * seconds
-    expected: Counter = Counter()
-    mix: Counter = Counter()
-    # warm-up files: the first batches pay codegen; they are checked for
-    # correctness but are not in the latency window
-    for k in range(WARMUP_FILES):
-        m, kept = log.write_file(log_dir, k, lpf)
-        mix += m
-        expected += log.expected_events(k, kept, dim)
-    rig.wait_events(sum(expected.values()), 120)
-    tracer.mark("warmup")
-    for k in range(WARMUP_FILES, WARMUP_FILES + n_files):
-        m, kept = log.file_lines(k, lpf)[1:]
-        mix += m
-        expected += log.expected_events(k, kept, dim)
-
-    interval = 1.0 / TAIL_FILES_PER_S
-    start_epoch = time.time() + 1.0
-    writer_log = os.path.join(work, "writer.json")
-    writer = subprocess.Popen([
-        sys.executable, os.path.join(os.path.dirname(__file__), "gen.py"),
-        "live-writer", log_dir, str(seed), str(WARMUP_FILES), str(n_files),
-        repr(start_epoch), repr(interval), str(lpf), str(TAIL_DIM), writer_log,
-    ])
-    try:
-        writer.wait(timeout=seconds + 60)
-    finally:
-        if writer.poll() is None:
-            writer.kill()
-            writer.wait()
-    tracer.mark("window")
-    rig.wait_events(sum(expected.values()), 60)
-    rig.wait_progress(60)
+    # closed loop: a group is written once the previous one has been
+    # published and committed, so every group is one micro-batch however
+    # fast the host runs, and a run always does the same work
+    cpu0 = clock.read()
+    written: dict[int, float] = {}
+    n_expected = 0
+    for g in range(groups):
+        for k in range(g * FILES_PER_GROUP, (g + 1) * FILES_PER_GROUP):
+            write_lines(log_dir, k, staged[k])
+            written[k] = time.time()
+        n_expected += events_by_group[g]
+        if not rig.wait_events(n_expected, 60):
+            break  # lost events or a failed query: counted by the check
+        rig.wait_progress(60)
+    cpu1 = clock.read()
     tracer.mark("drained")
     progress = (listener.wait_for(str(rig.query.id), rig.query.lastProgress["batchId"])
                 if listener and rig.query.lastProgress else [])
@@ -253,12 +249,7 @@ def live_tail(session, work: str, seed: int, seconds: int, tracer) -> dict:
         spark.streams.removeListener(listener)
     tracer.mark("stopped")
 
-    with open(writer_log) as fh:
-        written = {r["k"]: r for r in json.load(fh)}
-    due = {k: start_epoch + (k - WARMUP_FILES) * interval for k in written}
-
     failed, check = _check(rig, expected)
-    lat = []
     pub_at: dict[str, float] = {}
     batch_files: dict[int, set] = {}
     file_batch: dict[int, int] = {}
@@ -268,10 +259,12 @@ def live_tail(session, work: str, seed: int, seconds: int, tracer) -> dict:
             k = file_second(json.loads(line)["timestamp"])
             batch_files.setdefault(bid, set()).add(k)
             file_batch[k] = bid
-            if k in due:
-                lat.append(t - due[k])
-    window_s = max(t for _, t, _ in rig.published) - start_epoch
-    measured = {file_batch[k] for k in written if k in file_batch}
+    batch_pub = {bid: t for bid, t, _ in rig.published}
+    # per group after the warm-up: its write -> the publish call of its batch
+    lat = [batch_pub[file_batch[k]] - written[k] for k in range(FILES_PER_GROUP, len(staged))
+           if k % FILES_PER_GROUP == 0 and k in file_batch]
+    measured = {file_batch[k] for k in written if k >= FILES_PER_GROUP and k in file_batch}
+    run_s = max(batch_pub.values()) - written[0]
 
     unthrottled, sampled = clients
     deliver = [t - pub_at[line] for t, line in unthrottled.received if line in pub_at]
@@ -285,26 +278,27 @@ def live_tail(session, work: str, seed: int, seconds: int, tracer) -> dict:
     failed += 0 if epm_ok else 1
     offered = sum(len(x[2]) for x in rig.published) * max(1, len(rig.subs))
 
-    e2e = {
-        "setup_s": setup_s,
-        "e2e_p50_s": quantile(lat, 0.5),
-        "e2e_p90_s": quantile(lat, 0.9),
-        "e2e_geomean_s": geomean(lat),
-        # window events per second from the first file's due time to the
-        # last publish: the offered survivor rate stretched by how far the
-        # path lags behind it at the end of the window
-        "items_per_s": len(lat) / window_s,
+    # CPU from the first write to the last commit, warm-up group included,
+    # per 1,000 raw lines
+    units = LINES_PER_GROUP * groups / 1000
+    jvm_s, py_s = (b - a for a, b in zip(cpu0, cpu1))
+    e2e = {"setup_s": setup_s, "cpu_ms_per_unit": 1000 * (jvm_s + py_s) / units}
+    wall = {
+        "setup_s": session_s + setup_wall,
+        "group_latency_p50_s": quantile(lat, 0.5),
+        "group_latency_max_s": max(lat, default=0.0),
+        "lines_per_s": LINES_PER_GROUP * groups / run_s,
     }
-    layers = _wire_layers(rig, lpf * (WARMUP_FILES + n_files))
+    layers = _wire_layers(rig, LINES_PER_GROUP * groups)
+    layers.update({"cpu.jvm_ms_per_unit": 1000 * jvm_s / units,
+                   "cpu.python_ms_per_unit": 1000 * py_s / units})
     batch_start = {p["batchId"]: p for p in progress}
     waits = []
-    for k, r in written.items():
+    for k, t_written in written.items():
         p = batch_start.get(file_batch.get(k))
-        if p:
+        if p and k >= FILES_PER_GROUP:
             t = datetime.fromisoformat(p["timestamp"].replace("Z", "+00:00")).timestamp()
-            waits.append(max(0.0, t + p["durationMs"].get("latestOffset", 0) / 1000 - r["written"]))
-    last_written = max(r["written"] for r in written.values())
-    batch_pub = {bid: t for bid, t, _ in rig.published}
+            waits.append(max(0.0, t + p["durationMs"].get("latestOffset", 0) / 1000 - t_written))
     progress = [p for p in progress if p["batchId"] in measured]
     layers.update(phase_stats(progress))
     layers.update({
@@ -312,26 +306,24 @@ def live_tail(session, work: str, seed: int, seconds: int, tracer) -> dict:
         "sources.discovery_wait_p90_s": quantile(waits, 0.9),
         "sources.files_per_batch_mean": (
             sum(len(batch_files[b]) for b in measured) / max(1, len(measured))),
-        "sources.backlog_files_end": float(sum(
-            1 for k in written if batch_pub.get(file_batch.get(k), 0) > last_written)),
         "streaming.compute_ms_p50": _compute_ms(rig, progress),
         # rows the snapshot loads and deduplicates (homographs included)
         "dimension.rows": float(dim.rows),
         "hub.conflated_ratio": sum(s.dropped for s in rig.subs) / max(1, offered),
         "serving.deliver_ms_p50": 1000 * quantile(deliver, 0.5),
         "serving.events_delivered": float(sum(len(c.received) for c in clients)),
-        "serving.epm_delivered_per_min": len(epm_times) * 60 / window_s,
+        "serving.epm_delivered_per_min": len(epm_times) * 60 / run_s,
         "session.gc_ms": float(gc_ms),
         "session.peak_rss_mb": peak_rss_mb(spark),
-        "gen.late_p99_s": quantile([r["written"] - r["due"] for r in written.values()], 0.99),
     })
     check.update({"epm45_max_per_min": epm_max, "epm45_ok": epm_ok,
-                  "batches_in_window": len(measured), "latency_samples": len(lat)})
+                  "groups": groups, "batches": len(rig.published)})
     return {
-        "e2e": e2e, "layers": layers, "attempted": lpf * (WARMUP_FILES + n_files),
-        "failed": failed, "check": check, "setup_reps_s": reps,
-        "load": {"offered_lines_per_s": TAIL_RATE, "files_per_s": TAIL_FILES_PER_S,
-                 "lines_per_file": lpf, "dimension_lemmas": TAIL_DIM,
+        "e2e": e2e, "wall": wall, "layers": layers,
+        "attempted": LINES_PER_GROUP * groups,
+        "failed": failed, "check": check,
+        "load": {"lines_per_group": LINES_PER_GROUP, "files_per_group": FILES_PER_GROUP,
+                 "groups": groups, "dimension_lemmas": TAIL_DIM,
                  "dimension_rows": dim.rows, "mix": _shares(mix)},
     }
 

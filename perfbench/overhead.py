@@ -1,7 +1,7 @@
 """Tracing overhead of one workload: runs run.py untraced and traced on
 the same seeds (alternating) and compares the medians of the figures a
-traced run reports about itself (``trace.e2e_p50_s``, ``trace.items_per_s``)
-with the untraced ones.
+traced run reports about itself (``trace.cpu_ms_per_unit``) with the
+untraced ones.
 
     python3 perfbench/overhead.py --workload live_tail --seeds 101 102 103
 """
@@ -41,12 +41,10 @@ def main() -> None:
         plain.append(run(args.workload, seed, args.seconds, 0))
         traced.append(run(args.workload, seed, args.seconds, 1))
     report = {"workload": args.workload, "seeds": args.seeds}
-    # overhead: how much slower the traced runs are (a share; < 0 = faster)
-    for name, slower in (("e2e_p50_s", lambda a, b: b / a - 1),
-                         ("items_per_s", lambda a, b: a / b - 1)):
-        a = statistics.median(m[name] for m in plain)
-        b = statistics.median(m[f"trace.{name}"] for m in traced)
-        report[name] = {"untraced": a, "traced": b, "overhead": slower(a, b)}
+    # overhead: how much more CPU the traced runs use (a share; < 0 = less)
+    a = statistics.median(m["cpu_ms_per_unit"] for m in plain)
+    b = statistics.median(m["trace.cpu_ms_per_unit"] for m in traced)
+    report["cpu_ms_per_unit"] = {"untraced": a, "traced": b, "overhead": b / a - 1}
     report["spans_per_run"] = statistics.median(m["trace.spans"] for m in traced)
     print(json.dumps(report))
 

@@ -2,7 +2,7 @@
 
     python3 perfbench/run.py --workload NAME --seed N --seconds S --trace 0|1
 
-Workloads: live_tail, collector_backlog, batch_queries
+Workloads: live_tail, batch_queries
 (see perfbench/README.md). Inputs are generated from --seed inside
 perfbench/.work/ and removed afterwards. The last stdout line is one JSON
 object: {"correct", "attempted", "failed", "metrics"}; with --trace 0 the
@@ -63,12 +63,10 @@ def main() -> int:
     sys.path.insert(0, ROOT)
 
     from batch import batch_queries
-    from collector import collector_backlog
     from common import Tracer, describe_session, start_session
     from live import live_tail
 
-    workloads = {"live_tail": live_tail, "collector_backlog": collector_backlog,
-                 "batch_queries": batch_queries}
+    workloads = {"live_tail": live_tail, "batch_queries": batch_queries}
     if args.workload not in workloads:
         print(f"perfbench: unknown workload {args.workload!r}; "
               f"choose from {sorted(workloads)}", file=sys.stderr)
@@ -104,8 +102,7 @@ def main() -> int:
         out["layers"]["trace.spans"] = float(len(tracer.spans))
         # the traced run's own end-to-end figures: comparing them with the
         # untraced runs' medians gives the tracing overhead
-        for k in ("e2e_p50_s", "items_per_s"):
-            out["layers"][f"trace.{k}"] = out["e2e"][k]
+        out["layers"]["trace.cpu_ms_per_unit"] = out["e2e"]["cpu_ms_per_unit"]
 
     unit_of = {m["name"]: m["unit"] for m in spec["end_to_end"] + spec["per_layer"]}
     names = [m["name"] for m in spec["per_layer" if tracer.enabled else "end_to_end"]]
@@ -114,7 +111,8 @@ def main() -> int:
     info.update({
         "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
         "trace": bool(args.trace), "load": out["load"], "check": out["check"],
-        "setup_reps_s": out["setup_reps_s"], "timeline_s": tracer.timeline,
+        "wall": out["wall"],
+        "timeline_s": tracer.timeline,
         "selection": "single run, every figure reported; no best-of-N, no retries",
     })
     print(json.dumps({"perfbench": info}))
