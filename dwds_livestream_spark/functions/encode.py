@@ -22,22 +22,24 @@ def encode_lemma_hidx(lemma: Column, hidx: Column) -> Column:
     return F.when(hidx.isNotNull(), F.concat_ws("#", lemma, hidx)).otherwise(lemma)
 
 
-def to_json_events(df: DataFrame) -> Column | DataFrame:
-    """P10 — enriched event rows -> JSON strings (server.clj:19-20).
+# ``to_json`` options of the wire format, shared by every encoder of
+# it (the batch path below, the live path's event half and the
+# dimension snapshot's metadata half) so both halves of a live event
+# come out of the same encoder. ``ignoreNullFields`` keeps parity with
+# Clojure's ``merge``: unknown lemmata serialize without the metadata
+# keys at all. The timestamp format matches ``java.time.Instant#toString``
+# (second resolution, ``Z`` suffix — access_log.clj:49-54).
+JSON_WIRE_OPTIONS = {
+    "ignoreNullFields": "true",
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ssXXX",
+}
 
-    ``ignoreNullFields`` keeps parity with Clojure's ``merge``: unknown
-    lemmata serialize without the metadata keys at all. The timestamp
-    format matches ``java.time.Instant#toString`` (second resolution,
-    ``Z`` suffix — access_log.clj:49-54).
-    """
+
+def to_json_events(df: DataFrame) -> Column | DataFrame:
+    """P10 — enriched event rows -> JSON strings (server.clj:19-20),
+    encoded with :data:`JSON_WIRE_OPTIONS`."""
     return df.select(
-        F.to_json(
-            F.struct(*df.columns),
-            {
-                "ignoreNullFields": "true",
-                "timestampFormat": "yyyy-MM-dd'T'HH:mm:ssXXX",
-            },
-        ).alias("value")
+        F.to_json(F.struct(*df.columns), JSON_WIRE_OPTIONS).alias("value")
     )
 
 

@@ -7,9 +7,13 @@ atomically every 12 h (src/dwds/livestream/wbdb.clj:39-49, 61-67).
 
 Spark-first shape: the dimension is small relative to the stream
 (≈1M lemmata ≪ events), so it is an explicit ``broadcast()`` build side
-— no shuffle of the (100 TB-scale) event side, and stream-static joins
-re-resolve the static plan each micro-batch, which is exactly the
-snapshot-swap semantic.
+— no shuffle of the (100 TB-scale) event side. This is the batch and
+replay form (``scripts/replay_log.py``, the ``events_enrich`` query).
+The live path does not join: it splices each micro-batch's event JSON
+with a lemma lookup built once per snapshot
+(``sources/dimension.py::dimension_lookup``), so no batch re-broadcasts
+the dimension; ``tests/test_streaming.py::test_live_pipeline_end_to_end``
+holds the two byte-identical.
 """
 
 from __future__ import annotations

@@ -4,8 +4,10 @@ read a raw Apache access log, run the full parse/filter/enrich
 pipeline as a *batch* job, print enriched events — EDN maps (the
 reference's literal output format) or JSON lines.
 
-The exact same transforms run in the streaming pipeline
-(streaming/pipeline.py) — operator batch/stream parity is structural.
+The same parse/filter transforms run in the streaming pipeline
+(streaming/pipeline.py); its enrichment is a per-snapshot lemma lookup
+instead of this job's broadcast join, and its JSON lines are tested
+byte-identical to this job's (tests/test_streaming.py).
 
 Usage:
   python scripts/replay_log.py ACCESS_LOG [DIMENSION_PARQUET]

@@ -6,9 +6,10 @@ at ``/api/events`` (SSE) and ``/api/jsonl``, with optional per-client
 ``?epm=N`` sampling.
 
 Composition of tested parts: streaming.pipeline.start_live_server
-(parse -> broadcast-left-join enrich -> JSON wire, dimension snapshot
-re-resolved every micro-batch) + streaming.hub.BroadcastHub (per-client
-drop-oldest conflation) + sinks.serving.LivestreamHTTPServer.
+(parse -> JSON wire -> enrich by a lemma lookup that
+sources.dimension.DimensionSnapshot builds once per snapshot and swaps
+on refresh) + streaming.hub.BroadcastHub (per-client drop-oldest
+conflation) + sinks.serving.LivestreamHTTPServer.
 
 Usage:
   python scripts/serve.py LOG_DIR DIMENSION_PARQUET \

@@ -4,6 +4,9 @@ P8/F6 sink encoding — homograph semantics per SURVEY.md §7 risk list."""
 from __future__ import annotations
 
 import datetime as dt
+import json
+
+import pytest
 
 from pyspark.sql import Row
 
@@ -113,18 +116,24 @@ def test_dimension_snapshot_swap(spark):
     versions = [
         spark.createDataFrame([("obskur", "WDG")], "lemma string, source string"),
         spark.createDataFrame([("obskur", "DWDS")], "lemma string, source string"),
+        # not deduped: fails validation, so the swap never happens
+        spark.createDataFrame([("obskur", "A"), ("obskur", "B")],
+                              "lemma string, source string"),
     ]
     calls = {"n": 0}
 
     def loader():
-        df = versions[min(calls["n"], 1)]
+        df = versions[min(calls["n"], 2)]
         calls["n"] += 1
         return df
 
     snap = DimensionSnapshot(loader)
-    assert snap.current().first().source == "WDG"
+    assert json.loads(snap.current()["obskur"])["source"] == "WDG"
     snap.refresh()
-    assert snap.current().first().source == "DWDS"
+    assert json.loads(snap.current()["obskur"])["source"] == "DWDS"
+    with pytest.raises(ValueError, match="duplicate"):
+        snap.refresh()
+    assert json.loads(snap.current()["obskur"])["source"] == "DWDS"
     snap.stop()
 
 

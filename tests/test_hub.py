@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import Row
 
 from dwds_livestream_spark.schemas import DIMENSION
+from dwds_livestream_spark.sources.dimension import dimension_lookup
 from dwds_livestream_spark.streaming.hub import BroadcastHub
 from dwds_livestream_spark.streaming.pipeline import start_live_server
 
@@ -62,6 +63,7 @@ def test_hub_behind_live_pipeline(spark, tmp_path):
              article_type="Vollartikel", status="x", source="WDG", date=None)],
         DIMENSION,
     ).drop("status")
+    lookup = dimension_lookup(dim)
 
     hub = BroadcastHub()
     all_sub = hub.subscribe("all", buffer_size=10_000)
@@ -69,7 +71,7 @@ def test_hub_behind_live_pipeline(spark, tmp_path):
 
     q = start_live_server(
         spark, str(logdir),
-        dimension_loader=lambda: dim,
+        dimension_loader=lambda: lookup,
         checkpoint=str(tmp_path / "ckpt"),
         publish=hub.publish,
         trigger={"availableNow": True},
@@ -100,11 +102,12 @@ def test_publish_rows_capped_per_batch(spark, tmp_path):
              article_type="Vollartikel", status="x", source="WDG", date=None)],
         DIMENSION,
     ).drop("status")
+    lookup = dimension_lookup(dim)
 
     published: list[list[str]] = []
     q = start_live_server(
         spark, str(logdir),
-        dimension_loader=lambda: dim,
+        dimension_loader=lambda: lookup,
         checkpoint=str(tmp_path / "ckpt"),
         publish=lambda rows, bid: published.append(rows),
         trigger={"availableNow": True},

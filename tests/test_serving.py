@@ -104,6 +104,7 @@ def test_full_live_topology_pipeline_to_http_client(spark, tmp_path):
     from pyspark.sql import Row
 
     from dwds_livestream_spark.schemas import DIMENSION
+    from dwds_livestream_spark.sources.dimension import dimension_lookup
     from dwds_livestream_spark.streaming.pipeline import start_live_server
 
     logdir = tmp_path / "logs"
@@ -119,6 +120,7 @@ def test_full_live_topology_pipeline_to_http_client(spark, tmp_path):
              article_type="Vollartikel", status="x", source="WDG", date=None)],
         DIMENSION,
     ).drop("status")
+    lookup = dimension_lookup(dim)
 
     hub = BroadcastHub()
     server = LivestreamHTTPServer(hub).start()
@@ -129,7 +131,7 @@ def test_full_live_topology_pipeline_to_http_client(spark, tmp_path):
     q = start_live_server(
         spark,
         str(logdir),
-        lambda: dim,
+        lambda: lookup,
         checkpoint=str(tmp_path / "ckpt"),
         publish=hub.publish,
         trigger={"availableNow": True},
@@ -137,7 +139,7 @@ def test_full_live_topology_pipeline_to_http_client(spark, tmp_path):
     try:
         got = json.loads(resp.fp.readline())
         assert got["lemma"].startswith("w")
-        if got["lemma"] == "w1":  # enriched via the broadcast join
+        if got["lemma"] == "w1":  # enriched via the lemma lookup
             assert got["source"] == "WDG"
     finally:
         q.awaitTermination(60)

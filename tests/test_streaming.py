@@ -16,9 +16,11 @@ from pyspark.sql import functions as F
 from dwds_livestream_spark.functions.access_log import access_log_to_events
 from dwds_livestream_spark.operators.enrich import enrich
 from dwds_livestream_spark.functions.encode import to_json_events
+from dwds_livestream_spark.operators.dedup_dim import dedup_dimension
 from dwds_livestream_spark.schemas import DIMENSION, ENRICHED_EVENT
 from dwds_livestream_spark.sinks.fact_sink import parquet_writer, start_fact_sink
 from dwds_livestream_spark.sinks.sampling import sample_epm
+from dwds_livestream_spark.sources.dimension import dimension_lookup
 from dwds_livestream_spark.streaming.metrics import ThroughputListener
 from dwds_livestream_spark.streaming.pipeline import collector_stream, start_live_server
 
@@ -34,45 +36,157 @@ def log_line(lemma: str, sec: int) -> str:
 
 @pytest.fixture()
 def dim(spark):
-    return spark.createDataFrame(
+    """Deduped dimension covering every shape of the wire: a date, a
+    homograph with ``hidx`` (two rows, argmin keeps hidx 1), all-null
+    metadata, lemmas and values that need JSON escaping, umlauts."""
+    return dedup_dimension(spark.createDataFrame(
         [
             Row(lemma="obskur", hidx=None, lemma_type="AR_G", form_type="Hauptform",
                 article_type="Vollartikel", status="Red-f", source="WDG",
                 date=dt.date(1974, 1, 1)),
+            Row(lemma="Band", hidx=2, lemma_type="AR_G", form_type="Hauptform",
+                article_type="Vollartikel", status="Red-f", source="DWDS",
+                date=dt.date(2001, 5, 3)),
+            Row(lemma="Band", hidx=1, lemma_type="AR_G", form_type="Hauptform",
+                article_type="Basisartikel", status="Red-f", source="WDG",
+                date=None),
+            Row(lemma="leer", hidx=None, lemma_type=None, form_type=None,
+                article_type=None, status=None, source=None, date=None),
+            Row(lemma='Zitat"x', hidx=None, lemma_type="AR_B", form_type=None,
+                article_type='Voll"artikel', status=None, source="WDG", date=None),
+            Row(lemma="back\\slash", hidx=None, lemma_type="AR_B", form_type=None,
+                article_type=None, status=None, source="a\\b", date=None),
+            Row(lemma="zwei\nZeilen", hidx=None, lemma_type="AR_B", form_type=None,
+                article_type=None, status=None, source="x\ny", date=None),
+            Row(lemma="Müßiggänger", hidx=None, lemma_type="AR_G",
+                form_type="Hauptform", article_type="Minimalartikel",
+                status=None, source="DWDS", date=dt.date(2020, 2, 29)),
         ],
         DIMENSION,
-    ).drop("status")
+    ).drop("status"))
+
+
+# URL path -> decoded lemma: a miss, a date, a homograph, all-null
+# metadata, and the lemmas that need JSON escaping (", \, newline, umlauts)
+PARITY_PATHS = ["obskur", "unknown", "Band", "leer", "Zitat%22x", "back%5Cslash",
+                "zwei%0AZeilen", "M%C3%BC%C3%9Figg%C3%A4nger"]
+
+
+def _run_live(spark, logdir, ckpt, lookup, epm=None) -> list[str]:
+    published: list[str] = []
+    q = start_live_server(
+        spark,
+        str(logdir),
+        dimension_loader=lambda: lookup,
+        checkpoint=str(ckpt),
+        publish=lambda lines, bid: published.extend(lines),
+        trigger={"availableNow": True},
+        epm=epm,
+    )
+    q.awaitTermination(60)
+    return published
 
 
 def test_live_pipeline_end_to_end(spark, tmp_path, dim):
     logdir = tmp_path / "logs"
     logdir.mkdir()
     (logdir / "a.log").write_text(
-        "\n".join([log_line("obskur", 1), log_line("unknown", 2)])
+        "\n".join(log_line(p, i) for i, p in enumerate(PARITY_PATHS))
     )
-    published: list[str] = []
+    lookup = dimension_lookup(dim)
+    published = _run_live(spark, logdir, tmp_path / "ckpt", lookup)
+    events = sorted(json.loads(x)["lemma"] for x in published)
+    assert events == sorted(["obskur", "unknown", "Band", "leer", 'Zitat"x',
+                             "back\\slash", "zwei\nZeilen", "Müßiggänger"])
+    enriched = {json.loads(x)["lemma"]: json.loads(x) for x in published}
+    assert enriched["obskur"]["source"] == "WDG"
+    assert enriched["obskur"]["date"] == "1974-01-01"
+    assert enriched["Band"]["hidx"] == 1
+    assert "source" not in enriched["unknown"]  # merge semantics
+    assert set(enriched["leer"]) == {"timestamp", "lemma"}
+
+    # batch/stream parity (reference log->edn, server.clj:37-48): the
+    # batch path's broadcast join over read.text produces the same wire
+    # lines, byte for byte, as the live path's lookup splice
+    events_df = access_log_to_events(spark.read.text(str(logdir)))
+    batch = to_json_events(enrich(events_df, dim))
+    assert sorted(r.value for r in batch.collect()) == sorted(published)
+
+    # the same with engine-side epm sampling: 3 newest of the minute
+    sampled = _run_live(spark, logdir, tmp_path / "ckpt_epm", lookup, epm=3)
+    batch = to_json_events(sample_epm(enrich(events_df, dim), 3))
+    assert len(sampled) == 3
+    assert sorted(r.value for r in batch.collect()) == sorted(sampled)
+
+
+def test_dimension_refresh_mid_stream(spark, tmp_path, monkeypatch):
+    """W2 on a running query (wbdb.clj:39-49): batches before a refresh
+    carry the old metadata and batches after it the new; a failed
+    refresh keeps the old snapshot serving and the query running; the
+    loader and the lookup build run once per refresh, not per batch."""
+    from dwds_livestream_spark.sources import dimension as dimension_mod
+    from dwds_livestream_spark.sources.dimension import DimensionSnapshot
+
+    calls = {"loader": 0, "lookup": 0}
+    serving = {"source": "WDG"}
+
+    def loader():
+        calls["loader"] += 1
+        if serving["source"] is None:
+            raise RuntimeError("dimension store unreachable")
+        return spark.createDataFrame(
+            [("obskur", serving["source"])], "lemma string, source string"
+        )
+
+    def counting_lookup(df):
+        calls["lookup"] += 1
+        return dimension_lookup(df)
+
+    monkeypatch.setattr(dimension_mod, "dimension_lookup", counting_lookup)
+    snap = DimensionSnapshot(loader)
+    logdir = tmp_path / "logs"
+    staging = tmp_path / "staging"
+    logdir.mkdir()
+    staging.mkdir()
+    published: list[tuple[int, str]] = []
+
+    def feed(sec: int) -> dict:
+        """Adds one file with one event; returns that event once published."""
+        (staging / f"{sec}.log").write_text(log_line("obskur", sec))
+        (staging / f"{sec}.log").rename(logdir / f"{sec}.log")
+        deadline = time.time() + 60
+        while time.time() < deadline:
+            for _, line in list(published):
+                ev = json.loads(line)
+                if ev["timestamp"].endswith(f":{sec:02d}Z"):
+                    return ev
+            time.sleep(0.1)
+        raise AssertionError(f"event of second {sec} not published")
 
     q = start_live_server(
         spark,
         str(logdir),
-        dimension_loader=lambda: dim,
+        snap.current,
         checkpoint=str(tmp_path / "ckpt"),
-        publish=lambda lines, bid: published.extend(lines),
-        trigger={"availableNow": True},
+        publish=lambda lines, bid: published.extend((bid, x) for x in lines),
+        trigger={"processingTime": "200 milliseconds"},
     )
-    q.awaitTermination(60)
-    events = sorted(json.loads(x)["lemma"] for x in published)
-    assert events == ["obskur", "unknown"]
-    enriched = {json.loads(x)["lemma"]: json.loads(x) for x in published}
-    assert enriched["obskur"]["source"] == "WDG"
-    assert "source" not in enriched["unknown"]  # merge semantics
-
-    # batch/stream parity (reference log->edn, server.clj:37-48): the
-    # same transforms over read.text produce the same wire lines
-    batch = to_json_events(
-        enrich(access_log_to_events(spark.read.text(str(logdir))), dim)
-    )
-    assert sorted(r.value for r in batch.collect()) == sorted(published)
+    try:
+        assert feed(1)["source"] == "WDG"
+        serving["source"] = None
+        with pytest.raises(RuntimeError):
+            snap.refresh()
+        assert feed(2)["source"] == "WDG"
+        assert q.isActive and q.exception() is None
+        serving["source"] = "DWDS"
+        snap.refresh()
+        assert feed(3)["source"] == "DWDS"
+        assert len({bid for bid, _ in published}) == 3
+        # initial build + failed refresh + good refresh; two lookups built
+        assert calls == {"loader": 3, "lookup": 2}
+    finally:
+        q.stop()
+        snap.stop()
 
 
 def test_collector_exactly_once_restart(spark, tmp_path):
@@ -149,10 +263,11 @@ def test_throughput_listener(spark, tmp_path, dim):
     listener = ThroughputListener()
     spark.streams.addListener(listener)
     try:
+        lookup = dimension_lookup(dim)
         q = start_live_server(
             spark,
             str(logdir),
-            dimension_loader=lambda: dim,
+            dimension_loader=lambda: lookup,
             checkpoint=str(tmp_path / "ckpt"),
             publish=lambda lines, bid: None,
             trigger={"availableNow": True},
