@@ -18,7 +18,8 @@ Layout
 - ``functions``  scalar/columnar transforms (parse, filters, encode, text)
 - ``operators``  relational ops (enrich join, argmin dedup, dedup family,
                  similarity search, analytics, multimodal plumbing)
-- ``sources``    batch + streaming sources (access log dir, JSONL, dimension)
+- ``sources``    batch + streaming sources (live access-log file or dir,
+                 JSONL dir or HTTP long-poll, dimension)
 - ``sinks``      foreachBatch JDBC-style sink, JSONL/SSE framing, sampling
 - ``streaming``  end-to-end streaming pipelines + metrics listener
 - ``plans``      the query library exposed through __spark_entry__.py

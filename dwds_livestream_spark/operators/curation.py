@@ -1502,10 +1502,10 @@ def psi_drift(
     Distributed shape: the :func:`_ks_quantize` whole-frame grid
     (1-row min/max broadcast) bounds the value domain; then the
     shared :func:`_paired_value_counts` assembly (one histogram
-    fold, broadcast calendar pair frame, union grid) densified to
-    the full bin range by a (pair × bins) sequence explode —
-    calendar × bins sized, never corpus-sized; PSI is one
-    (group, pair)-keyed fold. Output: <group_col>, <period_col>,
+    fold, broadcast calendar pair frame, union grid) keeps only the
+    observed bins; PSI is one (group, pair)-keyed fold over them
+    plus the closed-form empty-bin mass ``(bins − n_present) ×
+    term₀``, so nothing is densified to the full bin range. Output: <group_col>, <period_col>,
     next_<period_col>, n_prev, n_next, psi (6dp).
     """
     if bins < 1:
@@ -1535,9 +1535,10 @@ def _psi_from_paired(
     densifying to the full 1..bins grid (an explode + a grid join,
     r12's shape), the fold sums the present bins and adds
     ``(bins − n_present) × term₀`` once. The term values are
-    bit-identical to the densified form; only the IEEE summation
-    ORDER changes, which sits inside the same ~ulp class the 6dp
-    round already absorbs (the module's documented
+    bit-identical to the densified form; one multiplication replaces
+    the repeated additions, which keeps the sum within the same ~ulp
+    class as a summation reorder — the class the 6dp round already
+    absorbs (the module's documented
     embedding_covariance determinism class, swept per-round and
     hash-certified against the unchanged densifying oracle at
     sf0.01/sf0.1). Totals ride a whole-partition window on the

@@ -30,8 +30,6 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .spread import pinned
-
 __all__ = [
     "embedding_covariance",
     "quantile_normalize",

@@ -338,7 +338,8 @@ _ALL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 # record `no_oracle` when they rotate in — documented in PARITY.md
 # ("Expected no-oracle entries"), not a failure. Non-window queries
 # keep their oracles and the local replica gate
-# (scripts/check_oracle.py + tests/test_output_type_canon.py).
+# (scripts/check_oracle.py; tests/test_output_type_canon.py runs only
+# in the slow/release tier, not the default pytest run).
 DRIVER_WINDOW: list[str] = [
     # ---- round-13 window (scripts/next_window.py; ROADMAP r13;
     # changed-plan override per the standing cadence policy) ----

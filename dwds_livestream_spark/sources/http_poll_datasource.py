@@ -1,8 +1,7 @@
-"""S2 as a FIRST-CLASS Spark source: the HTTP long-poll JSONL client
-as a Spark 4 Python Data Source —
-``spark.readStream.format("http_poll").option("url", ...)`` — the V2
-twin of the spool-directory shim (sources/http_poll.py), which remains
-for Spark-3 compatibility.
+"""S2: the HTTP long-poll JSONL client as a Spark 4 Python Data Source —
+``spark.readStream.format("http_poll").option("url", ...)``. It is what
+``collector_stream`` reads when it is given the live server's
+``/api/jsonl`` URL.
 
 Reference parity (collector.clj:39-74): connect, read lines forever,
 reconnect on IOException with exponential backoff (3 s base doubling
@@ -26,7 +25,8 @@ replay window). So:
   releases and the next reader to call ``read()`` takes over —
   reconnect backoff semantics included;
 - ``read`` advances to the spool's last complete newline (partial
-  lines held back), ``readBetweenOffsets`` is a plain byte-range read.
+  lines held back, ``line_frames.frontier``), ``readBetweenOffsets`` is
+  a plain byte-range read.
 """
 
 from __future__ import annotations
@@ -38,9 +38,11 @@ import os
 import tempfile
 import threading
 import urllib.request
-from collections.abc import Iterator
+from collections.abc import Iterator, Mapping
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+
+from .line_frames import frontier, read_lines
 
 
 def _default_spool(url: str) -> str:
@@ -49,7 +51,7 @@ def _default_spool(url: str) -> str:
 
 
 class HttpPollSimpleReader(SimpleDataSourceStreamReader):
-    def __init__(self, options: dict):
+    def __init__(self, options: Mapping[str, str]):
         self.url = options["url"]
         self.spool_dir = options.get("spoolDir") or _default_spool(self.url)
         self.base_backoff_s = float(options.get("baseBackoffS", 3.0))
@@ -93,67 +95,45 @@ class HttpPollSimpleReader(SimpleDataSourceStreamReader):
     def _run(self) -> None:
         backoff = self.base_backoff_s
         while not self._stop.is_set():
-            try:
-                with urllib.request.urlopen(
-                    self.url, timeout=self.connect_timeout_s
-                ) as resp, open(self.spool_path, "ab") as out:
-                    for raw in resp:
-                        line = raw.rstrip(b"\r\n")
-                        if not line:
-                            continue
-                        out.write(line + b"\n")
-                        out.flush()
-                        backoff = self.base_backoff_s  # success resets
-                        if self._stop.is_set():
-                            return
-            except (OSError, http.client.HTTPException):
-                # HTTPException (e.g. IncompleteRead on a dropped
-                # chunked stream) is NOT an OSError — letting it
-                # escape would kill the puller thread while this
-                # instance still holds the flock, stalling the source
-                # forever (same hazard the Spark-3 shim guards,
-                # asserted in tests/test_http_poll.py)
-                pass
+            if self._drain():
+                # reset once lines were read — even if the connection
+                # then died (collector.clj reset-on-read parity)
+                backoff = self.base_backoff_s
             if self._stop.is_set():
                 return
             self.reconnects += 1
             self._stop.wait(backoff)
             backoff = min(backoff * 2, self.max_backoff_s)
 
-    # --------------------------------------------------- spool access
-    def _frontier(self, lo: int) -> int:
-        """Last complete-newline position ≥ lo (partial line held
-        back)."""
+    def _drain(self) -> bool:
+        """Append one connection's lines to the spool until EOF or
+        error; True if it delivered at least one line. Never raises on
+        a dead connection: an ``HTTPException`` (IncompleteRead on a
+        dropped chunked stream) is NOT an ``OSError``, and letting it
+        escape would kill the puller while this instance still holds
+        the flock, stalling the source forever."""
+        got_any = False
         try:
-            size = os.stat(self.spool_path).st_size
-        except FileNotFoundError:
-            return lo
-        if size <= lo:
-            return lo
-        with open(self.spool_path, "rb") as fh:
-            fh.seek(lo)
-            buf = fh.read(size - lo)
-        cut = buf.rfind(b"\n")
-        return lo if cut < 0 else lo + cut + 1
+            with urllib.request.urlopen(
+                self.url, timeout=self.connect_timeout_s
+            ) as resp, open(self.spool_path, "ab") as out:
+                for raw in resp:
+                    line = raw.rstrip(b"\r\n")
+                    if line:
+                        out.write(line + b"\n")
+                        out.flush()
+                        got_any = True
+                    if self._stop.is_set():
+                        break
+        except (OSError, http.client.HTTPException):
+            pass
+        return got_any
 
-    def _lines(self, lo: int, hi: int) -> list[tuple]:
-        if hi <= lo:
-            return []
-        try:
-            with open(self.spool_path, "rb") as fh:
-                fh.seek(lo)
-                buf = fh.read(hi - lo)
-        except FileNotFoundError:
-            return []
-        cut = buf.rfind(b"\n")
-        if cut < 0:
-            return []
-        # split strictly on \n — splitlines() would fragment a JSONL
-        # record on embedded \v, \f, \x1c-\x1e bytes inside strings
-        return [
-            (ln.decode("utf-8", errors="replace"),)
-            for ln in buf[:cut].split(b"\n")
-        ]
+    # --------------------------------------------------- spool access
+    def _lines(self, lo: int, hi: int) -> Iterator[tuple]:
+        # a list iterator, not a generator: Spark caches and copies what
+        # read() returns
+        return iter([(ln,) for ln in read_lines(self.spool_path, lo, hi)])
 
     # --------------------------------------------------- Spark contract
     def initialOffset(self) -> dict:
@@ -162,11 +142,15 @@ class HttpPollSimpleReader(SimpleDataSourceStreamReader):
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         self._ensure_puller()
         lo = start["offset"]
-        hi = self._frontier(lo)
-        return iter(self._lines(lo, hi)), {"offset": hi}
+        try:
+            size = os.stat(self.spool_path).st_size
+        except FileNotFoundError:
+            size = lo
+        hi = frontier(self.spool_path, lo, size)
+        return self._lines(lo, hi), {"offset": hi}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        return iter(self._lines(start["offset"], end["offset"]))
+        return self._lines(start["offset"], end["offset"])
 
     def commit(self, end: dict) -> None:
         # the spool is the replay log; production would roll the file
@@ -190,4 +174,6 @@ class HttpPollDataSource(DataSource):
         return "value string"
 
     def simpleStreamReader(self, schema) -> HttpPollSimpleReader:
-        return HttpPollSimpleReader(dict(self.options))
+        # the case-insensitive options as given: dict() would keep only
+        # the lowercased keys and lose spoolDir and the backoff knobs
+        return HttpPollSimpleReader(self.options)

@@ -1,41 +1,44 @@
-"""S1 as a FIRST-CLASS Spark source: a Python Data Source (Spark 4
-DataSource V2 API) that tails a single appended-to file —
-``spark.readStream.format("tail").option("path", ...)`` — instead of
-the spool-directory shim (sources/tail.py), which remains for Spark-3
-compatibility.
+"""S1: a Spark 4 Python Data Source that tails a single appended-to
+file — ``spark.readStream.format("tail").option("path", ...)``. It is
+what ``stream_access_log`` reads when it is given the live
+``access.log`` itself rather than a log-shipping directory.
 
 Reference parity (access_log.clj:101-125, commons-io Tailer): poll the
 file each micro-batch, emit newly appended COMPLETE lines, reopen from
 the start on rotation/truncation, optionally skip pre-existing content
-on attach (``fromEnd``, the Tailer's end=true).
+on attach (``fromEnd``, the Tailer's end=true; default true).
 
 Offset model: {"epoch": E, "offset": B} — B is a byte offset into the
 current incarnation of the file; E increments when rotation is
 detected (inode change or shrink below the committed offset), so every
 (epoch, offset) range identifies bytes unambiguously and Spark's
 checkpoint restores mid-file. ``latestOffset`` advances only to the
-last complete newline, so a partially-written line is never split
-across batches (same hold-back rule as the shim).
+last complete newline (``line_frames.frontier``), so a
+partially-written line is never split across batches.
+
+Rotation gap: the reader never re-opens the old incarnation. Lines
+appended to it after the last poll and before the rename are lost —
+the reference's Tailer drains the old handle first and keeps them.
+Lines lost to an unseen rotation BETWEEN poll and read yield a
+truncated batch, never an error.
 
 Executor access: ``read`` re-opens the path on the executor — correct
 for local[] and for any shared mount (NFS/EBS/hostPath), which is the
-deployment shape a single live access.log implies anyway. Lines lost
-to an unseen rotation BETWEEN poll and read yield a truncated batch,
-never an error (at-least-once on rotation races, exactly-once
-otherwise — strictly stronger than the reference's Tailer, which can
-silently drop on fast double-rotation).
+deployment shape a single live access.log implies anyway.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from collections.abc import Iterator, Mapping
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     InputPartition,
 )
+
+from .line_frames import frontier, read_lines
 
 
 class TailPartition(InputPartition):
@@ -47,7 +50,7 @@ class TailPartition(InputPartition):
 
 
 class TailStreamReader(DataSourceStreamReader):
-    def __init__(self, options: dict):
+    def __init__(self, options: Mapping[str, str]):
         self.path = options["path"]
         self.encoding = options.get("encoding", "utf-8")
         from_end = str(options.get("fromEnd", "true")).lower() == "true"
@@ -58,32 +61,11 @@ class TailStreamReader(DataSourceStreamReader):
             st = os.stat(self.path)
             self._ino = st.st_ino
             if from_end:
-                init = self._last_newline_end(0, st.st_size)
+                init = frontier(self.path, 0, st.st_size)
         except FileNotFoundError:
             pass
         self._init = {"epoch": 0, "offset": init}
         self._last = dict(self._init)
-
-    def _last_newline_end(self, lo: int, hi: int) -> int:
-        """Largest position in (lo, hi] just past a '\\n' — the
-        complete-line frontier; lo if no newline arrived yet. Scans
-        BACKWARD from hi in bounded chunks, so the driver never holds
-        the whole appended range (or, on a fromEnd attach, the whole
-        multi-GB file) in memory just to find the frontier."""
-        if hi <= lo:
-            return lo
-        chunk = 1 << 16
-        with open(self.path, "rb") as fh:
-            pos = hi
-            while pos > lo:
-                step = min(chunk, pos - lo)
-                fh.seek(pos - step)
-                buf = fh.read(step)
-                cut = buf.rfind(b"\n")
-                if cut >= 0:
-                    return pos - step + cut + 1
-                pos -= step
-        return lo
 
     def initialOffset(self) -> dict:
         return dict(self._init)
@@ -100,14 +82,12 @@ class TailStreamReader(DataSourceStreamReader):
             self._epoch += 1
             self._last = {
                 "epoch": self._epoch,
-                "offset": self._last_newline_end(0, st.st_size),
+                "offset": frontier(self.path, 0, st.st_size),
             }
         else:
             self._last = {
                 "epoch": self._epoch,
-                "offset": self._last_newline_end(
-                    self._last["offset"], st.st_size
-                ),
+                "offset": frontier(self.path, self._last["offset"], st.st_size),
             }
         self._ino = st.st_ino
         return dict(self._last)
@@ -146,23 +126,10 @@ class TailStreamReader(DataSourceStreamReader):
         return [TailPartition(self.path, lo, end["offset"], self.encoding)]
 
     def read(self, partition: TailPartition) -> Iterator[tuple]:
-        if partition.end <= partition.start:
-            return
-        try:
-            with open(partition.path, "rb") as fh:
-                fh.seek(partition.start)
-                buf = fh.read(partition.end - partition.start)
-        except FileNotFoundError:
-            return
-        # drop a trailing partial line if the file rotated under us
-        cut = buf.rfind(b"\n")
-        if cut < 0:
-            return
-        # split strictly on \n (same framing rule as sources/tail.py):
-        # splitlines() would fragment a log line on embedded \v, \f,
-        # \x1c-\x1e bytes and desync rows from the \n-aligned offsets
-        for line in buf[:cut].split(b"\n"):
-            yield (line.decode(partition.encoding, errors="replace"),)
+        for line in read_lines(
+            partition.path, partition.start, partition.end, partition.encoding
+        ):
+            yield (line,)
 
     def commit(self, end: dict) -> None:
         pass
@@ -181,4 +148,6 @@ class TailDataSource(DataSource):
         return "value string"
 
     def streamReader(self, schema) -> TailStreamReader:
-        return TailStreamReader(dict(self.options))
+        # the case-insensitive options as given: dict() would keep only
+        # the lowercased keys and lose fromEnd
+        return TailStreamReader(self.options)

@@ -18,12 +18,13 @@ from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions.access_log import access_log_to_events
 from ..functions.encode import JSON_WIRE_OPTIONS, from_json_events
 from ..sinks.sampling import sample_epm
-from ..sources.access_log_source import stream_access_log
+from ..sources.access_log_source import MAX_FILES_PER_TRIGGER, stream_access_log
+from ..sources.http_poll_datasource import HttpPollDataSource
 
 
 def start_live_server(
     spark: SparkSession,
-    log_dir: str,
+    log_path: str,
     dimension_loader: Callable[[], Mapping[str, str]],
     checkpoint: str,
     publish: Callable[[list[str], int], None],
@@ -33,7 +34,9 @@ def start_live_server(
 ) -> StreamingQuery:
     """Live fan-out (K1-K3): every micro-batch's JSON lines are handed
     to ``publish(lines, batch_id)`` — the broadcast hub (SSE/JSONL
-    serving, Kafka producer, …).
+    serving, Kafka producer, …). ``log_path`` is the live access log
+    (tailed from its end) or a log-shipping directory; see
+    :func:`~..sources.access_log_source.stream_access_log`.
 
     Enrichment is the reference's per-event hash-map lookup
     (server.clj:12-14): ``dimension_loader`` returns a
@@ -58,7 +61,7 @@ def start_live_server(
     (the hub's own drop-oldest conflation applies downstream); the cap
     is generous relative to any sane epm.
     """
-    lines = stream_access_log(spark, log_dir, config)
+    lines = stream_access_log(spark, log_path)
     events = access_log_to_events(lines)
     max_publish_rows = config.max_publish_rows
 
@@ -108,14 +111,31 @@ def start_live_server(
 def collector_stream(
     spark: SparkSession,
     jsonl_dir: str,
-    config: EngineConfig = DEFAULT_CONFIG,
+    http_url: str | None = None,
 ) -> DataFrame:
     """§3.2 — S2 ingestion: JSONL event lines -> typed enriched events
-    (P11 + P9 casts). The reference's HTTP long-poll source becomes a
-    log-shipping directory (or Kafka topic) of JSONL files."""
-    raw = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", 16)
-        .load(jsonl_dir)
-    )
+    (P11 + P9 casts).
+
+    With ``http_url`` the reference's live transport is read: the
+    ``http_poll`` source long-polls the server's JSONL endpoint
+    (reconnect with 3->60 s backoff, collector.clj:39-74) and spools
+    the received lines into ``jsonl_dir``, whose byte offsets the
+    checkpoint records. The puller connects on the first micro-batch,
+    so an ``availableNow`` run over a fresh spool reads nothing.
+    Without it ``jsonl_dir`` is a log-shipping directory of JSONL
+    files."""
+    if http_url:
+        spark.dataSource.register(HttpPollDataSource)
+        raw = (
+            spark.readStream.format("http_poll")
+            .option("url", http_url)
+            .option("spoolDir", jsonl_dir)
+            .load()
+        )
+    else:
+        raw = (
+            spark.readStream.format("text")
+            .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
+            .load(jsonl_dir)
+        )
     return from_json_events(raw, observe=True)

@@ -1,6 +1,7 @@
 """Collector entry point — the reference's ``collector/start!`` CLI
 (reference: src/dwds/livestream/collector.clj:133-140, SURVEY.md §3.2):
-ingest JSONL event lines from a log-shipping directory, apply the
+ingest JSONL event lines from a log-shipping directory or the live
+server's long-poll endpoint, apply the
 collector transforms (from_json -> lemma#hidx encode -> type casts ->
 length guard), and persist to a date-partitioned parquet fact table
 with exactly-once micro-batches (checkpointed; Structured Streaming
@@ -15,10 +16,11 @@ Usage:
       [--jdbc-url URL --jdbc-table T] [--once] [--trigger "1 second"] \
       [--http-url http://host/api/jsonl]
 
-With --http-url the reference's live long-poll transport is bridged in:
-an HttpLinePoller sidecar (sources/http_poll.py; reconnect with 3->60 s
-backoff, collector.clj:39-74 parity) spools received lines into
-JSONL_DIR, and the stream consumes them as usual.
+With --http-url the stream reads the reference's live long-poll
+transport (the http_poll source, sources/http_poll_datasource.py;
+reconnect with 3->60 s backoff, collector.clj:39-74 parity), spooling
+received lines into JSONL_DIR. The endpoint is connected on the first
+micro-batch, so --once over a fresh spool commits nothing.
 """
 
 from __future__ import annotations
@@ -28,7 +30,8 @@ import os
 import sys
 import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from dwds_livestream_spark.session import build_session  # noqa: E402
 from dwds_livestream_spark.sinks.fact_sink import (  # noqa: E402
@@ -41,7 +44,8 @@ from dwds_livestream_spark.streaming.pipeline import collector_stream  # noqa: E
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("jsonl_dir", help="directory of JSONL event files to watch")
+    ap.add_argument("jsonl_dir", help="directory of JSONL event files to "
+                                      "watch (with --http-url: the spool)")
     ap.add_argument("out", help="parquet fact-table path")
     ap.add_argument("--jdbc-url", default=None, help="optional JDBC sink URL")
     ap.add_argument("--jdbc-table", default="wb_page_request")
@@ -55,15 +59,13 @@ def main() -> None:
                     help="long-poll JSONL endpoint to spool into jsonl_dir")
     args = ap.parse_args()
 
+    # the http_poll source's reader runs in Python workers, which
+    # import the package
+    os.environ["PYTHONPATH"] = REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
     spark = build_session(app_name="dwds-livestream-collect")
     spark.sparkContext.setLogLevel("WARN")
 
-    poller = None
-    if args.http_url:
-        from dwds_livestream_spark.sources.http_poll import HttpLinePoller
-        poller = HttpLinePoller(args.http_url, args.jsonl_dir).start()
-
-    enriched = collector_stream(spark, args.jsonl_dir)
+    enriched = collector_stream(spark, args.jsonl_dir, args.http_url)
     if args.jdbc_url:
         writer = jdbc_writer(
             args.jdbc_url,
@@ -79,11 +81,7 @@ def main() -> None:
     query = start_fact_sink(enriched, writer, checkpoint, trigger=trigger)
     print(f"collecting {args.jsonl_dir} -> "
           f"{args.jdbc_url or args.out}; checkpoint={checkpoint}", flush=True)
-    try:
-        query.awaitTermination()
-    finally:
-        if poller is not None:
-            poller.stop()
+    query.awaitTermination()
 
 
 if __name__ == "__main__":

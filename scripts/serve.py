@@ -1,6 +1,7 @@
 """Live-server entry point — the reference's ``server/start!`` CLI
 (reference: src/dwds/livestream/server.clj:25-35, SURVEY.md §3.1):
-watch an access-log directory, run the streaming parse/filter/enrich
+tail the live access.log (from its end, reopening on rotation) or watch
+a log-shipping directory, run the streaming parse/filter/enrich
 pipeline, and serve the enriched JSON event stream to HTTP subscribers
 at ``/api/events`` (SSE) and ``/api/jsonl``, with optional per-client
 ``?epm=N`` sampling.
@@ -12,7 +13,7 @@ on refresh) + streaming.hub.BroadcastHub (per-client drop-oldest
 conflation) + sinks.serving.LivestreamHTTPServer.
 
 Usage:
-  python scripts/serve.py LOG_DIR DIMENSION_PARQUET \
+  python scripts/serve.py ACCESS_LOG_OR_DIR DIMENSION_PARQUET \
       [--port 8080] [--refresh-hours 12] [--trigger "1 second"]
 """
 
@@ -24,7 +25,8 @@ import signal
 import sys
 import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from dwds_livestream_spark.session import build_session  # noqa: E402
 from dwds_livestream_spark.sinks.serving import LivestreamHTTPServer  # noqa: E402
@@ -38,7 +40,8 @@ from dwds_livestream_spark.streaming.pipeline import start_live_server  # noqa: 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("log_dir", help="directory of access-log files to watch")
+    ap.add_argument("log", help="live access.log to tail, or a directory "
+                                "of access-log files to watch")
     ap.add_argument("dimension", help="dimension parquet (lemma metadata)")
     ap.add_argument("--port", type=int, default=8080)
     ap.add_argument("--host", default="127.0.0.1")
@@ -50,19 +53,13 @@ def main() -> None:
     )
     ap.add_argument("--trigger", default="1 second")
     ap.add_argument("--checkpoint", default=None)
-    ap.add_argument("--tail-file", default=None,
-                    help="tail ONE live access.log (reference Tailer "
-                         "parity, 1 s poll, rotation reopen) into "
-                         "log_dir via sources/tail.FileTailShim")
     args = ap.parse_args()
 
+    # the tail source's reader runs in Python workers, which import the
+    # package
+    os.environ["PYTHONPATH"] = REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
     spark = build_session(app_name="dwds-livestream-serve")
     spark.sparkContext.setLogLevel("WARN")
-
-    tail = None
-    if args.tail_file:
-        from dwds_livestream_spark.sources.tail import FileTailShim
-        tail = FileTailShim(args.tail_file, args.log_dir).start()
 
     snapshot = DimensionSnapshot(
         lambda: load_dimension_parquet(spark, args.dimension),
@@ -75,7 +72,7 @@ def main() -> None:
     checkpoint = args.checkpoint or tempfile.mkdtemp(prefix="dwds-serve-ckpt-")
     query = start_live_server(
         spark,
-        args.log_dir,
+        args.log,
         snapshot.current,
         checkpoint=checkpoint,
         publish=hub.publish,
@@ -88,8 +85,6 @@ def main() -> None:
     )
 
     def shutdown(*_):
-        if tail is not None:
-            tail.stop()
         query.stop()
         server.stop()
         snapshot.stop()

@@ -1,18 +1,16 @@
-"""HTTP long-poll shim e2e (VERDICT r1 #5 / S2 transport parity):
-replay HTTP server (reference dev/user.clj:28-33 shape) → shim →
-collector_stream → parquet; the stream survives a mid-stream
-disconnect via reconnect-with-backoff."""
+"""HTTP long-poll transport end to end (sources/http_poll_datasource.py):
+the puller spools every line, in arrival order, across a mid-stream
+disconnect, and ``collector_stream(http_url=...)`` turns the replayed
+JSONL endpoint (reference dev/user.clj:28-33 shape) into fact rows."""
 
 from __future__ import annotations
 
 import json
-import threading
 import time
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-import pytest
-
-from dwds_livestream_spark.sources.http_poll import HttpLinePoller
+from dwds_livestream_spark.sources.http_poll_datasource import (
+    HttpPollSimpleReader,
+)
 
 
 def _event(lemma, hidx=None):
@@ -34,165 +32,56 @@ FIRST_HALF = [_event(f"wort{i}") for i in range(10)]
 SECOND_HALF = [_event(f"wort{i}") for i in range(10, 20)] + [_event("Band", 1)]
 
 
-class _ReplayHandler(BaseHTTPRequestHandler):
-    """1st connection: first half then abrupt close (disconnect).
-    2nd connection: second half. Later connections: hang until shutdown
-    (long-poll idle)."""
-
-    served = 0
-    lock = threading.Lock()
-    stopping: threading.Event
-
-    def log_message(self, *a):
-        pass
-
-    def do_GET(self):  # noqa: N802
-        cls = type(self)  # the per-fixture subclass, not the base
-        with cls.lock:
-            cls.served += 1
-            turn = cls.served
-        self.send_response(200)
-        self.send_header("Content-Type", "text/jsonl")
-        self.send_header("Connection", "close")
-        self.end_headers()
-        if turn == 1:
-            payload = FIRST_HALF
-        elif turn == 2:
-            payload = SECOND_HALF
-        else:
-            while not self.stopping.wait(0.05):
-                pass
-            return
-        for line in payload:
-            self.wfile.write(line.encode() + b"\n")
-            self.wfile.flush()
-        # abrupt close (no clean shutdown) = the mid-stream IOException
-
-
-@pytest.fixture()
-def replay_server():
-    stopping = threading.Event()
-    handler = type("H", (_ReplayHandler,), {"stopping": stopping, "served": 0})
-    httpd = ThreadingHTTPServer(("127.0.0.1", 0), handler)
-    httpd.daemon_threads = True
-    t = threading.Thread(target=httpd.serve_forever, daemon=True)
-    t.start()
-    try:
-        yield f"http://127.0.0.1:{httpd.server_address[1]}/api/jsonl", handler
-    finally:
-        stopping.set()
-        httpd.shutdown()
-
-
-def test_poller_survives_disconnect_and_spools_all(tmp_path, replay_server):
-    url, handler = replay_server
-    spool = tmp_path / "spool"
-    poller = HttpLinePoller(
-        url,
-        str(spool),
-        flush_lines=4,
-        flush_interval_s=0.05,
-        base_backoff_s=0.05,  # fast test backoff; prod default 3 s
-        max_backoff_s=0.2,
-    ).start()
-    deadline = time.monotonic() + 20
-    want = len(FIRST_HALF) + len(SECOND_HALF)
-    while poller.lines_spooled < want and time.monotonic() < deadline:
+def _wait_spooled(spool, want, timeout=60):
+    """The spool file's lines once it holds ``want`` of them."""
+    deadline = time.monotonic() + timeout
+    while time.monotonic() < deadline:
+        if spool.exists() and spool.read_bytes().count(b"\n") >= want:
+            break
         time.sleep(0.05)
-    poller.stop()
-    assert poller.lines_spooled == want
-    assert poller.reconnects >= 1  # it did die and come back
-    got = []
-    for f in sorted(spool.glob("*.jsonl")):
-        got.extend(f.read_text().splitlines())
-    assert got == FIRST_HALF + SECOND_HALF  # arrival order preserved
-    assert not list(spool.glob(".*.tmp"))  # no partials left behind
+    return spool.read_text().splitlines()
 
 
-def test_poller_backoff_doubles_and_caps(tmp_path):
-    sleeps: list[float] = []
-    poller = HttpLinePoller(
-        "http://127.0.0.1:1/nothing-listens-here",  # connection refused
-        str(tmp_path / "spool"),
-        base_backoff_s=3.0,
-        max_backoff_s=60.0,
-        sleep=sleeps.append,
+def test_poller_survives_disconnect_and_spools_all(tmp_path, replay_http):
+    r = HttpPollSimpleReader(
+        {
+            "url": replay_http(FIRST_HALF, SECOND_HALF),
+            "spoolDir": str(tmp_path / "spool"),
+            "baseBackoffS": "0.05",  # fast test backoff; default 3 s
+            "maxBackoffS": "0.2",
+        }
     )
-    t = threading.Thread(target=poller.run_forever, daemon=True)
-    t.start()
-    deadline = time.monotonic() + 10
-    while len(sleeps) < 7 and time.monotonic() < deadline:
-        time.sleep(0.01)
-    poller.stop()
-    # reference collector.clj:48-53: 3 s base, doubling, 60 s cap
-    assert sleeps[:6] == [3.0, 6.0, 12.0, 24.0, 48.0, 60.0]
-    assert all(s == 60.0 for s in sleeps[5:])
+    try:
+        r.read({"offset": 0})  # the first read elects this reader puller
+        got = _wait_spooled(tmp_path / "spool" / "spool.ndjson", 21)
+    finally:
+        r.stop()
+    assert got == FIRST_HALF + SECOND_HALF  # arrival order preserved
+    assert r.reconnects >= 1  # it did die and come back
 
 
-def test_shim_feeds_collector_stream_e2e(spark, tmp_path, replay_server):
+def test_shim_feeds_collector_stream_e2e(spark, tmp_path, replay_http):
     from dwds_livestream_spark.sinks.fact_sink import (
         parquet_writer,
         start_fact_sink,
     )
     from dwds_livestream_spark.streaming.pipeline import collector_stream
 
-    url, handler = replay_server
     spool = tmp_path / "spool"
-    poller = HttpLinePoller(
-        url, str(spool), flush_interval_s=0.05,
-        base_backoff_s=0.05, max_backoff_s=0.2,
-    ).start()
-    want = len(FIRST_HALF) + len(SECOND_HALF)
-    deadline = time.monotonic() + 20
-    while poller.lines_spooled < want and time.monotonic() < deadline:
-        time.sleep(0.05)
-    poller.stop()
-
     out = str(tmp_path / "fact")
     q = start_fact_sink(
-        collector_stream(spark, str(spool)),
+        collector_stream(
+            spark, str(spool), http_url=replay_http(FIRST_HALF, SECOND_HALF)
+        ),
         parquet_writer(out),
         checkpoint=str(tmp_path / "ckpt"),
-        trigger={"availableNow": True},
+        trigger={"processingTime": "200 milliseconds"},
     )
-    q.awaitTermination(60)
+    try:
+        # the reconnect after the disconnect waits the 3 s default backoff
+        _wait_spooled(spool / "spool.ndjson", 21)
+        q.processAllAvailable()
+    finally:
+        q.stop()
     lemmas = sorted(r.lemma for r in spark.read.parquet(out).collect())
     assert lemmas == sorted([f"wort{i}" for i in range(20)] + ["Band#1"])
-
-
-def test_backoff_resets_after_productive_but_dying_connection(tmp_path):
-    """A connection that delivered lines and THEN died must reset the
-    backoff (collector.clj reset-on-read parity) — not escalate."""
-    sleeps: list[float] = []
-    poller = HttpLinePoller(
-        "http://unused", str(tmp_path / "s"),
-        base_backoff_s=3.0, max_backoff_s=60.0, sleep=sleeps.append,
-    )
-    outcomes = iter([False, False, True, False, False, False])
-
-    def fake_drain():
-        try:
-            return next(outcomes)
-        except StopIteration:
-            poller._stop.set()
-            return False
-
-    poller._drain_one_connection = fake_drain
-    poller.run_forever()
-    # 3, 6 (two failures), reset to 3 after the productive dying
-    # connection, then the fresh failures escalate 6, 12 again
-    assert sleeps == [3.0, 6.0, 3.0, 6.0, 12.0, 24.0]
-
-
-def test_drain_swallows_http_framing_errors(tmp_path, monkeypatch):
-    """IncompleteRead (HTTPException, not OSError) must not kill the
-    poller thread — it ends the attempt and returns normally."""
-    import http.client
-    import urllib.request
-
-    def boom(url, timeout):
-        raise http.client.IncompleteRead(b"partial")
-
-    monkeypatch.setattr(urllib.request, "urlopen", boom)
-    poller = HttpLinePoller("http://unused", str(tmp_path / "s"))
-    assert poller._drain_one_connection() is False  # no raise

@@ -1,12 +1,14 @@
 """HTTP long-poll Python Data Source (sources/http_poll_datasource.py):
 lines arrive through a mid-stream disconnect; offsets are durable
-spool byte offsets; only one instance pulls."""
+spool byte offsets; only one instance pulls; the reconnect backoff
+doubles, caps and resets after a productive connection."""
 
 from __future__ import annotations
 
-import threading
+import contextlib
+import http.client
 import time
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+import urllib.request
 
 import pytest
 
@@ -20,42 +22,8 @@ SECOND = [f"beta-{i}" for i in range(5)]
 
 
 @pytest.fixture()
-def replay_server():
-    stopping = threading.Event()
-
-    class Handler(BaseHTTPRequestHandler):
-        served = 0
-        lock = threading.Lock()
-
-        def log_message(self, *a):
-            pass
-
-        def do_GET(self):  # noqa: N802
-            cls = type(self)
-            with cls.lock:
-                cls.served += 1
-                turn = cls.served
-            self.send_response(200)
-            self.send_header("Content-Type", "text/jsonl")
-            self.send_header("Connection", "close")
-            self.end_headers()
-            payload = FIRST if turn == 1 else SECOND if turn == 2 else None
-            if payload is None:
-                while not stopping.wait(0.05):
-                    pass
-                return
-            for line in payload:
-                self.wfile.write(line.encode() + b"\n")
-                self.wfile.flush()
-            # abrupt close = mid-stream IOException on the client
-
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    yield f"http://127.0.0.1:{srv.server_port}/api/jsonl"
-    stopping.set()
-    srv.shutdown()
-    srv.server_close()
+def replay_server(replay_http):
+    return replay_http(FIRST, SECOND)
 
 
 def test_stream_survives_disconnect(spark, replay_server, tmp_path):
@@ -82,6 +50,9 @@ def test_stream_survives_disconnect(spark, replay_server, tmp_path):
         vals = [r["value"] for r in spark.table("http_out").collect()]
         # both halves arrived, across the abrupt disconnect, in order
         assert vals == FIRST + SECOND
+        # camelCase options set on the stream reach the reader
+        spool = tmp_path / "spool" / "spool.ndjson"
+        assert spool.read_text().splitlines() == FIRST + SECOND
     finally:
         q.stop()
 
@@ -126,3 +97,69 @@ def test_second_instance_does_not_pull(replay_server, tmp_path):
     finally:
         a.stop()
         b.stop()
+
+
+class _StopAfter:
+    """Stands in for the puller's stop event: records each backoff wait
+    and reports stopped after ``n`` of them."""
+
+    def __init__(self, n):
+        self.n, self.waits = n, []
+
+    def is_set(self):
+        return len(self.waits) >= self.n
+
+    def wait(self, seconds):
+        self.waits.append(seconds)
+
+
+def _backoff_waits(tmp_path, monkeypatch, connections):
+    """Run the puller loop over scripted connections — an exception
+    raised on connect, or lines delivered before the connection dies
+    with IncompleteRead — and return its backoff waits (default 3 s
+    base, 60 s cap)."""
+    script = iter(connections)
+
+    def urlopen(url, timeout):
+        conn = next(script)
+        if isinstance(conn, Exception):
+            raise conn
+
+        def body():
+            yield from conn
+            raise http.client.IncompleteRead(b"")
+
+        return contextlib.nullcontext(body())
+
+    monkeypatch.setattr(urllib.request, "urlopen", urlopen)
+    r = HttpPollSimpleReader({"url": "http://unused", "spoolDir": str(tmp_path)})
+    r._stop = _StopAfter(len(connections))
+    r._run()
+    return r._stop.waits
+
+
+def test_puller_backoff_doubles_and_caps(tmp_path, monkeypatch):
+    refused = [ConnectionRefusedError()] * 7
+    # reference collector.clj:48-53: 3 s base, doubling, 60 s cap
+    assert _backoff_waits(tmp_path, monkeypatch, refused) == [
+        3.0, 6.0, 12.0, 24.0, 48.0, 60.0, 60.0,
+    ]
+
+
+def test_puller_backoff_resets_after_productive_dying_connection(
+    tmp_path, monkeypatch
+):
+    conns = [OSError(), OSError(), [b"x\n"], OSError(), OSError(), OSError()]
+    # two failures escalate, the connection that delivered a line and
+    # then died resets to the base, fresh failures escalate again
+    assert _backoff_waits(tmp_path, monkeypatch, conns) == [
+        3.0, 6.0, 3.0, 6.0, 12.0, 24.0,
+    ]
+    assert (tmp_path / "spool.ndjson").read_bytes() == b"x\n"
+
+
+def test_puller_survives_http_framing_errors(tmp_path, monkeypatch):
+    """IncompleteRead is an HTTPException, not an OSError: it ends the
+    attempt and the puller backs off instead of dying."""
+    torn = [http.client.IncompleteRead(b"partial")] * 3
+    assert _backoff_waits(tmp_path, monkeypatch, torn) == [3.0, 6.0, 12.0]

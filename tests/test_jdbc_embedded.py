@@ -208,7 +208,7 @@ def test_reference_collector_integration_shape(spark, derby_url, tmp_path):
     """The reference's ONE integration test (collector_test.clj:19-45:
     live JSONL endpoint -> collector :limit 25 -> Postgres ->
     COUNT(*) >= 25), re-expressed with this engine's parts: replay
-    HTTP server -> HttpLinePoller shim -> collector_stream ->
+    HTTP server -> collector_stream over the http_poll source ->
     jdbc_writer into embedded Derby -> count assertion. Same contract,
     stronger check (exact count, not just >=)."""
     import threading
@@ -219,7 +219,6 @@ def test_reference_collector_integration_shape(spark, derby_url, tmp_path):
         jdbc_writer,
         start_fact_sink,
     )
-    from dwds_livestream_spark.sources.http_poll import HttpLinePoller
     from dwds_livestream_spark.streaming.pipeline import collector_stream
 
     limit = 25
@@ -254,21 +253,24 @@ def test_reference_collector_integration_shape(spark, derby_url, tmp_path):
     try:
         url = f"http://127.0.0.1:{httpd.server_address[1]}/api/jsonl"
         spool = tmp_path / "spool"
-        poller = HttpLinePoller(
-            url, str(spool), flush_interval_s=0.05, base_backoff_s=0.05,
-        ).start()
-        deadline = _time.monotonic() + 20
-        while poller.lines_spooled < limit and _time.monotonic() < deadline:
-            _time.sleep(0.05)
-        poller.stop()
-
+        # the puller connects on the first micro-batch, so this runs on a
+        # processing-time trigger (availableNow would see an empty spool)
         q = start_fact_sink(
-            collector_stream(spark, str(spool)),
+            collector_stream(spark, str(spool), http_url=url),
             jdbc_writer(derby_url, "collector_it"),
             checkpoint=str(tmp_path / "ckpt"),
-            trigger={"availableNow": True},
+            trigger={"processingTime": "200 milliseconds"},
         )
-        q.awaitTermination(120)
+        ndjson = spool / "spool.ndjson"
+        try:
+            deadline = _time.monotonic() + 60
+            while _time.monotonic() < deadline and (
+                not ndjson.exists() or ndjson.read_bytes().count(b"\n") < limit
+            ):
+                _time.sleep(0.1)
+            q.processAllAvailable()
+        finally:
+            q.stop()
         got = _query_one(spark, derby_url, "SELECT COUNT(*) FROM collector_it")
         assert got == limit  # reference asserts >=; exact is stronger
     finally:

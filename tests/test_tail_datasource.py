@@ -1,5 +1,6 @@
 """Python Data Source tail stream (sources/tail_datasource.py):
-append pickup, complete-line holdback, rotation reopen, fromEnd."""
+append pickup, complete-line holdback, rotation reopen, fromEnd,
+restart offsets and strict newline framing."""
 
 from __future__ import annotations
 
@@ -74,6 +75,25 @@ def test_stream_picks_up_appends_and_rotation(registered, tmp_path):
         }
     finally:
         q.stop()
+
+
+def test_stream_from_start_replays_existing_lines(registered, tmp_path):
+    log = tmp_path / "access.log"
+    log.write_text("one\ntwo\nthree\n")
+    q = (
+        registered.readStream.format("tail")
+        .option("path", str(log))
+        .option("fromEnd", "false")
+        .load()
+        .writeStream.format("memory")
+        .queryName("tail_from_start")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(60)
+    vals = sorted(r["value"] for r in registered.table("tail_from_start").collect())
+    assert vals == ["one", "three", "two"]
 
 
 def test_reader_offsets_hold_back_partial_lines(tmp_path):
