@@ -4,11 +4,16 @@ Reference: while folding the JDBC result set, keep per ``lemma`` the
 record with the minimum ``hidx``, treating nil as 0
 (first-homograph, src/dwds/livestream/wbdb.clj:20-28).
 
-Spark-first shape: ``min_by(struct(*cols), coalesce(hidx, 0))`` inside a
-single hash aggregate — one shuffle on the group key with map-side
-partial aggregation, no window/sort. At 100 TB-dimension scale this is
-the cheapest exact formulation (a Window + row_number would sort every
-partition).
+Spark-first shape: ``min_by(struct(*cols), coalesce(hidx, 0))`` in one
+``groupBy(lemma)``. The physical plan is not a hash aggregate:
+``min_by``'s buffer holds structs, which are not HashAggregate-eligible
+(its buffer must be fixed-width mutable fields), so Spark plans
+Sort -> SortAggregate(partial) -> Exchange hashpartitioning(lemma) ->
+Sort -> SortAggregate. It is still one shuffle on the group key, with
+map-side partial aggregation shrinking what crosses it, and it is exact
+for any payload. This is the batch form (the ``argmin_dedup`` query,
+``scripts/replay_log.py``); the live lookup folds the raw rows to the
+same choice on the driver (``sources/dimension.py::dimension_lookup``).
 """
 
 from __future__ import annotations

@@ -73,14 +73,15 @@ def start_live_server(
             F.to_json(F.struct(*batch.columns), JSON_WIRE_OPTIONS).alias("value"),
             "lemma",
         )
-        # The cap's cost, measured on Spark 4.1: the limit's generated
-        # counter (``_limit_counter_N``) is numbered from a global
-        # counter, so every batch compiles 2 new whole-stage classes,
-        # and ``executeTake`` runs one extra job per batch. Rejected
-        # alternatives: ``coalesce(1).limit()`` makes the parse one task
-        # (a 160k-line backlog batch went from 3.4-4.0 s to 5.5-6.4 s
-        # wall); ``tail()`` still runs 3 jobs; ``toLocalIterator()``
-        # runs one job per partition.
+        # The cap's cost, measured on Spark 4.1: none that shows. The
+        # Janino compile count (CodegenMetrics) stays flat after the
+        # first batch over 24 batches, so the limit's generated code is
+        # compiled once, not per batch; ``limit().collect()`` and a plain
+        # ``collect()`` take the same per-batch time within noise.
+        # Rejected alternatives: ``coalesce(1).limit()`` makes the parse
+        # one task (a 160k-line backlog batch went from 3.4-4.0 s to
+        # 5.5-6.4 s wall); ``tail()`` runs 3 jobs; ``toLocalIterator()``
+        # runs one job per partition and took about 2x the time.
         rows = wire.limit(max_publish_rows + 1).collect()
         if len(rows) > max_publish_rows:
             import logging  # noqa: PLC0415

@@ -4,10 +4,12 @@ read a raw Apache access log, run the full parse/filter/enrich
 pipeline as a *batch* job, print enriched events — EDN maps (the
 reference's literal output format) or JSON lines.
 
-The same parse/filter transforms run in the streaming pipeline
+The dimension loader returns the raw ``lemma ⋈ article`` rows; this job
+applies the argmin dedup (operators/dedup_dim.py) before its broadcast
+join. The same parse/filter transforms run in the streaming pipeline
 (streaming/pipeline.py); its enrichment is a per-snapshot lemma lookup
-instead of this job's broadcast join, and its JSON lines are tested
-byte-identical to this job's (tests/test_streaming.py).
+that folds the raw rows to the same argmin on the driver, and its JSON
+lines are tested byte-identical to this job's (tests/test_streaming.py).
 
 Usage:
   python scripts/replay_log.py ACCESS_LOG [DIMENSION_PARQUET]
@@ -27,6 +29,7 @@ from dwds_livestream_spark.functions.encode import (  # noqa: E402
     to_edn_events,
     to_json_events,
 )
+from dwds_livestream_spark.operators.dedup_dim import dedup_dimension  # noqa: E402
 from dwds_livestream_spark.operators.enrich import enrich  # noqa: E402
 from dwds_livestream_spark.session import build_session  # noqa: E402
 from dwds_livestream_spark.sources.dimension import load_dimension_parquet  # noqa: E402
@@ -45,7 +48,8 @@ def main() -> None:
 
     events = access_log_to_events(spark.read.text(args.access_log))
     if args.dimension:
-        events = enrich(events, load_dimension_parquet(spark, args.dimension))
+        dim = dedup_dimension(load_dimension_parquet(spark, args.dimension))
+        events = enrich(events, dim)
     if args.limit:
         events = events.limit(args.limit)
     encode = to_edn_events if args.format == "edn" else to_json_events

@@ -8,9 +8,11 @@ at ``/api/events`` (SSE) and ``/api/jsonl``, with optional per-client
 
 Composition of tested parts: streaming.pipeline.start_live_server
 (parse -> JSON wire -> enrich by a lemma lookup that
-sources.dimension.DimensionSnapshot builds once per snapshot and swaps
-on refresh) + streaming.hub.BroadcastHub (per-client drop-oldest
+sources.dimension.DimensionSnapshot folds from the raw dimension rows
+once per snapshot and swaps on refresh) + streaming.hub.BroadcastHub (per-client drop-oldest
 conflation) + sinks.serving.LivestreamHTTPServer.
+
+SIGINT/SIGTERM stop the query, the HTTP server and the session, exit 0.
 
 Usage:
   python scripts/serve.py ACCESS_LOG_OR_DIR DIMENSION_PARQUET \
@@ -24,6 +26,7 @@ import os
 import signal
 import sys
 import tempfile
+import threading
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -84,16 +87,20 @@ def main() -> None:
         flush=True,
     )
 
-    def shutdown(*_):
+    # The handler only flags the stop: it runs on the main thread, which
+    # may be inside a py4j call (awaitTermination), and a py4j call from
+    # the handler would be a reentrant one.
+    stopping = threading.Event()
+    signal.signal(signal.SIGINT, lambda *_: stopping.set())
+    signal.signal(signal.SIGTERM, lambda *_: stopping.set())
+    try:
+        while not stopping.is_set() and not query.awaitTermination(1):
+            pass
+    finally:
         query.stop()
         server.stop()
         snapshot.stop()
         spark.stop()
-        sys.exit(0)
-
-    signal.signal(signal.SIGINT, shutdown)
-    signal.signal(signal.SIGTERM, shutdown)
-    query.awaitTermination()
 
 
 if __name__ == "__main__":

@@ -9,6 +9,7 @@ import json
 import pytest
 
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from dwds_livestream_spark.functions.encode import (
     events_to_sink_rows,
@@ -110,31 +111,151 @@ def test_json_roundtrip(spark):
 
 def test_dimension_snapshot_swap(spark):
     """W2 — refresh swaps atomically; consumers see old until refresh
-    completes, new after (wbdb.clj:39-49 atom-swap semantics)."""
+    completes, new after (wbdb.clj:39-49 atom-swap semantics). The
+    loader hands over raw rows: the lookup folds duplicates to the
+    argmin, and a failed load keeps the old snapshot serving."""
     from dwds_livestream_spark.sources.dimension import DimensionSnapshot
 
     versions = [
-        spark.createDataFrame([("obskur", "WDG")], "lemma string, source string"),
-        spark.createDataFrame([("obskur", "DWDS")], "lemma string, source string"),
-        # not deduped: fails validation, so the swap never happens
-        spark.createDataFrame([("obskur", "A"), ("obskur", "B")],
-                              "lemma string, source string"),
+        spark.createDataFrame([("obskur", None, "WDG")],
+                              "lemma string, hidx int, source string"),
+        # not deduped: the fold keeps the least hidx
+        spark.createDataFrame([("obskur", 2, "A"), ("obskur", 1, "DWDS")],
+                              "lemma string, hidx int, source string"),
     ]
     calls = {"n": 0}
 
     def loader():
-        df = versions[min(calls["n"], 2)]
         calls["n"] += 1
-        return df
+        if calls["n"] > len(versions):
+            raise RuntimeError("dimension store unreachable")
+        return versions[calls["n"] - 1]
 
     snap = DimensionSnapshot(loader)
     assert json.loads(snap.current()["obskur"])["source"] == "WDG"
     snap.refresh()
-    assert json.loads(snap.current()["obskur"])["source"] == "DWDS"
-    with pytest.raises(ValueError, match="duplicate"):
+    assert json.loads(snap.current()["obskur"]) == {"hidx": 1, "source": "DWDS"}
+    with pytest.raises(RuntimeError, match="unreachable"):
         snap.refresh()
-    assert json.loads(snap.current()["obskur"])["source"] == "DWDS"
+    assert json.loads(snap.current()["obskur"]) == {"hidx": 1, "source": "DWDS"}
     snap.stop()
+
+
+def fold_edge_rows():
+    """Raw dimension rows where the argmin's every rule decides a lemma."""
+    base = dict(hidx=None, lemma_type="AR_G", form_type=None,
+                article_type=None, status=None, source=None, date=None)
+
+    def row(lemma, **kw):
+        return Row(**{"lemma": lemma, **base, **kw})
+
+    return [
+        # null hidx ranks as 0, below hidx 1 and 2
+        row("Band", hidx=2, source="ZDL"),
+        row("Band", hidx=1, source="DWDS"),
+        row("Band", source="WDG", date=dt.date(1974, 1, 1)),
+        # equal rank: the tie-break columns decide, nulls first
+        row("Tie", hidx=1, form_type="Hauptform", article_type="A"),
+        row("Tie", hidx=1, article_type="Voll"),
+        row("Tie", hidx=1, article_type="Basis"),
+        row("Null0", hidx=0, source="WDG"),
+        row("Null0", source=None, status="Red-f"),
+        row("Null0", hidx=0, source=None, status="Red-1"),
+        row("Datum", hidx=3, date=dt.date(2001, 1, 1)),
+        row("Datum", hidx=3),
+        row("Datum", hidx=3, date=dt.date(1999, 1, 1)),
+        # strings order byte-wise: "Z" < "Ä", and U+FF21 < U+1F600
+        # (UTF-16 code units would order them the other way round)
+        row("Umlaut", lemma_type="Ä"),
+        row("Umlaut", lemma_type="Z"),
+        row("Astral", form_type="\U0001F600"),
+        row("Astral", form_type="\uFF21"),
+        # lemmas and values that need JSON escaping
+        row('Zitat"x', hidx=2, article_type='Voll"artikel'),
+        row('Zitat"x', hidx=1, source="a\\b"),
+        row("back\\slash", source="x\ny"),
+        row("zwei\nZeilen", hidx=1, source="</script>"),
+        row("zwei\nZeilen", hidx=2),
+        # all-null metadata wins over a homograph
+        row("leer", lemma_type=None),
+        row("leer", hidx=3, source="DWDS"),
+        row("solo", source="WDG"),
+    ]
+
+
+def test_dimension_lookup_folds_like_dedup_dimension(spark):
+    """The live lookup's driver-side fold picks the row
+    ``dedup_dimension`` keeps, byte for byte."""
+    from dwds_livestream_spark.sources.dimension import dimension_lookup
+
+    raw = spark.createDataFrame(fold_edge_rows(), DIMENSION)
+    lookup = dimension_lookup(raw)
+    assert lookup == dimension_lookup(dedup_dimension(raw))
+    got = {k: json.loads(v) for k, v in lookup.items()}
+    assert got["Band"] == {"lemma_type": "AR_G", "source": "WDG",
+                           "date": "1974-01-01"}
+    assert got["Tie"]["article_type"] == "Basis"
+    assert got["Null0"] == {"hidx": 0, "lemma_type": "AR_G", "source": "WDG"}
+    assert got["Datum"] == {"hidx": 3, "lemma_type": "AR_G"}
+    assert got["Umlaut"]["lemma_type"] == "Z"
+    assert got["Astral"]["form_type"] == "\uFF21"
+    assert got['Zitat"x']["source"] == "a\\b"
+    assert got["zwei\nZeilen"]["source"] == "</script>"
+    assert lookup["leer"] == "{}"  # all-null metadata
+
+    # without a hidx column every row ranks 0, as if every hidx were
+    # null (which the wire omits), and the columns decide; null lemmas
+    # fold to one entry
+    no_hidx = spark.createDataFrame(
+        [("obskur", "B"), ("obskur", "A"), ("obskur", None), ("x", "Z"),
+         ("x", "Ä"), (None, "B"), (None, "A")],
+        "lemma string, source string",
+    )
+    lookup = dimension_lookup(no_hidx)
+    null_hidx = no_hidx.withColumn("hidx", F.lit(None).cast("int"))
+    assert lookup == dimension_lookup(dedup_dimension(null_hidx))
+    assert lookup == {"obskur": "{}", "x": '{"source":"Z"}',
+                      None: '{"source":"A"}'}
+
+
+def test_dimension_lookup_build_is_one_narrow_stage(spark, tmp_path):
+    """The snapshot build is one Spark job of one stage — a projection
+    shipped through Arrow — with no Exchange, Sort or Aggregate in its
+    plan; the argmin runs on the driver."""
+    from dwds_livestream_spark.sources.dimension import (
+        dimension_lookup,
+        load_dimension_parquet,
+    )
+
+    path = str(tmp_path / "dim.parquet")
+    spark.createDataFrame(fold_edge_rows(), DIMENSION).repartition(3) \
+        .write.parquet(path)
+    raw = load_dimension_parquet(spark, path)
+    assert raw.count() == len(fold_edge_rows())  # the loader does not dedup
+
+    sc = spark.sparkContext
+    sc.setJobGroup("dimension-lookup-build", "structure probe")
+    try:
+        lookup = dimension_lookup(raw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert len(lookup) == 11
+
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("dimension-lookup-build")
+    assert len(jobs) == 1
+    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    build = next(
+        e for e in (executions.apply(i) for i in reversed(range(executions.size())))
+        if e.jobs().contains(jobs[0])
+    )
+    plan = build.physicalPlanDescription()
+    assert "Scan parquet" in plan
+    for node in ("Exchange", "Sort", "Aggregate"):
+        assert node not in plan
 
 
 def test_from_json_drops_malformed_lines(spark):

@@ -117,9 +117,13 @@ def test_jdbc_writer_batches_and_idempotent_ledger(spark, derby_url, tmp_path):
 
 def test_load_dimension_jdbc_pushed_join_and_dedup(spark, derby_url):
     """S3: the lemma ⋈ article join runs inside the database (the scan
-    Spark sees is the joined subquery) and argmin-dedup lands on the
-    engine's uppercase-canonicalized result columns."""
-    from dwds_livestream_spark.sources.dimension import load_dimension_jdbc
+    Spark sees is the joined subquery); the loader returns its raw rows
+    under the engine's uppercase-canonicalized result columns, lowered,
+    and the live lookup folds them to the argmin."""
+    from dwds_livestream_spark.sources.dimension import (
+        dimension_lookup,
+        load_dimension_jdbc,
+    )
 
     _execute(
         spark,
@@ -137,11 +141,16 @@ def test_load_dimension_jdbc_pushed_join_and_dedup(spark, derby_url):
         "('obskur', NULL, 'AR_G', 'Hauptform', 1)",
     )
     dim = load_dimension_jdbc(spark, derby_url)
-    rows = {r.lemma: r for r in dim.collect()}
-    assert set(rows) == {"Band", "obskur"}
-    assert rows["Band"].hidx == 1  # argmin over hidx
-    assert rows["Band"].source == "DWDS"  # joined article payload
-    assert rows["obskur"].hidx is None  # nil kept, ranked as 0
+    rows = sorted(dim.collect(), key=lambda r: (r.lemma, r.hidx or 0))
+    assert [(r.lemma, r.hidx, r.source) for r in rows] == [
+        ("Band", 1, "DWDS"),  # joined article payload
+        ("Band", 2, "WDG"),
+        ("obskur", None, "WDG"),
+    ]
+    lookup = {k: json.loads(v) for k, v in dimension_lookup(dim).items()}
+    assert set(lookup) == {"Band", "obskur"}
+    assert (lookup["Band"]["hidx"], lookup["Band"]["source"]) == (1, "DWDS")
+    assert "hidx" not in lookup["obskur"]  # nil kept, ranked as 0
     assert dim.columns == [
         "lemma", "hidx", "lemma_type", "form_type",
         "article_type", "status", "source", "date",

@@ -35,11 +35,11 @@ def log_line(lemma: str, sec: int) -> str:
 
 
 @pytest.fixture()
-def dim(spark):
-    """Deduped dimension covering every shape of the wire: a date, a
+def raw_dim(spark):
+    """Raw dimension rows covering every shape of the wire: a date, a
     homograph with ``hidx`` (two rows, argmin keeps hidx 1), all-null
     metadata, lemmas and values that need JSON escaping, umlauts."""
-    return dedup_dimension(spark.createDataFrame(
+    return spark.createDataFrame(
         [
             Row(lemma="obskur", hidx=None, lemma_type="AR_G", form_type="Hauptform",
                 article_type="Vollartikel", status="Red-f", source="WDG",
@@ -63,7 +63,13 @@ def dim(spark):
                 status=None, source="DWDS", date=dt.date(2020, 2, 29)),
         ],
         DIMENSION,
-    ).drop("status"))
+    ).drop("status")
+
+
+@pytest.fixture()
+def dim(raw_dim):
+    """The deduped dimension: what the batch path joins."""
+    return dedup_dimension(raw_dim)
 
 
 # URL path -> decoded lemma: a miss, a date, a homograph, all-null
@@ -87,7 +93,7 @@ def _run_live(spark, logdir, ckpt, lookup, epm=None) -> list[str]:
     return published
 
 
-def test_live_pipeline_end_to_end(spark, tmp_path, dim):
+def test_live_pipeline_end_to_end(spark, tmp_path, raw_dim, dim):
     logdir = tmp_path / "logs"
     logdir.mkdir()
     (logdir / "a.log").write_text(
@@ -111,6 +117,12 @@ def test_live_pipeline_end_to_end(spark, tmp_path, dim):
     events_df = access_log_to_events(spark.read.text(str(logdir)))
     batch = to_json_events(enrich(events_df, dim))
     assert sorted(r.value for r in batch.collect()) == sorted(published)
+
+    # the lookup folded from the raw rows (the live loaders' output)
+    # publishes the same lines as the batch path over the deduped rows
+    from_raw = _run_live(spark, logdir, tmp_path / "ckpt_raw",
+                         dimension_lookup(raw_dim))
+    assert sorted(r.value for r in batch.collect()) == sorted(from_raw)
 
     # the same with engine-side epm sampling: 3 newest of the minute
     sampled = _run_live(spark, logdir, tmp_path / "ckpt_epm", lookup, epm=3)
