@@ -6,12 +6,19 @@ Pure ``DataFrame -> DataFrame`` transforms, composable via
 the reference proves that parity with its batch ``log->edn`` entry point
 (reference: src/dwds/livestream/server.clj:37-48).
 
-Hot-path design: everything is built-in columnar expressions inside a
-single WholeStageCodegen span — a cheap substring pre-filter short-
-circuits before the 8-group regex runs (the reference orders its
-predicates the same way, access_log.clj:81 before :92), and only
-{timestamp, lemma} survive the projection so column pruning reaches the
-scan.
+Hot-path design: everything is built-in columnar expressions, and the
+executed plan is one WholeStageCodegen stage (Filter -> Generate ->
+Filter -> Project) — a cheap substring pre-filter short-circuits before
+the 8-group regex runs (the reference orders its predicates the same
+way, access_log.clj:81 before :92), and only {timestamp, lemma} survive
+the projection so column pruning reaches the scan.
+
+No higher-order function (``transform``/``filter``/``exists``/
+``aggregate``) may enter the parse: HOFs are ``CodegenFallback``, which
+pulls their Filter/Project out of the codegen stage, and the fallback
+Filter regenerates its predicate code in every task — on a live server
+that is a fixed cost per micro-batch. No ``lower()`` either (see
+``bots.py``). ``tests/test_access_log.py`` pins both.
 """
 
 from __future__ import annotations
@@ -138,19 +145,23 @@ def extract_wb_events(
     take URI path (query string and fragment dropped), split on '/',
     percent-decode segments, keep single-segment non-legacy paths with a
     valid lemma from non-bot UAs.
+
+    Only single-segment paths survive, and the reference splits before
+    it decodes, so the split is a ``/`` test on the undecoded path and
+    the lemma is that whole path decoded: an encoded ``%2F`` stays
+    inside the one segment.
     """
     # P3: strip the '/wb/' prefix (4 chars), then drop ?query/#fragment.
     stripped = F.substring(F.col("uri"), len(URI_PREFIX) + 1, 1 << 20)
     path_str = F.split(stripped, r"[?#]").getItem(0)
-    # P4+P5: split into segments, decode each.
-    segments = F.transform(F.split(path_str, "/"), _decode_segment)
 
     out = (
         df.where(F.col("matched"))  # F7 malformed-line guard
         .where(F.col("status") == 200)  # F2
         .where(F.col("uri").startswith(URI_PREFIX))
-        .withColumn("__path", segments)
-        .withColumn("lemma", F.element_at("__path", 1))
+        .withColumn("__path", path_str)
+        # P4+P5: the single segment, decoded
+        .withColumn("lemma", _decode_segment(F.col("__path")))
     )
     return (
         out
@@ -159,7 +170,7 @@ def extract_wb_events(
         # F3 valid-lemma?: non-empty, not starting '['
         .where((F.length("lemma") > 0) & ~F.col("lemma").startswith("["))
         # F4 sub-wb?: single segment, not a legacy dictionary
-        .where(F.size("__path") == 1)
+        .where(~F.col("__path").contains("/"))
         .where(~F.col("lemma").isin(*sub_dictionaries))
         # F5 bot filter
         .where(~is_bot(F.col("user_agent")))

@@ -111,13 +111,16 @@ def test_drop_empty_and_bracket_lemma(spark):
 def test_drop_multi_segment_and_legacy(spark):
     # F4 sub-wb? (access_log.clj:70-72)
     dropped = ["/wb/foo/bar", "/wb/dwb", "/wb/dwb2", "/wb/etymwb", "/wb/wdg",
-               "/wb/index", "/wb/W%C3%B6rterbuch"]
+               "/wb/index", "/wb/W%C3%B6rterbuch", "/wb/a/", "/wb//a"]
     assert run(spark, [line(uri=u) for u in dropped]) == []
 
 
 def test_percent_decode(spark):
     # P5 (access_log.clj:86): Stra%C3%9Fe -> Straße
     assert run(spark, [line(uri="/wb/Stra%C3%9Fe")]) == [(TS, "Straße")]
+    # the split runs before the decode: an encoded slash stays inside
+    # the one segment
+    assert run(spark, [line(uri="/wb/a%2Fb")]) == [(TS, "a/b")]
 
 
 def test_plus_stays_literal(spark):
@@ -172,3 +175,37 @@ def test_parse_regex_evaluates_once_and_blocks_pushdown(spark):
     gen_pos = plan.index("Generate")
     rep_pos = plan.index("Repartition")
     assert gen_pos < rep_pos, plan  # toString prints top-down
+
+
+def test_parse_is_one_codegen_stage(spark, tmp_path):
+    """Every Filter, Generate and Project of the parse runs inside a
+    WholeStageCodegen stage. A higher-order function (transform,
+    filter, exists, aggregate) is CodegenFallback and pulls its operator
+    out, and the fallback Filter regenerates its predicate in every
+    task; lower() pays the ICU case-table init on a fresh JVM. Neither
+    may enter the optimized plan."""
+    (tmp_path / "a.log").write_text(line() + "\n")
+    events = access_log_to_events(spark.read.text(str(tmp_path)))
+    qe = events._jdf.queryExecution()
+    optimized = qe.optimizedPlan().toString()
+    assert "lower(" not in optimized, optimized
+    assert "lambdafunction" not in optimized, optimized
+
+    placed: list[tuple[str, bool]] = []
+
+    def walk(node, in_codegen: bool) -> None:
+        name = node.nodeName()
+        if name.startswith("WholeStageCodegen"):
+            in_codegen = True
+        elif name == "InputAdapter":
+            in_codegen = False
+        elif name in ("Filter", "Generate", "Project"):
+            placed.append((name, in_codegen))
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i), in_codegen)
+
+    walk(qe.executedPlan(), False)
+    assert {n for n, _ in placed} == {"Filter", "Generate", "Project"}, placed
+    outside = [n for n, inside in placed if not inside]
+    assert not outside, qe.executedPlan().toString()

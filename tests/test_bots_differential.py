@@ -264,12 +264,19 @@ STRUCTURAL_POSITIVES = [
 
 
 def test_two_tier_matches_plain_alternation(spark):
-    """The two-tier is_bot (guard literals + structural tier) must be
+    """The two-tier is_bot (guard regex + structural tier) must be
     EXTENSIONALLY IDENTICAL to the plain 68-branch alternation it
-    replaced — per branch, on the labeled corpus, and on fuzz."""
-    from dwds_livestream_spark.functions.bots import BOT_PATTERN
+    replaced — per branch, on the labeled corpus, on case traps and on
+    fuzz — and the guard regex must match exactly the UAs whose
+    ASCII-lowered form contains a guard literal."""
+    from dwds_livestream_spark.functions.bots import (
+        BOT_PATTERN,
+        GUARD_LITERALS,
+        GUARD_PATTERN,
+    )
 
     import random
+    import string
 
     rng = random.Random(0xB07)
     alphabet = (
@@ -280,12 +287,26 @@ def test_two_tier_matches_plain_alternation(spark):
         "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 80)))
         for _ in range(500)
     ]
+
+    def mixed(s: str) -> str:
+        return "".join(c.upper() if i % 2 else c for i, c in enumerate(s))
+
+    # every guard literal upper- and mixed-cased inside a human UA, and
+    # non-ASCII look-alikes that Unicode case mapping or folding ties to
+    # ASCII letters (dotted capital I, long s, Kelvin sign) or that read
+    # as them (full-width): Java's ASCII-only (?i) folds none of them
+    case_traps = [
+        f"Mozilla/5.0 (X11; {form(lit)}) Gecko/20100101 Firefox/121.0"
+        for lit in GUARD_LITERALS
+        for form in (str.upper, mixed)
+    ] + ["İNDEXER", "ſpider", "o\u212ahttp", "ＢＯＴ", "my İndexer ſcraper"]
     corpus = (
         PER_BRANCH_POSITIVES
         + STRUCTURAL_POSITIVES
         + HUMAN_CORPUS
         + [u for uas in BOT_CORPUS.values() for u in uas]
         + ["Mediascope cubot test", "my cubot phone", "liBhttps tool"]
+        + case_traps
         + fuzz
     )
     df = spark.createDataFrame([(u,) for u in corpus] + [(None,)], "ua string")
@@ -295,9 +316,21 @@ def test_two_tier_matches_plain_alternation(spark):
         F.coalesce(F.col("ua").rlike(BOT_PATTERN), F.lit(True)).alias(
             "plain"
         ),
+        F.col("ua").rlike(GUARD_PATTERN).alias("guard"),
     ).collect()
     diff = [(r.ua, r.two_tier, r.plain) for r in rows if r.two_tier != r.plain]
     assert not diff, f"two-tier != plain alternation on: {diff[:10]}"
+    # the prefix-factored guard is exactly "the ASCII-lowered UA
+    # contains some literal" (literals sharing a prefix included)
+    ascii_lower = str.maketrans(string.ascii_uppercase, string.ascii_lowercase)
+    guard_diff = [
+        (r.ua, r.guard)
+        for r in rows
+        if r.ua is not None
+        and r.guard
+        != any(lit in r.ua.translate(ascii_lower) for lit in GUARD_LITERALS)
+    ]
+    assert not guard_diff, f"guard regex != literal containment: {guard_diff[:10]}"
     # and every crafted positive really is a positive (guards work)
     flagged = {r.ua: r.plain for r in rows}
     missed = [
