@@ -6,6 +6,14 @@ broadcasts every event to every subscriber tap (server.clj:22-23,
 http.clj:80,93); each tap sits behind a `sliding-buffer 1` (drop-oldest
 conflation for slow clients, http.clj:77) and an optional `epm`
 events-per-minute throttle (leaky bucket, http.clj:74-78, 109-113).
+The bucket holds one token and refills at epm/60 per second, so
+deliveries are at least 60/epm s apart and no 60 s window sees more
+than epm events (a bucket of epm tokens would admit a full bucket
+plus a minute of refill: up to 2x epm). A token that comes due
+between two polls waits for the next poll and its fraction past 1 is
+dropped, so a backlogged tap gets slightly under epm: 44.5 per minute
+at epm 45 polled every 0.05 s (the SSE loop's interval). Carrying that
+fraction would let some 60 s window hold epm + 1.
 
 This is deliberately OUTSIDE the Spark query: the engine's streaming
 query stays exactly-once; lossiness is a per-subscriber serving-layer
@@ -30,7 +38,7 @@ class Subscription:
         self._buf: deque[str] = deque(maxlen=buffer_size)
         self._lock = threading.Lock()
         self.epm = epm
-        self._tokens = float(epm) if epm else 0.0
+        self._tokens = 1.0 if epm else 0.0
         self._last_refill = time.monotonic()
         self.dropped = 0  # conflated-away count (observability)
 
@@ -43,13 +51,14 @@ class Subscription:
 
     def poll(self, max_items: int | None = None) -> list[str]:
         """Drain up to max_items, gated by the leaky bucket when epm is
-        set (tokens refill continuously at epm/60 per second)."""
+        set (one token of capacity, refilled continuously at epm/60 per
+        second)."""
         with self._lock:
             budget = len(self._buf) if max_items is None else max_items
             if self.epm is not None:
                 now = time.monotonic()
                 self._tokens = min(
-                    float(self.epm),
+                    1.0,
                     self._tokens + (now - self._last_refill) * self.epm / 60.0,
                 )
                 self._last_refill = now

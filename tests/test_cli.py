@@ -1,6 +1,7 @@
 """CLI entry points: scripts/collect.py as a subprocess smoke with
 availableNow drain — JSONL in, typed homograph-encoded partitioned
-parquet out — and scripts/serve.py's shutdown on SIGTERM. (serve.py
+parquet out — scripts/serve.py's shutdown on SIGTERM, and the session
+factory's driver JVM options, which only a fresh JVM shows. (serve.py
 shares every component with test_serving.py's full-topology test; its
 wall-clock streaming loop is exercised there without subprocess timing
 flakiness.)"""
@@ -93,3 +94,58 @@ def test_serve_cli_stops_cleanly_on_sigterm(tmp_path):
     err = stderr.read_text()
     assert proc.returncode == 0, err[-2000:]
     assert "reentrant" not in err
+
+
+_PROBE_SESSION = """
+import json
+from dwds_livestream_spark.session import build_session
+
+spark = build_session(
+    master="local[1]",
+    extra_conf={"spark.driver.extraJavaOptions": "-Dprobe.flag=1 -Xms512m"},
+)
+jvm = spark.sparkContext._jvm
+mf = jvm.java.lang.management.ManagementFactory
+diag = mf.getPlatformMXBean(
+    jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+print(json.dumps({
+    **{k: jvm.java.lang.System.getProperty(k)
+       for k in ("user.timezone", "user.language", "probe.flag")},
+    "tier4": diag.getVMOption("Tier4InvocationThreshold").getValue(),
+}))
+spark.stop()
+"""
+
+
+def test_session_java_options_merge_with_caller_extras():
+    """The factory's driver options (locale, timezone, and for a 2g
+    driver the C2 thresholds) sit in defaultJavaOptions, so a caller's
+    extraJavaOptions adds to them instead of replacing them. A fresh
+    JVM is needed: options only apply at launch. The threshold is read
+    back from HotSpot, not from the argument list — Spark adds
+    -XX:+IgnoreUnrecognizedVMOptions, so a misspelt flag would be
+    dropped silently."""
+    env = dict(os.environ, PYTHONPATH=REPO, SPARK_GRAFT_DRIVER_MEM="2g")
+    res = subprocess.run(
+        [sys.executable, "-c", _PROBE_SESSION],
+        capture_output=True, text=True, timeout=240, env=env,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    seen = json.loads(res.stdout.strip().splitlines()[-1])
+    assert seen == {"user.timezone": "UTC", "user.language": "en",
+                    "probe.flag": "1", "tier4": "50000"}
+
+
+def test_c2_thresholds_only_for_a_short_work_heap():
+    """A driver heap of at most 4 GiB gets the C2 thresholds; a driver
+    sized for scale (8g, the 24g default, a 1t cluster driver) keeps the
+    JDK defaults, whose C2 pays back over long local-mode row loops."""
+    from dwds_livestream_spark.session import _driver_java_options
+
+    locale = "-Duser.language=en -Duser.country=US -Duser.timezone=UTC"
+    for mem in ("512m", "2g", "2048", "4g", "4096m", "4G"):
+        opts = _driver_java_options(mem)
+        assert opts.startswith(locale)
+        assert "-XX:Tier4InvocationThreshold=50000" in opts, mem
+    for mem in ("4097m", "8g", "24g", "1t"):
+        assert _driver_java_options(mem) == locale, mem

@@ -4,6 +4,7 @@ stream, slow subscribers conflate to newest, epm gates delivery."""
 from __future__ import annotations
 
 import json
+from types import SimpleNamespace
 
 import pytest
 
@@ -11,6 +12,7 @@ from pyspark.sql import Row
 
 from dwds_livestream_spark.schemas import DIMENSION
 from dwds_livestream_spark.sources.dimension import dimension_lookup
+from dwds_livestream_spark.streaming import hub as hub_module
 from dwds_livestream_spark.streaming.hub import BroadcastHub
 from dwds_livestream_spark.streaming.pipeline import start_live_server
 
@@ -40,13 +42,43 @@ def test_epm_leaky_bucket_gates_delivery():
     hub = BroadcastHub()
     sub = hub.subscribe("viz", buffer_size=100, epm=45)  # viz default
     hub.publish([f"e{i}" for i in range(100)], 0)
-    # bucket starts full: at most epm events delivered immediately
+    # the bucket holds one token: one event now, the next 60/epm s later
     got = sub.poll()
-    assert len(got) == 45
+    assert len(got) == 1
     assert sub.poll() == []  # bucket empty until refill
 
     with pytest.raises(ValueError):
         hub.subscribe("bad", epm=0)
+
+
+@pytest.mark.parametrize(
+    "epm, step",
+    # a step that divides 60/epm, and the viz default at serving.py's
+    # 0.05 s delivery poll, which does not: a token that becomes due
+    # between polls waits for the next one (measured 44.4 per minute)
+    [(60, 0.25), (45, 0.05)],
+)
+def test_epm_never_exceeds_epm_per_minute(monkeypatch, epm, step):
+    """10 simulated minutes of a backlogged subscriber: no 60 s window
+    delivers more than epm events, and every full window delivers at
+    least epm - 1 (a bucket that starts full, or holds more than one
+    token, admits a burst on top of the steady rate)."""
+    now = [0.0]
+    monkeypatch.setattr(hub_module, "time", SimpleNamespace(monotonic=lambda: now[0]))
+    hub = BroadcastHub()
+    sub = hub.subscribe("viz", buffer_size=10_000, epm=epm)
+    delivered: list[float] = []
+    publish_every = round(2.0 / step)  # a 5-event micro-batch every 2 s
+    for k in range(round(600.0 / step)):
+        now[0] = k * step  # from the tick count: no summed float error
+        if k % publish_every == 0:
+            hub.publish([f"e{k + j}" for j in range(5)], k)
+        delivered += [now[0]] * len(sub.poll())
+
+    per_window = [sum(1 for u in delivered if t <= u < t + 60) for t in delivered]
+    assert max(per_window) <= epm
+    full = [n for t, n in zip(delivered, per_window) if t + 60 <= 600.0]
+    assert full and min(full) >= epm - 1
 
 
 def test_hub_behind_live_pipeline(spark, tmp_path):
