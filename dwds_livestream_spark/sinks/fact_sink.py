@@ -4,9 +4,10 @@ Reference: batches of 128 events per transaction into Postgres
 ``wb_page_request`` with retry/backoff (collector.clj:76-80, 97-124);
 DDL + ts/lemma/source indexes (collector/001-…up.sql:1-12).
 
-Spark-first: ``foreachBatch`` over a checkpointed streaming query is
-exactly-once (an upgrade over the reference's at-least-once, SURVEY.md
-§1.4). Two writers:
+Spark-first: ``foreachBatch`` over a checkpointed streaming query.
+That is at-least-once per batch, like the reference (SURVEY.md §1.4):
+a crash between a writer's append and the checkpoint commit replays
+the batch, and a plain append writes its rows again. Two writers:
 
 - parquet_writer: the scale path. Partitioned by ``date(ts)`` — the
   reference's B-tree indexes map to partition pruning (ts) + parquet
@@ -85,15 +86,16 @@ def jdbc_writer(
 def idempotent(
     writer: Callable[[DataFrame, int], None], ledger_path: str
 ) -> Callable[[DataFrame, int], None]:
-    """Exactly-once wrapper for writers whose target cannot deduplicate
-    (plain parquet append, JDBC without a key): a tiny batch-id ledger
-    records each completed batch, and a replayed batch (restart between
-    the data write and the checkpoint commit — the one gap in
-    foreachBatch's at-least-once contract) is skipped instead of
-    re-appended. Ledger writes are one marker file per batch id, so
-    the check is an O(1) driver-side existence test, not a data scan —
-    the reference's retried INSERT could duplicate rows here
-    (collector.clj:100-105, SURVEY.md §1.4); this closes that gap.
+    """Replay guard for writers whose target cannot deduplicate (plain
+    parquet append, JDBC without a key): a tiny batch-id ledger records
+    each completed batch, and a replayed batch whose marker exists
+    (restart after the marker but before the checkpoint commit) is
+    skipped instead of re-appended. Ledger writes are one marker file
+    per batch id, so the check is an O(1) driver-side existence test,
+    not a data scan. The marker is written only after the data, so a
+    crash between the append and the marker still re-appends the batch:
+    the guarantee stays at-least-once, like the reference's retried
+    INSERT (collector.clj:100-105, SURVEY.md §1.4).
     """
     import os
 
@@ -117,7 +119,7 @@ def start_fact_sink(
     trigger: dict | None = None,
 ) -> StreamingQuery:
     """Collector pipeline tail: enriched events -> sink rows (P8/P9/F6)
-    -> exactly-once micro-batched writes."""
+    -> checkpointed micro-batched writes (at-least-once per batch)."""
     rows = events_to_sink_rows(enriched, config.max_lemma_len)
     return (
         rows.writeStream.foreachBatch(writer)

@@ -4,8 +4,9 @@ ingest JSONL event lines from a log-shipping directory or the live
 server's long-poll endpoint, apply the
 collector transforms (from_json -> lemma#hidx encode -> type casts ->
 length guard), and persist to a date-partitioned parquet fact table
-with exactly-once micro-batches (checkpointed; Structured Streaming
-upgrades the reference's at-least-once JDBC path).
+in checkpointed micro-batches. The guarantee is at-least-once per
+batch, as on the reference's JDBC path: a crash between the parquet
+append and the checkpoint commit re-appends that batch on restart.
 
 Composition of tested parts: streaming.pipeline.collector_stream +
 sinks.fact_sink.{parquet_writer, jdbc_writer, idempotent,

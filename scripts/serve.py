@@ -81,18 +81,18 @@ def main() -> None:
         publish=hub.publish,
         trigger={"processingTime": args.trigger},
     )
+    # The handler only flags the stop: it runs on the main thread, which
+    # may be inside a py4j call (awaitTermination), and a py4j call from
+    # the handler would be a reentrant one. It is in place before the
+    # ready line, which a supervisor may answer with SIGTERM at once.
+    stopping = threading.Event()
+    signal.signal(signal.SIGINT, lambda *_: stopping.set())
+    signal.signal(signal.SIGTERM, lambda *_: stopping.set())
     print(
         f"serving http://{args.host}:{server.port}/api/events and /api/jsonl "
         f"(epm=N to sample); checkpoint={checkpoint}",
         flush=True,
     )
-
-    # The handler only flags the stop: it runs on the main thread, which
-    # may be inside a py4j call (awaitTermination), and a py4j call from
-    # the handler would be a reentrant one.
-    stopping = threading.Event()
-    signal.signal(signal.SIGINT, lambda *_: stopping.set())
-    signal.signal(signal.SIGTERM, lambda *_: stopping.set())
     try:
         while not stopping.is_set() and not query.awaitTermination(1):
             pass
