@@ -78,10 +78,17 @@ def start_live_server(
         # first batch over 24 batches, so the limit's generated code is
         # compiled once, not per batch; ``limit().collect()`` and a plain
         # ``collect()`` take the same per-batch time within noise.
+        # ``limit().collect()`` is Spark's take protocol: two jobs per
+        # micro-batch, the first over 1 partition, the second over the
+        # other 3 of a 4-file group.
         # Rejected alternatives: ``coalesce(1).limit()`` makes the parse
         # one task (a 160k-line backlog batch went from 3.4-4.0 s to
         # 5.5-6.4 s wall); ``tail()`` runs 3 jobs; ``toLocalIterator()``
-        # runs one job per partition and took about 2x the time.
+        # runs one job per partition and took about 2x the time;
+        # ``spark.sql.limit.initialNumPartitions`` on the stream's
+        # session makes the take one job, with no CPU change (live_tail
+        # ``cpu_ms_per_unit`` on a 4-core host, 6 pairs: median 1,637 ->
+        # 1,663 ms).
         rows = wire.limit(max_publish_rows + 1).collect()
         if len(rows) > max_publish_rows:
             import logging  # noqa: PLC0415

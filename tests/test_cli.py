@@ -1,19 +1,22 @@
 """CLI entry points: scripts/collect.py as a subprocess smoke with
 availableNow drain — JSONL in, typed homograph-encoded partitioned
 parquet out — scripts/serve.py's shutdown on SIGTERM, and the session
-factory's driver JVM options, which only a fresh JVM shows. (serve.py
-shares every component with test_serving.py's full-topology test; its
-wall-clock streaming loop is exercised there without subprocess timing
-flakiness.)"""
+factory's driver JVM options and checkpoint file manager, which only a
+fresh JVM shows. (serve.py shares every component with
+test_serving.py's full-topology test; its wall-clock streaming loop is
+exercised there without subprocess timing flakiness.)"""
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import signal
+import stat
 import subprocess
 import sys
 import threading
+import time
 
 import duckdb
 
@@ -149,3 +152,73 @@ def test_c2_thresholds_only_for_a_short_work_heap():
         assert "-XX:Tier4InvocationThreshold=50000" in opts, mem
     for mem in ("4097m", "8g", "24g", "1t"):
         assert _driver_java_options(mem) == locale, mem
+
+
+def _fork_shim(tmp_path, names):
+    """A PATH directory whose ``names`` log each call to a file and
+    then run the real command; returns (directory, log path)."""
+    shim = tmp_path / "shim"
+    shim.mkdir()
+    log = tmp_path / "forks.log"
+    for name in names:
+        exe = shim / name
+        exe.write_text(f'#!/bin/sh\necho "{name} $*" >> "{log}"\n'
+                       f'exec "{shutil.which(name)}" "$@"\n')
+        exe.chmod(exe.stat().st_mode | stat.S_IXUSR)
+    return shim, log
+
+
+def test_serve_checkpoints_fork_no_readlink(tmp_path):
+    """A local session writes streaming checkpoints through the
+    FileSystem manager: over three micro-batches of serve.py the driver
+    forks no ``readlink`` (FileContext's rename on the local file
+    system forks one per link-status lookup without libhadoop). The
+    ``chmod`` forks that checkpoint files still cost show the shim is
+    on the driver JVM's PATH."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    dim = tmp_path / "dim.parquet"
+    pq.write_table(pa.table({"lemma": ["obskur"], "hidx": pa.array([None], pa.int32()),
+                             "source": ["WDG"]}), dim)
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    ckpt = tmp_path / "ckpt"
+    shim, forks = _fork_shim(tmp_path, ("readlink", "chmod"))
+
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2",
+               PATH=f"{shim}{os.pathsep}{os.environ['PATH']}")
+    stderr = tmp_path / "stderr.txt"
+    with open(stderr, "w") as err_file:
+        proc = subprocess.Popen(
+            [sys.executable, os.path.join(REPO, "scripts", "serve.py"),
+             str(logs), str(dim), "--port", "0", "--trigger", "0.2 seconds",
+             "--checkpoint", str(ckpt)],
+            stdout=subprocess.PIPE, stderr=err_file, text=True, env=env,
+        )
+    watchdog = threading.Timer(120, proc.kill)
+    watchdog.start()
+    try:
+        ready = proc.stdout.readline()
+        assert ready.startswith("serving http://"), stderr.read_text()[-2000:]
+        for batch in range(3):
+            # written under a hidden name, then renamed: the file source
+            # never lists a half-written file
+            part = logs / f".{batch}.log"
+            part.write_text(
+                f'10.0.0.1 - - [08/Dec/2024:23:00:0{batch} +0000] '
+                f'"GET /wb/obskur HTTP/1.1" 200 100 "-" "Mozilla/5.0"\n')
+            part.rename(logs / f"{batch}.log")
+            while not (ckpt / "commits" / str(batch)).exists():
+                assert proc.poll() is None, stderr.read_text()[-2000:]
+                time.sleep(0.05)
+        proc.send_signal(signal.SIGTERM)
+        proc.communicate(timeout=60)
+    finally:
+        watchdog.cancel()
+        proc.kill()
+    assert proc.returncode == 0, stderr.read_text()[-2000:]
+    calls = forks.read_text().splitlines() if forks.exists() else []
+    # the launcher's own scripts may fork readlink; the checkpoint's not
+    assert [c for c in calls if c.startswith("readlink") and str(ckpt) in c] == []
+    assert any(c.startswith("chmod") and str(ckpt) in c for c in calls)
