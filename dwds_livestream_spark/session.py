@@ -27,41 +27,41 @@ from pyspark.sql import SparkSession
 # not depend on the JVM default locale (SURVEY.md §7 risk list).
 _LOCALE_JAVA_OPTIONS = "-Duser.language=en -Duser.country=US -Duser.timezone=UTC"
 
-# C2 (Tier 4) for truly hot code only, each threshold 10x its JDK 17
-# default, in a driver whose work is short. Live micro-batches and short
-# batch jobs run Spark methods that get warm but never hot; at the
-# defaults the C2 compiler threads burned 17.9 of 38.2 driver CPU-s on a
-# live_tail perfbench run and 28.8 of 54.9 on batch_queries. With these
-# thresholds (4-core host, 2g driver) the run's JIT compile time fell
-# 26.3 -> 10.4 s on live_tail and 31.6 -> 14.2 s on batch_queries, and
-# driver CPU per 1,000 live lines fell 2,132 -> 1,339 ms (medians of 10
-# runs). The saving is warm-up, so it belongs to short-lived JVMs: a
-# long-lived session keeps lukewarm code in profiled C1 code and pays
-# for it. With a 2g driver, 300 s live runs planned each micro-batch
-# 5-9 ms slower (planning p50 18 -> 27 and 21 -> 26 ms, trigger p50
-# 298 -> 362 and 310 -> 317 ms, two traced pairs), and bench.py's
-# 236-query sf0.01 inventory took 12% longer (sum of per-query bests,
-# 2 runs a side).
-# Where the driver is also the executor at scale they cost time too:
-# the 10 sf1 smoke queries at local[4] with an 8g driver took 6% longer
-# in sum (dedup_ngram_jaccard 6.0 -> 7.4 s, dedup_clusters 8.0 -> 9.5 s
-# medians), and 5x or 3x did not remove that.
-# Rejected: C1 only (-XX:TieredStopAtLevel=1) cut live_tail CPU 55% but
-# made the warm sf0.1 passes of heavy registry queries 1.6-1.9x slower
-# (access_log_parse 2.55 s, triangle_count 7.3-8.3 s);
-# -XX:CICompilerCount=2 cut only 22%.
-_C2_HOT_ONLY_OPTIONS = (
-    " -XX:Tier4InvocationThreshold=50000"
-    " -XX:Tier4MinInvocationThreshold=6000"
-    " -XX:Tier4CompileThreshold=150000"
-    " -XX:Tier4BackEdgeThreshold=400000"
-)
+# C1 only, in a driver whose work is short: no C2 compiles and no
+# profiled tier-3 code. Live micro-batches and short batch jobs run
+# Spark methods (planning, codegen source generation, closure cleaning,
+# task serialization) that get warm but never hot, so C2's compiles
+# never pay back within the work. Measured against
+# the JDK's C2 with each Tier-4 threshold at 10x its default (4-core
+# host, perfbench's 2g driver, alternating pairs, medians): live_tail
+# driver CPU per 1,000 lines 1,710 -> 1,112 ms (12/12 pairs lower),
+# setup 17.3 -> 13.8 CPU-s, JIT compile time at the end of the run
+# 12.6 -> 6.7 s; batch_queries 2,041 -> 1,264 ms per query (10/10),
+# setup 7.7 -> 6.0 CPU-s, JIT 17.8 -> 6.5 s. The saving is warm-up, so
+# it belongs to short-lived JVMs. C1 code is slower once warm: over 300 s
+# live runs (301 micro-batches) driver CPU per 1,000 lines still fell
+# (586 -> 521 and 485 -> 479 ms), but in steady state each micro-batch
+# planned and ran slower (planning p50 31/33 -> 40/45 ms, trigger p50
+# 286/306 -> 316/351 ms, driver CPU over the second half +15%/+18%; two
+# traced pairs), and long row loops run slower: sf0.1 registry queries
+# at local[4], third of 3 passes, 2 runs a side, access_log_parse
+# 2.16/2.07 -> 2.74/2.71 s, triangle_count 7.26/6.80 -> 9.76/9.46 s,
+# dedup_clusters 6.10/5.51 -> 5.59/5.68 s, while their driver CPU summed
+# over the 3 passes fell (triangle_count 90.7/78.7 -> 76.3/75.4 s);
+# bench.py's 236-query sf0.01 inventory in one 2g session took 192.6 ->
+# 255.7 s (one run a side). Hence the heap gate: the package's own
+# entry points run at the 24g default and keep tiered C1+C2.
+# Rejected: the 10x Tier-4 thresholds (the baseline of the figures
+# above); -XX:CICompilerCount=2 on top of them
+# (1,474/1,514/1,522 -> 1,477/1,426/1,540 ms per 1,000 lines, three
+# pairs); Parallel or Serial GC instead of G1 (inside the noise).
+_C1_ONLY_OPTIONS = " -XX:TieredStopAtLevel=1"
 
 # The driver heap is the factory's measure of how much work its JVM is
 # meant for: a local[N] driver is sized like the executor it is (24g by
 # default), and one of at most 4 GiB only fits short work. The package's
 # own entry points (CLIs, bench.py, the test session) use the default
-# heap and keep the JDK thresholds.
+# heap and keep the JDK's tiered C1+C2.
 _SHORT_WORK_HEAP_MIB = 4096
 
 
@@ -76,11 +76,11 @@ def _heap_mib(mem: str) -> float:
 
 def _driver_java_options(driver_mem: str) -> str:
     """The driver JVM's option string for a driver heap of ``driver_mem``:
-    the locale flags always, the C2 thresholds only for a short-work
+    the locale flags always, C1-only compilation only for a short-work
     heap. Executors keep the JDK defaults: on a cluster they run the
     long row loops, and local[N] has no separate executor JVM."""
     if _heap_mib(driver_mem) <= _SHORT_WORK_HEAP_MIB:
-        return _LOCALE_JAVA_OPTIONS + _C2_HOT_ONLY_OPTIONS
+        return _LOCALE_JAVA_OPTIONS + _C1_ONLY_OPTIONS
     return _LOCALE_JAVA_OPTIONS
 
 

@@ -114,7 +114,7 @@ diag = mf.getPlatformMXBean(
 print(json.dumps({
     **{k: jvm.java.lang.System.getProperty(k)
        for k in ("user.timezone", "user.language", "probe.flag")},
-    "tier4": diag.getVMOption("Tier4InvocationThreshold").getValue(),
+    "tiered_stop": diag.getVMOption("TieredStopAtLevel").getValue(),
 }))
 spark.stop()
 """
@@ -122,10 +122,10 @@ spark.stop()
 
 def test_session_java_options_merge_with_caller_extras():
     """The factory's driver options (locale, timezone, and for a 2g
-    driver the C2 thresholds) sit in defaultJavaOptions, so a caller's
+    driver C1-only compilation) sit in defaultJavaOptions, so a caller's
     extraJavaOptions adds to them instead of replacing them. A fresh
-    JVM is needed: options only apply at launch. The threshold is read
-    back from HotSpot, not from the argument list — Spark adds
+    JVM is needed: options only apply at launch. The compiler level is
+    read back from HotSpot, not from the argument list — Spark adds
     -XX:+IgnoreUnrecognizedVMOptions, so a misspelt flag would be
     dropped silently."""
     env = dict(os.environ, PYTHONPATH=REPO, SPARK_GRAFT_DRIVER_MEM="2g")
@@ -136,20 +136,20 @@ def test_session_java_options_merge_with_caller_extras():
     assert res.returncode == 0, res.stderr[-2000:]
     seen = json.loads(res.stdout.strip().splitlines()[-1])
     assert seen == {"user.timezone": "UTC", "user.language": "en",
-                    "probe.flag": "1", "tier4": "50000"}
+                    "probe.flag": "1", "tiered_stop": "1"}
 
 
-def test_c2_thresholds_only_for_a_short_work_heap():
-    """A driver heap of at most 4 GiB gets the C2 thresholds; a driver
+def test_c1_only_for_a_short_work_heap():
+    """A driver heap of at most 4 GiB compiles with C1 only; a driver
     sized for scale (8g, the 24g default, a 1t cluster driver) keeps the
-    JDK defaults, whose C2 pays back over long local-mode row loops."""
+    JDK's tiered compilation, whose C2 pays back over long local-mode
+    row loops."""
     from dwds_livestream_spark.session import _driver_java_options
 
     locale = "-Duser.language=en -Duser.country=US -Duser.timezone=UTC"
     for mem in ("512m", "2g", "2048", "4g", "4096m", "4G"):
-        opts = _driver_java_options(mem)
-        assert opts.startswith(locale)
-        assert "-XX:Tier4InvocationThreshold=50000" in opts, mem
+        assert _driver_java_options(mem) == (
+            locale + " -XX:TieredStopAtLevel=1"), mem
     for mem in ("4097m", "8g", "24g", "1t"):
         assert _driver_java_options(mem) == locale, mem
 
