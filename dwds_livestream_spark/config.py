@@ -7,7 +7,6 @@ behavior is tunable the same way the reference's env vars were
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 
@@ -51,9 +50,3 @@ class EngineConfig:
 
 
 DEFAULT_CONFIG = EngineConfig()
-
-
-def testdata_dir(sf: str | float = 0.001) -> str:
-    """Path to driver-generated parquet tables (TESTDATA.md)."""
-    base = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
-    return f"{base}/sf{sf}"

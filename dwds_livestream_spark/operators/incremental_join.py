@@ -7,11 +7,10 @@ the join view A⋈B grows by exactly
 symmetric difference form, out of scope for an append-only fact
 pipeline).
 
-Beyond-reference operator (project brief: pipeline ops).
-``rollup_maintain.py`` maintains AGGREGATE views incrementally; this
-is the join-view sibling: a denormalized serving table (e.g. events ⋈
-dimension snapshots, orders ⋈ lineitem) kept current by joining only
-the DELTAS against the other side — at 100 TB the difference between
+Beyond-reference operator (project brief: pipeline ops): a
+denormalized serving table (e.g. events ⋈ dimension snapshots,
+orders ⋈ lineitem) kept current by joining only the DELTAS against
+the other side — at 100 TB the difference between
 "join this batch" and "re-join history every refresh".
 
 Scale design: ΔA and ΔB are batch-sized; ΔA⋈B and A⋈ΔB are each one

@@ -41,30 +41,6 @@ from pyspark.sql import functions as F
 from ..localrel import local_df
 
 
-def day_bin_cells(
-    df: DataFrame,
-    value_col: str = "value",
-    ts_col: str = "ts",
-    lo: float = 0.0,
-    hi: float = 512.0,
-    n_bins: int = 64,
-) -> DataFrame:
-    """(day, bin) cell per row — the shared binning projection behind
-    the batch rollup and its streaming twin
-    (streaming/sketches.py::histogram_stream). Values outside [lo, hi)
-    clamp to the edge bins so every NUMERIC row is counted (N over
-    non-null values is preserved exactly); NULL and NaN are EXCLUDED —
-    greatest(0, null) would otherwise silently clamp them into bin 0
-    and drag every reconstructed quantile toward ``lo``, where
-    percentile/percentile_approx ignore them."""
-    w = (hi - lo) / n_bins
-    raw = F.floor((F.col(value_col) - F.lit(lo)) / F.lit(w)).cast("long")
-    bin_ = F.least(F.lit(n_bins - 1), F.greatest(F.lit(0), raw))
-    return df.where(
-        F.col(value_col).isNotNull() & ~F.isnan(value_col)
-    ).select(F.to_date(ts_col).alias("day"), bin_.alias("bin"))
-
-
 def histogram_rollup(
     events: DataFrame,
     value_col: str = "value",
@@ -74,9 +50,18 @@ def histogram_rollup(
     n_bins: int = 64,
 ) -> DataFrame:
     """Per-day fixed-bin histogram: (day, bin, cnt). Bin width is
-    (hi - lo) / n_bins."""
+    (hi - lo) / n_bins. Values outside [lo, hi) clamp to the edge bins
+    so every NUMERIC row is counted (N over non-null values is
+    preserved exactly); NULL and NaN are EXCLUDED — greatest(0, null)
+    would otherwise silently clamp them into bin 0 and drag every
+    reconstructed quantile toward ``lo``, where
+    percentile/percentile_approx ignore them."""
+    w = (hi - lo) / n_bins
+    raw = F.floor((F.col(value_col) - F.lit(lo)) / F.lit(w)).cast("long")
+    bin_ = F.least(F.lit(n_bins - 1), F.greatest(F.lit(0), raw))
     return (
-        day_bin_cells(events, value_col, ts_col, lo, hi, n_bins)
+        events.where(F.col(value_col).isNotNull() & ~F.isnan(value_col))
+        .select(F.to_date(ts_col).alias("day"), bin_.alias("bin"))
         .groupBy("day", "bin")
         .agg(F.count("*").alias("cnt"))
     )

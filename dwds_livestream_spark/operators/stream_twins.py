@@ -1,13 +1,15 @@
 """Batch twins of streaming stateful semantics, driver-checkable.
 
-Structured Streaming's watermark late-drop and emit-on-change
-deduplication are exercised as STREAMS in tests/test_streaming_windows
-.py / test_streaming_dedup.py, but stream state is not SQL-expressible,
-so the external DuckDB oracle never sees those semantics. These
-operators restate each semantic as a deterministic BATCH plan over an
-explicit arrival order — the same keep/drop decision per row the
-stream would make at row granularity — so the oracle can verify the
-SEMANTICS with window functions (ROADMAP r6: "watermark late-drop
+Structured Streaming's watermark late-drop, emit-on-change
+deduplication and leaky-bucket rate limit are stream semantics, but
+stream state is not SQL-expressible, so the external DuckDB oracle
+never sees them; the emit-on-change and rate-limit STREAMS
+(streaming/stateful.py) are exercised in tests/test_streaming_dedup.py
+and tests/test_streaming_windows.py. These operators restate each
+semantic as a deterministic BATCH plan over an explicit arrival order
+— the same keep/drop decision per row the stream would make at row
+granularity — so the oracle can verify the SEMANTICS with window
+functions (ROADMAP r6: "watermark late-drop
 semantics as a batch window query; session-window twins").
 
 Reference parity note: the reference pipeline drops nothing for
@@ -164,7 +166,7 @@ def rate_limit_twin(
     stragglers differ by design (the stream charges them to the
     CURRENT window — under-admits, never over-admits; see
     rate_limit_stream). Asserted against the live stream in
-    tests/test_streaming_windows.py.
+    tests/test_stream_twins_skyline.py.
 
     Scale: one hash-partitioned window keyed by (key, minute) — the
     partition count is keys x minutes, so no hot partition even for

@@ -299,8 +299,7 @@ def q_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     BEFORE the aggregate, but partial (map-side) combine collapses each
     partition to its local (window, type) counts, so the shuffle
     carries the tiny aggregated key space, not 4x the fact table. The
-    rank partitions by window — bounded cardinality, no skew. Same
-    plan runs on a watermarked stream (streaming/windows.py).
+    rank partitions by window — bounded cardinality, no skew.
     """
     ev = _t(spark, sf_dir, "events")
     counts = ev.groupBy(
@@ -4311,7 +4310,7 @@ def q_rate_limit_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     One keyed window on (user, minute); Spark pushes rn <= 2 into
     WindowGroupLimit. The live stateful form (streaming/stateful.
     rate_limit_stream) is asserted equal on in-order input in
-    tests/test_streaming_windows.py."""
+    tests/test_stream_twins_skyline.py."""
     from ..operators.stream_twins import rate_limit_twin
 
     ev = _t(spark, sf_dir, "events").select(

@@ -1820,7 +1820,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the index is fingerprints-only (16 bytes/doc), so the
     anti-join shuffles hashes, never text; at 100 TB both sides hash-
     partition on fingerprint and the index partitions are reusable
-    across daily shards (bucketed layout, see operators/bucketed.py).
+    across daily shards (bucketed layout).
     """
     from pyspark.sql import Window  # noqa: PLC0415
 

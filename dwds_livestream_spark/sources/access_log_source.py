@@ -25,11 +25,6 @@ from .tail_datasource import TailDataSource
 MAX_FILES_PER_TRIGGER = 16
 
 
-def read_access_log(spark: SparkSession, path: str) -> DataFrame:
-    """S4 — bounded read of raw log lines (column ``value``)."""
-    return spark.read.text(path)
-
-
 def stream_access_log(spark: SparkSession, path: str) -> DataFrame:
     """S1 — unbounded read of raw log lines (column ``value``).
 

@@ -10,12 +10,14 @@ df.count()) but adds:
     scraped per query for job/stage counts and stage time breakdowns,
     so multi-second numbers decompose into "how many sequential jobs x
     stages" instead of guesswork;
-  - optional .explain('formatted') capture to plans/r12/.
+  - optional .explain('formatted') capture to a file (the r12/r13
+    captures are in git at f998491:plans/r12/ and
+    f998491:plans/r13/).
 
 Usage:
   python scripts/profile_bench.py q1 q2 ...      # profile named queries
   python scripts/profile_bench.py --top 15       # slowest 15 from BENCH.out.json
-  python scripts/profile_bench.py q --explain plans/r12/q_before.txt
+  python scripts/profile_bench.py q --explain q_before.txt
 """
 
 from __future__ import annotations

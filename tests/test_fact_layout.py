@@ -2,15 +2,17 @@
 reference's B-tree indexes (ts, lemma, article_source —
 collector/001-…up.sql:10-12) map to partition pruning + parquet min/max
 stats. These tests pin that the written layout actually delivers both
-access paths."""
+access paths, and that the batch ledger (fact_sink.idempotent) skips a
+replayed micro-batch."""
 
 from __future__ import annotations
 
 import datetime as dt
 
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from dwds_livestream_spark.sinks.fact_sink import parquet_writer
+from dwds_livestream_spark.sinks.fact_sink import idempotent, parquet_writer
 
 
 def _sink_rows(spark, n=2000):
@@ -58,63 +60,27 @@ def test_append_batches_accumulate(spark, tmp_path):
     assert spark.read.parquet(path).count() == 200
 
 
-def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
-    from dwds_livestream_spark.sinks.compaction import (
-        compact_fact_table,
-        partition_file_stats,
-    )
-
-    path = str(tmp_path / "fact")
-    w = parquet_writer(path)
-    # 8 micro-batch appends -> many files per date partition
-    for b in range(8):
-        w(_sink_rows(spark, 300), b)
-    before = partition_file_stats(path)
-    assert max(n for n, _ in before.values()) > 4
-    total_before = spark.read.parquet(path).count()
-
-    compacted = compact_fact_table(spark, path, max_files_per_partition=4)
-    assert compacted  # something was fragmented
-
-    after = partition_file_stats(path)
-    assert max(n for n, _ in after.values()) <= 4
-    back = spark.read.parquet(path)
-    assert back.count() == total_before
-    # layout contract survives compaction: pruning + lemma pushdown
-    # id=123 -> hour 51 -> 2024-12-03 03:00 with 300-row batches
-    q = back.where((F.col("date") == "2024-12-03") & (F.col("lemma") == "lemma00123"))
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "EqualTo(lemma,lemma00123)" in plan.split("PushedFilters")[1].splitlines()[0]
-    assert q.count() > 0
+def _batch(spark, rows):
+    return spark.createDataFrame(
+        [Row(ts=ts, lemma=lemma, article_source="s") for ts, lemma in rows]
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def test_zorder_compaction_preserves_rows_and_prunes(spark, tmp_path):
-    """compact_fact_table(zorder_cols=...) keeps the row set and date
-    pruning while clustering files along the Morton curve."""
-    from dwds_livestream_spark.sinks.compaction import (
-        compact_fact_table,
-        partition_file_stats,
-    )
+def test_maintenance_scan_is_partition_pruned(spark, tmp_path):
+    fact = str(tmp_path / "factp")
+    write = parquet_writer(fact)
+    write(_batch(spark, [("2024-12-01 10:00:00", "a"), ("2024-12-02 10:00:00", "b")]), 0)
+    scan = spark.read.parquet(fact).where(F.col("date").isin(["2024-12-02"]))
+    plan = scan._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters" in plan and "date" in plan.split("PartitionFilters")[1][:120]
 
-    path = str(tmp_path / "factz")
-    w = parquet_writer(path)
-    for b in range(8):
-        w(_sink_rows(spark, 300), b)
-    total_before = spark.read.parquet(path).count()
 
-    compacted = compact_fact_table(
-        spark, path, max_files_per_partition=4, zorder_cols=["lemma", "article_date"]
-    )
-    assert compacted
-
-    after = partition_file_stats(path)
-    assert max(n for n, _ in after.values()) <= 4
-    back = spark.read.parquet(path)
-    assert back.count() == total_before
-    assert back.columns == ["ts", "lemma", "article_type", "article_source",
-                            "article_date", "date"]  # __z never persisted
-    plan = (
-        back.where(F.col("date") == "2024-12-03")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "PartitionFilters" in plan
+def test_idempotent_writer_skips_replayed_batch(spark, tmp_path):
+    fact = str(tmp_path / "fact_i")
+    write = idempotent(parquet_writer(fact), str(tmp_path / "ledger"))
+    b = _batch(spark, [("2024-12-01 10:00:00", "a")])
+    write(b, 7)
+    write(b, 7)  # replay after a crash between write and checkpoint
+    assert spark.read.parquet(fact).count() == 1
+    write(b, 8)  # a genuinely new batch still appends
+    assert spark.read.parquet(fact).count() == 2

@@ -1,36 +1,17 @@
-"""Streaming dedup (streaming/dedup.py): re-delivered events are
-dropped within the watermark horizon; state expires past it; batch
-frames get exact-dedup parity."""
+"""Stateful streaming emit-on-change (streaming/stateful.py): a value
+run that crosses micro-batch and restart boundaries is emitted once,
+and the stream agrees with the batch twin on in-order input."""
 
 from __future__ import annotations
 
-import json
 import os
 import time
-
-from dwds_livestream_spark.streaming.dedup import dedup_stream
-
-SCHEMA = "timestamp timestamp, lemma string"
-
-
-def _jsonl(ts: str, lemma: str) -> str:
-    return json.dumps({"timestamp": ts, "lemma": lemma})
 
 
 def _order_files(srcdir):
     now = time.time()
     for i, f in enumerate(sorted(srcdir.iterdir())):
         os.utime(f, (now + i, now + i))
-
-
-def _read_stream(spark, srcdir):
-    return (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", 1)
-        .load(str(srcdir))
-        .selectExpr(f"from_json(value, '{SCHEMA}') AS e")
-        .select("e.timestamp", "e.lemma")
-    )
 
 
 def _run_append(spark, df, tmp_path, name):
@@ -44,68 +25,6 @@ def _run_append(spark, df, tmp_path, name):
     )
     q.awaitTermination(120)
     return [r for batch in batches for r in batch]
-
-
-def test_redelivery_dropped_within_horizon(spark, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    # batch 1: the original delivery
-    (src / "b1.jsonl").write_text(
-        "\n".join(
-            [
-                _jsonl("2024-01-01T10:00:00Z", "haus"),
-                _jsonl("2024-01-01T10:00:05Z", "baum"),
-            ]
-        )
-    )
-    # batch 2: 'haus' re-delivered (at-least-once retry shape) plus a
-    # fresh event — only the fresh one should survive
-    (src / "b2.jsonl").write_text(
-        "\n".join(
-            [
-                _jsonl("2024-01-01T10:00:30Z", "haus"),
-                _jsonl("2024-01-01T10:01:00Z", "tag"),
-            ]
-        )
-    )
-    _order_files(src)
-    rows = _run_append(
-        spark,
-        dedup_stream(_read_stream(spark, src), keys=["lemma"], horizon="10 minutes"),
-        tmp_path,
-        "within",
-    )
-    assert sorted(r["lemma"] for r in rows) == ["baum", "haus", "tag"]
-
-
-def test_duplicate_past_horizon_survives(spark, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "b1.jsonl").write_text(_jsonl("2024-01-01T10:00:00Z", "haus"))
-    # advance the watermark far past the horizon. Eviction uses the
-    # PREVIOUS batch's watermark (two-phase propagation), so the
-    # advance must land two batches before the re-delivery.
-    (src / "b2.jsonl").write_text(_jsonl("2024-01-01T11:00:00Z", "baum"))
-    (src / "b3.jsonl").write_text(_jsonl("2024-01-01T11:00:05Z", "tag"))
-    # same key again, long after state for it expired -> treated as new
-    (src / "b4.jsonl").write_text(_jsonl("2024-01-01T11:00:10Z", "haus"))
-    _order_files(src)
-    rows = _run_append(
-        spark,
-        dedup_stream(_read_stream(spark, src), keys=["lemma"], horizon="5 minutes"),
-        tmp_path,
-        "expire",
-    )
-    assert sorted(r["lemma"] for r in rows) == ["baum", "haus", "haus", "tag"]
-
-
-def test_batch_frame_parity(spark):
-    df = spark.createDataFrame(
-        [("2024-01-01T10:00:00", "haus"), ("2024-01-01T10:00:30", "haus")],
-        ["ts_s", "lemma"],
-    ).selectExpr("cast(ts_s as timestamp) as timestamp", "lemma")
-    out = dedup_stream(df, keys=["lemma"])
-    assert out.count() == 1
 
 
 def test_emit_on_change_stream_matches_batch_twin(spark, tmp_path):

@@ -1,15 +1,12 @@
-"""Event-time windows, session windows, and the cross-batch stateful
-rate limiter (streaming/windows.py, streaming/stateful.py)."""
+"""The cross-batch stateful rate limiter (streaming/stateful.py)."""
 
 from __future__ import annotations
 
-import datetime as dt
 import json
 import os
 import time
 
 from dwds_livestream_spark.streaming.stateful import rate_limit_stream
-from dwds_livestream_spark.streaming.windows import session_windows, windowed_counts
 
 SCHEMA = "timestamp timestamp, lemma string"
 
@@ -36,108 +33,6 @@ def _read_stream(spark, srcdir):
         )
         .select("e.timestamp", "e.lemma")
     )
-
-
-def _run_update(spark, df, tmp_path, name):
-    """Run an update-mode query to completion, collecting every batch's
-    rows via foreachBatch."""
-    batches: list[list] = []
-    q = (
-        df.writeStream.outputMode("update")
-        .foreachBatch(lambda b, i: batches.append(b.collect()))
-        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return batches
-
-
-def test_windowed_counts_and_late_drop(spark, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    # batch 1: two windows' worth of events; max ts 10:05 -> watermark
-    # after batch1 = 10:03
-    (src / "b1.jsonl").write_text(
-        "\n".join(
-            [
-                _jsonl("2024-01-01T10:00:10Z", "a"),
-                _jsonl("2024-01-01T10:00:20Z", "b"),
-                _jsonl("2024-01-01T10:05:00Z", "c"),
-            ]
-        )
-    )
-    # batch 2: an on-time event
-    (src / "b2.jsonl").write_text(_jsonl("2024-01-01T10:05:30Z", "d"))
-    # batch 3: a too-late event. The late-event filter uses the
-    # PREVIOUS batch's watermark (Spark's two-watermark propagation),
-    # so the row must arrive >= 2 batches after the watermark passed it:
-    # wm after b1 = 10:03 -> applied to late events from b3 on.
-    (src / "b3.jsonl").write_text(_jsonl("2024-01-01T09:50:00Z", "LATE"))
-    _order_files(src)
-    out = windowed_counts(
-        _read_stream(spark, src), window="1 minute", watermark="2 minutes"
-    )
-    batches = _run_update(spark, out, tmp_path, "wc")
-    final: dict[dt.datetime, int] = {}
-    for b in batches:
-        for r in b:
-            final[r.window_start] = r.n_events  # update mode: last wins
-
-    t = dt.datetime(2024, 1, 1, 10, 0)
-    assert final[t] == 2
-    assert final[dt.datetime(2024, 1, 1, 10, 5)] == 2
-    assert dt.datetime(2024, 1, 1, 9, 50) not in final  # late row dropped
-
-
-def test_session_windows_merge_across_batches(spark, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    # same lemma, 10-min gap sessions; batch2 extends batch1's session
-    (src / "b1.jsonl").write_text(
-        "\n".join(
-            [
-                _jsonl("2024-01-01T10:00:00Z", "a"),
-                _jsonl("2024-01-01T10:04:00Z", "a"),
-            ]
-        )
-    )
-    (src / "b2.jsonl").write_text(
-        "\n".join(
-            [
-                _jsonl("2024-01-01T10:08:00Z", "a"),  # continues session
-                _jsonl("2024-01-01T11:00:00Z", "a"),  # new session
-            ]
-        )
-    )
-    # sentinel far in the future: pushes the watermark past both
-    # sessions' ends so append mode finalizes them
-    (src / "b3.jsonl").write_text(_jsonl("2024-01-01T12:00:00Z", "zz"))
-    _order_files(src)
-    out = session_windows(
-        _read_stream(spark, src),
-        gap="10 minutes",
-        watermark="1 minute",
-        key_cols=["lemma"],
-    )
-    # session windows support append (finalized-on-watermark), not update
-    collected: list = []
-    q = (
-        out.writeStream.outputMode("append")
-        .foreachBatch(lambda b, i: collected.extend(b.collect()))
-        .option("checkpointLocation", str(tmp_path / "ckpt_sw"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    final = {r.session_start: r for r in collected if r.lemma == "a"}
-    # batch2's 10:08 event merged into batch1's open session: one
-    # finalized session of 3 events, end = last event + gap
-    assert final[dt.datetime(2024, 1, 1, 10, 0)].n_events == 3
-    assert final[dt.datetime(2024, 1, 1, 10, 0)].session_end == dt.datetime(
-        2024, 1, 1, 10, 18
-    )
-    assert final[dt.datetime(2024, 1, 1, 11, 0)].n_events == 1
 
 
 def test_rate_limit_state_spans_batches(spark, tmp_path):
@@ -185,222 +80,6 @@ def test_rate_limit_batch_order_is_event_time(spark):
         rate_limit_stream(
             spark.createDataFrame([], SCHEMA), epm=0
         )
-
-
-def test_stream_stream_join_within_window(spark, tmp_path):
-    """Two file streams joined on key within a 10-minute event-time
-    window (a capability the reference lacks, SURVEY §2.4)."""
-    from dwds_livestream_spark.streaming.joins import stream_stream_join
-
-    la, lb = tmp_path / "a", tmp_path / "b"
-    la.mkdir(); lb.mkdir()
-    (la / "a1.jsonl").write_text(
-        "\n".join([_jsonl("2024-01-01T10:00:00Z", "k1"),
-                   _jsonl("2024-01-01T10:00:00Z", "k2")])
-    )
-    (lb / "b1.jsonl").write_text(
-        "\n".join([
-            _jsonl("2024-01-01T10:05:00Z", "k1"),   # within window -> match
-            _jsonl("2024-01-01T10:20:00Z", "k2"),   # outside window
-            _jsonl("2024-01-01T09:55:00Z", "k1"),   # before left -> no match
-        ])
-    )
-
-    def stream(d):
-        return (
-            spark.readStream.format("text").load(str(d))
-            .selectExpr("from_json(value, 'timestamp timestamp, lemma string') AS e")
-            .select("e.timestamp", "e.lemma")
-        )
-
-    right = stream(lb).withColumnRenamed("timestamp", "r_ts")
-    joined = stream_stream_join(
-        stream(la), right, on="lemma",
-        left_ts="timestamp", right_ts="r_ts", within="10 minutes",
-    )
-    rows: list = []
-    q = (
-        joined.writeStream.outputMode("append")
-        .foreachBatch(lambda b, i: rows.extend(b.collect()))
-        .option("checkpointLocation", str(tmp_path / "ckpt_ssj"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert [(r.lemma, str(r.r_ts)) for r in rows] == [("k1", "2024-01-01 10:05:00")]
-
-
-def test_sliding_windowed_counts_stream(spark, tmp_path):
-    """Sliding windows on a stream: each event lands in window/slide
-    overlapping windows (here 2) — the streaming twin of the batch
-    trending_topk aggregation."""
-    src = tmp_path / "src_slide"
-    src.mkdir()
-    (src / "b1.jsonl").write_text(
-        "\n".join(
-            [
-                _jsonl("2024-12-08T10:00:30Z", "a"),
-                _jsonl("2024-12-08T10:00:45Z", "a"),
-                _jsonl("2024-12-08T10:01:30Z", "b"),
-            ]
-        )
-    )
-    _order_files(src)
-    df = windowed_counts(
-        _read_stream(spark, src),
-        window="2 minutes",
-        slide="1 minute",
-        watermark="1 minute",
-        group_cols=["lemma"],
-    )
-    batches = _run_update(spark, df, tmp_path, "slide")
-    rows = [r for b in batches for r in b]
-    got = {
-        (r.window_start.strftime("%H:%M"), r.lemma): r.n_events for r in rows
-    }
-    # 10:00:30/10:00:45 'a' -> windows starting 09:59 and 10:00;
-    # 10:01:30 'b' -> windows starting 10:00 and 10:01
-    assert got[("09:59", "a")] == 2
-    assert got[("10:00", "a")] == 2
-    assert got[("10:00", "b")] == 1
-    assert got[("10:01", "b")] == 1
-
-
-def test_trending_stream_topk(spark, tmp_path):
-    """End-to-end streaming trending: sliding windowed counts ranked
-    per window in foreachBatch (rank_topk_batch)."""
-    from dwds_livestream_spark.streaming.windows import rank_topk_batch
-
-    src = tmp_path / "src_trend"
-    src.mkdir()
-    (src / "b1.jsonl").write_text(
-        "\n".join(
-            [_jsonl("2024-12-08T10:00:10Z", "a")] * 3
-            + [_jsonl("2024-12-08T10:00:20Z", "b")] * 2
-            + [_jsonl("2024-12-08T10:00:40Z", "c")]
-        )
-    )
-    _order_files(src)
-    counts = windowed_counts(
-        _read_stream(spark, src),
-        window="2 minutes",
-        slide="1 minute",
-        watermark="1 minute",
-        group_cols=["lemma"],
-    )
-    batches: list[list] = []
-    q = (
-        counts.writeStream.outputMode("update")
-        .foreachBatch(rank_topk_batch(2)(lambda b, i: batches.append(b.collect())))
-        .option("checkpointLocation", str(tmp_path / "ckpt_trend"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = [r for b in batches for r in b]
-    top = {
-        (r.window_start.strftime("%H:%M"), r.rnk): (r.lemma, r.n_events)
-        for r in rows
-    }
-    # both windows (09:59, 10:00) hold all 6 events: a=3, b=2, c=1
-    for ws in ("09:59", "10:00"):
-        assert top[(ws, 1)] == ("a", 3)
-        assert top[(ws, 2)] == ("b", 2)
-    assert all(r.rnk <= 2 for r in rows)
-
-
-def test_windowed_distinct_users_stream_and_batch_parity(spark, tmp_path):
-    from dwds_livestream_spark.streaming.windows import windowed_distinct_users
-
-    src = tmp_path / "src_dist"
-    src.mkdir()
-
-    def _ev(ts, uid):
-        return json.dumps({"timestamp": ts, "user_id": uid})
-
-    (src / "b1.jsonl").write_text("\n".join([
-        _ev("2024-01-01T10:00:10Z", 1),
-        _ev("2024-01-01T10:00:20Z", 1),   # dup user in-window
-        _ev("2024-01-01T10:00:30Z", 2),
-        _ev("2024-01-01T10:01:10Z", 3),
-    ]))
-    _order_files(src)
-
-    stream = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", 1)
-        .load(str(src))
-        .selectExpr("from_json(value, 'timestamp timestamp, user_id long') AS e")
-        .select("e.timestamp", "e.user_id")
-    )
-    out = windowed_distinct_users(stream, "1 minute", "2 minutes")
-    batches = _run_update(spark, out, tmp_path, "dist_users")
-    got = {str(r.window_start): r.n_users for b in batches for r in b}
-    # HLL at rsd=5% is exact at these cardinalities
-    assert got == {"2024-01-01 10:00:00": 2, "2024-01-01 10:01:00": 1}
-
-    # batch parity: the same expression on a batch frame, exact twin
-    batch_df = spark.createDataFrame(
-        [(dt.datetime(2024, 1, 1, 10, 0, 10), 1),
-         (dt.datetime(2024, 1, 1, 10, 0, 20), 1),
-         (dt.datetime(2024, 1, 1, 10, 0, 30), 2),
-         (dt.datetime(2024, 1, 1, 10, 1, 10), 3)],
-        "timestamp timestamp, user_id long",
-    )
-    exact = {
-        str(r.window_start): r.n_users
-        for r in windowed_distinct_users(batch_df, "1 minute", exact=True).collect()
-    }
-    assert exact == got
-
-
-def test_stream_stream_left_join_emits_nulls_after_watermark(spark, tmp_path):
-    """LEFT OUTER stream-stream join: matched rows join; an unmatched
-    left row is emitted WITH NULLS once the watermark proves no match
-    can arrive (advanced by a later file-per-trigger batch)."""
-    from dwds_livestream_spark.streaming.joins import stream_stream_left_join
-
-    la, lb = tmp_path / "la", tmp_path / "lb"
-    la.mkdir(); lb.mkdir()
-    (la / "a1.jsonl").write_text(
-        "\n".join([_jsonl("2024-01-01T10:00:00Z", "k1"),
-                   _jsonl("2024-01-01T10:00:00Z", "k2")])
-    )
-    # k1 matches inside the window; k2 never matches. The late batch
-    # (a2/b2) pushes the watermark far past k2's window so its null
-    # row must be evicted and emitted.
-    (lb / "b1.jsonl").write_text(_jsonl("2024-01-01T10:05:00Z", "k1"))
-    (la / "a2.jsonl").write_text(_jsonl("2024-01-01T12:00:00Z", "k9"))
-    (lb / "b2.jsonl").write_text(_jsonl("2024-01-01T12:00:00Z", "k9"))
-
-    def stream(d):
-        return (
-            spark.readStream.format("text")
-            .option("maxFilesPerTrigger", 1)
-            .load(str(d))
-            .selectExpr("from_json(value, 'timestamp timestamp, lemma string') AS e")
-            .select("e.timestamp", "e.lemma")
-        )
-
-    right = stream(lb).withColumnRenamed("timestamp", "r_ts")
-    joined = stream_stream_left_join(
-        stream(la), right, on="lemma",
-        left_ts="timestamp", right_ts="r_ts", within="10 minutes",
-        watermark="1 minute",
-    )
-    rows: list = []
-    q = (
-        joined.writeStream.outputMode("append")
-        .foreachBatch(lambda b, i: rows.extend(b.collect()))
-        .option("checkpointLocation", str(tmp_path / "ckpt_ssloj"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {(r.lemma, None if r.lemma_r is None else r.lemma_r) for r in rows}
-    # k1 matched; k2 emitted with null right side after watermark
-    assert ("k1", "k1") in got
-    assert ("k2", None) in got
 
 
 def test_rate_limit_late_event_does_not_refill_bucket(spark, tmp_path):
