@@ -16,12 +16,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import pandas as pd  # noqa: E402
-
-from pyspark.sql import functions as F  # noqa: E402
-
+from dwds_livestream_spark.measure import jvm_gc_ms, warm_up  # noqa: E402
 from dwds_livestream_spark.plans import QUERIES  # noqa: E402
-from dwds_livestream_spark.plans.io import load_table  # noqa: E402
 from dwds_livestream_spark.session import (  # noqa: E402
     build_session,
     drop_leftover_state,
@@ -70,21 +66,6 @@ class _Heartbeat:
                    default=0.0)
 
 
-def _jvm_gc_ms(spark) -> int | None:
-    """Cumulative driver-JVM GC milliseconds (all collectors). The
-    heartbeat catches HOST stalls; this catches the other slowness the
-    artifact couldn't attribute (r6: 4-8 s first-run spikes with zero
-    heartbeat events — JVM-internal, invisible to a Python thread)."""
-    try:
-        beans = (
-            spark.sparkContext._jvm.java.lang.management.ManagementFactory
-            .getGarbageCollectorMXBeans()
-        )
-        return sum(b.getCollectionTime() for b in beans)
-    except Exception:
-        return None
-
-
 def _historical_timings(sf) -> dict[str, float]:
     """Per-query timings from the previous committed BENCH.out.json —
     the spike-retry baseline (ADVICE r5: don't re-run every
@@ -105,57 +86,44 @@ def _historical_timings(sf) -> dict[str, float]:
         return {}
 
 
+def _timed_run(
+    spark, name: str, sf_dir: str
+) -> tuple[float, float, tuple[float, float], int | None]:
+    """One measured run of query ``name``: build it, then ``count()``.
+    Returns (total_s, setup_s, monotonic window, driver-JVM GC ms or
+    None) and leaves the session cache-cold for the next run."""
+    gc0 = jvm_gc_ms(spark)
+    m0 = time.monotonic()
+    t0 = time.perf_counter()
+    df = QUERIES[name](spark, sf_dir)
+    t1 = time.perf_counter()
+    df.count()
+    total = round(time.perf_counter() - t0, 3)
+    window = (m0, time.monotonic())
+    gc1 = jvm_gc_ms(spark)
+    # Spark's CacheManager matches cached plans structurally, so a
+    # query that .cache()s a table silently accelerates every LATER
+    # query reading the same path — per-query numbers then depend
+    # on registry ORDER (rotating the driver window moved
+    # embedding_covariance ahead of the query that cached
+    # embeddings and its time went 0.4 s -> 2.0 s with untouched
+    # code). Drop leftover caches AND persisted localCheckpoint
+    # blocks (clearCache misses those; accumulated blocks inflated
+    # identical runs up to 13x — session.drop_leftover_state) so
+    # each number attributes to its own plan from a consistent
+    # OS-warm / Spark-state-cold state.
+    drop_leftover_state(spark)
+    gc = gc1 - gc0 if gc0 is not None and gc1 is not None else None
+    return total, t1 - t0, window, gc
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
     spark = build_session(app_name="dwds-livestream-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warmup: JVM/codegen startup and the parquet reader path (footer
-    # decode, vectorized reader classes, OS page cache) must not be
-    # billed to whichever query happens to touch a table first — a
-    # query's number should attribute to its PLAN, not to read order
-    # (the sf1 scale smoke showed warm pagerank_trade at 2.2 s vs
-    # ~10 s when it also paid the cold graph-table reads)
-    spark.range(1000).selectExpr("sum(id)").collect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        # count(*) alone is answered from parquet row-group METADATA
-        # (empty read schema — zero data pages touched), so it warms
-        # nothing: the first query to project a column would still pay
-        # the cold read. count(col) per column forces the vectorized
-        # reader through every column's pages, so the OS page cache is
-        # hot for ALL tables before the first timed query.
-        # load_table, as the queries read: this also fills its schema
-        # memo, so no timed query pays parquet schema inference
-        df = load_table(spark, sf_dir, t)
-        df.agg(*[F.count(F.col(c)) for c in df.columns]).collect()
-
-    # Python-worker / Arrow warmup: the first pandas_udf of the run
-    # pays worker-pool spawn + per-worker numpy import +
-    # ArrowEvalPython init — measured 4.1 s cold vs 0.16 s steady
-    # recompute (same JVM) on the minhash signature kernel. That cost
-    # must bill to the RUN, not to whichever query first leaves the
-    # JVM: in the r9 window minhash_jaccard_error ran directly after
-    # the 7 JVM-only parity queries and absorbed all of it (18.9 s
-    # driver first run vs ~4 s steady — the thrice-confirmed
-    # first-execution-spike pattern, VERDICT r9 #2/#3). One batch per
-    # core slot so the whole reusable worker pool comes up warm.
-    @F.pandas_udf("double")
-    def _warm_py(v: pd.Series) -> pd.Series:
-        import numpy as _np  # noqa: PLC0415  (warm the worker import)
-
-        return pd.Series(_np.asarray(v, dtype="float64") * 1.0)
-
-    (
-        spark.range(100_000)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(_warm_py(F.col("id").cast("double")).alias("x"))
-        .agg(F.sum("x"))
-        .collect()
-    )
+    warm_up(spark, sf_dir)
 
     hb = _Heartbeat().start()
     timings: dict[str, float] = {}
@@ -166,41 +134,28 @@ def main() -> None:
     # of driver-JVM collection time during its window", NOT "GC was not
     # recorded" — the threshold ships in the artifact (VERDICT r6 #6)
     GC_THRESHOLD_MS = 250
-    gc0 = _jvm_gc_ms(spark)
-    for name, fn in QUERIES.items():
-        m0 = time.monotonic()
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        t1 = time.perf_counter()
-        df.count()
-        timings[name] = round(time.perf_counter() - t0, 3)
-        windows[name] = (m0, time.monotonic())
-        gc1 = _jvm_gc_ms(spark)
-        if (
-            gc0 is not None
-            and gc1 is not None
-            and gc1 - gc0 >= GC_THRESHOLD_MS
-        ):
-            gc_ms[name] = gc1 - gc0
-        gc0 = gc1
-        # Spark's CacheManager matches cached plans structurally, so a
-        # query that .cache()s a table silently accelerates every LATER
-        # query reading the same path — per-query numbers then depend
-        # on registry ORDER (rotating the driver window moved
-        # embedding_covariance ahead of the query that cached
-        # embeddings and its time went 0.4 s -> 2.0 s with untouched
-        # code). Drop leftover caches AND persisted localCheckpoint
-        # blocks (clearCache misses those; accumulated blocks inflated
-        # identical runs up to 13x — session.drop_leftover_state) so
-        # each number attributes to its own plan from a consistent
-        # OS-warm / Spark-state-cold state.
-        drop_leftover_state(spark)
+
+    def record(name: str, run: tuple) -> None:
+        """Make ``run`` the reported run of ``name``: its setup and GC
+        entries replace those of an earlier run, so setup_sec stays a
+        subset of the reported total and no gc_ms entry points at a
+        discarded run (ADVICE r6)."""
+        total, setup, window, gc = run
+        timings[name] = total
+        windows[name] = window
         # attribute eager setup (index/artifact builds that run inside
         # the plan function — ann_index_topk's IVF build, BPE training,
         # LM artifact writes) separately from query execution, so a
         # regression in either is attributable (VERDICT r3 #8)
-        if t1 - t0 > 0.25:
-            setup_sec[name] = round(t1 - t0, 3)
+        setup_sec.pop(name, None)
+        if setup > 0.25:
+            setup_sec[name] = round(setup, 3)
+        gc_ms.pop(name, None)
+        if gc is not None and gc >= GC_THRESHOLD_MS:
+            gc_ms[name] = gc
+
+    for name in QUERIES:
+        record(name, _timed_run(spark, name, sf_dir))
 
     # Spike retry: this box shows rare multi-second host stalls that
     # land on an arbitrary query (measured: a 2.3 s query took 15.1 s
@@ -230,37 +185,10 @@ def main() -> None:
         return h is None or t > 1.5 * h
 
     for name in [n for n in timings if retry_worthy(n)]:
-        drop_leftover_state(spark)
-        gc_r0 = _jvm_gc_ms(spark)
-        m0 = time.monotonic()
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, sf_dir)
-        t1 = time.perf_counter()
-        df.count()
-        t2 = round(time.perf_counter() - t0, 3)
-        gc_r1 = _jvm_gc_ms(spark)
-        drop_leftover_state(spark)
-        retried[name] = [timings[name], t2]
-        if t2 < timings[name]:
-            windows[name] = (m0, time.monotonic())
-            # the retry becomes the reported run, so its setup must be
-            # the reported setup too — otherwise setup_sec can exceed
-            # the query total and break the "subset of the total"
-            # contract consumers rely on for build-vs-query attribution
-            timings[name] = t2
-            setup_sec.pop(name, None)
-            if t1 - t0 > 0.25:
-                setup_sec[name] = round(t1 - t0, 3)
-            # likewise gc attribution (ADVICE r6): a gc_ms entry that
-            # describes the DISCARDED first run would point GC blame
-            # at a timing no longer reported
-            gc_ms.pop(name, None)
-            if (
-                gc_r0 is not None
-                and gc_r1 is not None
-                and gc_r1 - gc_r0 >= GC_THRESHOLD_MS
-            ):
-                gc_ms[name] = gc_r1 - gc_r0
+        run = _timed_run(spark, name, sf_dir)
+        retried[name] = [timings[name], run[0]]
+        if run[0] < timings[name]:
+            record(name, run)
 
     total = round(sum(timings.values()), 3)
     # per-query stall attribution: max heartbeat overshoot overlapping
@@ -307,7 +235,7 @@ def main() -> None:
         # "not recorded": gc_recorded says whether sampling worked.
         "gc_ms": gc_ms,
         "gc_threshold_ms": GC_THRESHOLD_MS,
-        "gc_recorded": gc0 is not None,
+        "gc_recorded": jvm_gc_ms(spark) is not None,
     }
     # The query JVM is dead weight from here on: measured (r6), its
     # idle 32 executor threads + 24g heap co-resident with the
@@ -384,32 +312,39 @@ def main() -> None:
     print(line)
 
 
-def _stream_throughput() -> dict | None:
-    """Sustained live-pipeline events/s vs the BASELINE.md 100 ev/s
-    target, measured by scripts/stream_bench.py in a subprocess (own
-    SparkSession; a crash or timeout must not sink the query bench)."""
-    if os.environ.get("SPARK_GRAFT_SKIP_STREAM"):
-        return None
+def _stream_bench(**env: str) -> dict | None:
+    """Run scripts/stream_bench.py in a subprocess (own SparkSession; a
+    crash or timeout must not sink the query bench) with ``env`` over
+    this process's environment; its last JSON line, or None."""
     import subprocess
 
-    env = dict(os.environ)
-    env.setdefault("STREAM_BENCH_SECONDS", "25")
-    env.setdefault("STREAM_BENCH_EPS", "12000")
+    try:
+        out = subprocess.run(
+            [sys.executable,
+             os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                          "scripts", "stream_bench.py")],
+            capture_output=True, text=True, timeout=180,
+            env={**os.environ, **env},
+        ).stdout
+        for line in reversed(out.strip().splitlines()):
+            if line.startswith("{"):
+                return json.loads(line)
+    except Exception:
+        return None
+    return None
+
+
+def _stream_throughput() -> dict | None:
+    """Sustained live-pipeline events/s vs the BASELINE.md 100 ev/s
+    target, measured by scripts/stream_bench.py."""
+    if os.environ.get("SPARK_GRAFT_SKIP_STREAM"):
+        return None
 
     def once() -> dict | None:
-        try:
-            out = subprocess.run(
-                [sys.executable,
-                 os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                              "scripts", "stream_bench.py")],
-                capture_output=True, text=True, timeout=180, env=env,
-            ).stdout
-            for line in reversed(out.strip().splitlines()):
-                if line.startswith("{"):
-                    return json.loads(line)
-        except Exception:
-            return None
-        return None
+        return _stream_bench(
+            STREAM_BENCH_SECONDS=os.environ.get("STREAM_BENCH_SECONDS", "25"),
+            STREAM_BENCH_EPS=os.environ.get("STREAM_BENCH_EPS", "12000"),
+        )
 
     result = once()
     if result is None or not result.get("events"):
@@ -429,9 +364,6 @@ def _stream_latency_at_reference_rate() -> dict | None:
     the real load — this run does."""
     if os.environ.get("SPARK_GRAFT_SKIP_STREAM"):
         return None
-    import subprocess
-
-    env = dict(os.environ)
     # 45 s window: the per-batch profile (r6) shows JIT decay spans the
     # first ~3 batches (826/575/508 ms) before settling at ~330-430 ms;
     # a 25 s run yields ~24 samples whose p95 is the 2nd-largest — i.e.
@@ -439,68 +371,47 @@ def _stream_latency_at_reference_rate() -> dict | None:
     # by pipeline. ~44 samples put the p95 index past the decay tail,
     # so the number reports steady state (what a months-running stream
     # actually delivers) while every batch still counts.
-    env["STREAM_BENCH_SECONDS"] = os.environ.get(
-        "STREAM_BENCH_LATENCY_SECONDS", "45"
-    )
-    env["STREAM_BENCH_EPS"] = "100"
+    seconds = os.environ.get("STREAM_BENCH_LATENCY_SECONDS", "45")
 
     def once() -> dict | None:
-        try:
-            out = subprocess.run(
-                [sys.executable,
-                 os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                              "scripts", "stream_bench.py")],
-                capture_output=True, text=True, timeout=180, env=env,
-            ).stdout
-            for line in reversed(out.strip().splitlines()):
-                if line.startswith("{"):
-                    r = json.loads(line)
-                    lat = r.get("latency") or {}
-                    p95 = lat.get("trigger_to_sink_p95_s")
-                    if p95 is None:
-                        return None
-                    e2e_p95 = lat.get("e2e_p95_latency_s")
-                    return {
-                        "metric": "stream_latency_at_reference_rate",
-                        "rate": 100,
-                        "p95_latency_s": p95,
-                        "mean_latency_s": lat.get(
-                            "trigger_to_sink_mean_s"),
-                        "e2e_p95_latency_s": e2e_p95,
-                        "e2e_mean_latency_s": lat.get(
-                            "e2e_mean_latency_s"),
-                        # e2e decomposition (VERDICT r12 #2): the
-                        # file-discovery share of e2e, so a miss says
-                        # whether the batch got slow or the file sat
-                        # undiscovered (up to one trigger cadence by
-                        # construction, more only when triggers slip)
-                        "e2e_discovery_p95_s": lat.get(
-                            "e2e_discovery_p95_s"),
-                        "e2e_discovery_max_s": lat.get(
-                            "e2e_discovery_max_s"),
-                        # subprocess CPU probe: >=3x slowdowns of a
-                        # calibrated spin — evidences the uniform
-                        # bursty-steal mode the heartbeat cannot see
-                        "cpu_probe": r.get("cpu_probe"),
-                        "files_measured": lat.get("files_measured"),
-                        "target_p95_s": 1.0,
-                        "pass": p95 < 1.0,
-                        # end-to-end gate (VERDICT r6 #5): file-arrival
-                        # -> sink-visibility. Budget 2 s = the 1 s
-                        # trigger-cadence wait an event can queue
-                        # before its micro-batch starts (reference
-                        # polls the tailer every 1000 ms) + the 1 s
-                        # trigger-to-sink budget above; decomposition:
-                        # e2e p95 ~= arrival-to-trigger wait (up to one
-                        # full cadence) + trigger_to_sink p95.
-                        "e2e_target_p95_s": 2.0,
-                        "e2e_pass": (
-                            e2e_p95 is not None and e2e_p95 < 2.0
-                        ),
-                    }
-        except Exception:
+        r = _stream_bench(STREAM_BENCH_SECONDS=seconds, STREAM_BENCH_EPS="100")
+        if r is None:
             return None
-        return None
+        lat = r.get("latency") or {}
+        p95 = lat.get("trigger_to_sink_p95_s")
+        if p95 is None:
+            return None
+        e2e_p95 = lat.get("e2e_p95_latency_s")
+        return {
+            "metric": "stream_latency_at_reference_rate",
+            "rate": 100,
+            "p95_latency_s": p95,
+            "mean_latency_s": lat.get("trigger_to_sink_mean_s"),
+            "e2e_p95_latency_s": e2e_p95,
+            "e2e_mean_latency_s": lat.get("e2e_mean_latency_s"),
+            # e2e decomposition (VERDICT r12 #2): the file-discovery
+            # share of e2e, so a miss says whether the batch got slow
+            # or the file sat undiscovered (up to one trigger cadence
+            # by construction, more only when triggers slip)
+            "e2e_discovery_p95_s": lat.get("e2e_discovery_p95_s"),
+            "e2e_discovery_max_s": lat.get("e2e_discovery_max_s"),
+            # subprocess CPU probe: >=3x slowdowns of a calibrated spin
+            # — evidences the uniform bursty-steal mode the heartbeat
+            # cannot see
+            "cpu_probe": r.get("cpu_probe"),
+            "files_measured": lat.get("files_measured"),
+            "target_p95_s": 1.0,
+            "pass": p95 < 1.0,
+            # end-to-end gate (VERDICT r6 #5): file-arrival ->
+            # sink-visibility. Budget 2 s = the 1 s trigger-cadence
+            # wait an event can queue before its micro-batch starts
+            # (reference polls the tailer every 1000 ms) + the 1 s
+            # trigger-to-sink budget above; decomposition: e2e p95 ~=
+            # arrival-to-trigger wait (up to one full cadence) +
+            # trigger_to_sink p95.
+            "e2e_target_p95_s": 2.0,
+            "e2e_pass": e2e_p95 is not None and e2e_p95 < 2.0,
+        }
 
     # Since round 6 this measurement runs BEFORE the 120x-overload
     # throughput run (VERDICT r5 #4), so the only legitimate reason

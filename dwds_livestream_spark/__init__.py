@@ -20,7 +20,7 @@ Layout
                  similarity search, analytics, multimodal plumbing)
 - ``sources``    batch + streaming sources (live access-log file or dir,
                  JSONL dir or HTTP long-poll, dimension)
-- ``sinks``      foreachBatch JDBC-style sink, JSONL/SSE framing, sampling
+- ``sinks``      foreachBatch JDBC-style sink, JSONL/SSE serving
 - ``streaming``  end-to-end streaming pipelines + metrics listener
 - ``plans``      the query library exposed through __spark_entry__.py
 """

@@ -1,13 +1,13 @@
 """Engine configuration — mirrors the reference's env.clj constants.
 
-Every operational constant from BASELINE.md lives here so the engine's
-behavior is tunable the same way the reference's env vars were
+The BASELINE.md operational constants that the engine reads live here,
+so its behavior is tunable the same way the reference's env vars were
 (reference: src/dwds/livestream/env.clj:1-56).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -18,22 +18,13 @@ class EngineConfig:
     sink_batch_size: int = 128
     # Lemma length cap (collector.clj:87, VARCHAR(128)).
     max_lemma_len: int = 128
-    # Dimension refresh (wbdb.clj:63-66: every 12 h anchored 02:00).
-    dimension_refresh_hours: int = 12
     # JDBC fetch size for dimension scans (wbdb.clj:36).
     jdbc_fetch_size: int = 1024
-    # Default subscriber sampling (viz.cljs:6-7: 45 events/minute).
-    default_epm: int = 45
-    # Collector admission bound (collector.clj:127-128: 8192 sliding
-    # buffer). Maps to maxFilesPerTrigger / maxOffsetsPerTrigger.
-    max_events_per_trigger: int = 8192
     # Driver-side fan-out guard (VERDICT r1 #5): max rows one
     # micro-batch may collect() for hub publishing. Bounds driver
     # memory independently of batch size; 64k JSON lines ≈ tens of MB.
     max_publish_rows: int = 65_536
-    # Retry/backoff (collector.clj:53, :105).
-    source_retry_base_ms: int = 3_000
-    source_retry_cap_ms: int = 60_000
+    # Sink retry/backoff (collector.clj:105).
     sink_retry_base_ms: int = 1_000
     sink_retry_cap_ms: int = 20_000
     # Legacy sub-dictionary path segments excluded by sub-wb?
@@ -46,7 +37,6 @@ class EngineConfig:
         "index",
         "Wörterbuch",
     )
-    extra: dict = field(default_factory=dict)
 
 
 DEFAULT_CONFIG = EngineConfig()

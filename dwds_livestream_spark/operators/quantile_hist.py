@@ -13,15 +13,15 @@ histogram is *deterministic arithmetic* — bin assignment, merge, and
 the interpolated quantile reconstruction are all reproducible in ANSI
 SQL, so the registry entry carries a full DuckDB value-hash oracle.
 
-- ``histogram_rollup``: one groupBy(day, bin) pass -> (day, bin, cnt).
-  Out-of-domain values clamp into the edge bins (the standard
-  fixed-domain trade-off; pick [lo, hi) from domain knowledge or a
-  prior profile scan).
-- ``range_quantiles``: merge a date slice (sum bins), then reconstruct
-  quantiles by linear interpolation inside the covering bin. Rank
-  convention: the q-quantile is the value at 1-based rank
-  ceil(q * N) of the sorted multiset, located by the first bin whose
-  cumulative count reaches that rank.
+- ``histogram_rollup``: one groupBy([key,] day, bin) pass -> ([key,]
+  day, bin, cnt). Out-of-domain values clamp into the edge bins (the
+  standard fixed-domain trade-off; pick [lo, hi) from domain knowledge
+  or a prior profile scan).
+- ``range_quantiles``: merge a date slice (sum bins, per key for a
+  keyed rollup), then reconstruct quantiles by linear interpolation
+  inside the covering bin. Rank convention: the q-quantile is the
+  value at 1-based rank ceil(q * N) of the sorted multiset, located by
+  the first bin whose cumulative count reaches that rank.
 
 Error bound: an interpolated quantile is off by at most one bin width
 (exact if values were uniform within the bin) — gated against exact
@@ -43,28 +43,33 @@ from ..localrel import local_df
 
 def histogram_rollup(
     events: DataFrame,
+    key_col: str | None = None,
     value_col: str = "value",
     ts_col: str = "ts",
     lo: float = 0.0,
     hi: float = 512.0,
     n_bins: int = 64,
 ) -> DataFrame:
-    """Per-day fixed-bin histogram: (day, bin, cnt). Bin width is
-    (hi - lo) / n_bins. Values outside [lo, hi) clamp to the edge bins
-    so every NUMERIC row is counted (N over non-null values is
-    preserved exactly); NULL and NaN are EXCLUDED — greatest(0, null)
-    would otherwise silently clamp them into bin 0 and drag every
-    reconstructed quantile toward ``lo``, where
+    """Per-day fixed-bin histogram: (day, bin, cnt), or with
+    ``key_col`` the keyed rollup (key, day, bin, cnt) — per-segment
+    percentile state (per event type, per tenant, per endpoint) in the
+    same ONE map-side-combined aggregate; the keyed artifact is |keys|
+    x |days| x n_bins rows.
+
+    Bin width is (hi - lo) / n_bins. Values outside [lo, hi) clamp to
+    the edge bins so every NUMERIC row is counted (N over non-null
+    values is preserved exactly); NULL and NaN are EXCLUDED —
+    greatest(0, null) would otherwise silently clamp them into bin 0
+    and drag every reconstructed quantile toward ``lo``, where
     percentile/percentile_approx ignore them."""
     w = (hi - lo) / n_bins
     raw = F.floor((F.col(value_col) - F.lit(lo)) / F.lit(w)).cast("long")
     bin_ = F.least(F.lit(n_bins - 1), F.greatest(F.lit(0), raw))
-    return (
-        events.where(F.col(value_col).isNotNull() & ~F.isnan(value_col))
-        .select(F.to_date(ts_col).alias("day"), bin_.alias("bin"))
-        .groupBy("day", "bin")
-        .agg(F.count("*").alias("cnt"))
-    )
+    key = [F.col(key_col).alias("key")] if key_col else []
+    cells = events.where(
+        F.col(value_col).isNotNull() & ~F.isnan(value_col)
+    ).select(*key, F.to_date(ts_col).alias("day"), bin_.alias("bin"))
+    return cells.groupBy(*cells.columns).agg(F.count("*").alias("cnt"))
 
 
 def range_quantiles(
@@ -77,24 +82,29 @@ def range_quantiles(
     n_bins: int = 64,
 ) -> DataFrame:
     """Approximate quantiles for days in [start, end], computed ONLY
-    from the persisted histogram rows: (q, est). Merge = bin-wise sum;
-    the window runs over <= n_bins merged rows (bounded by
-    construction, not by the data — whitelisted in the plan sweep)."""
+    from the persisted histogram rows: (q, est), or (key, q, est) from
+    a keyed rollup. Merge = bin-wise sum. The global form's window runs
+    over <= n_bins merged rows (bounded by construction, not by the
+    data — whitelisted in the plan sweep); the keyed form's windows
+    partition BY KEY, so no stage is single-partition at any key
+    cardinality."""
+    keys = ["key"] if "key" in hist.columns else []
     w = (hi - lo) / n_bins
     merged = (
         hist.where(F.col("day").between(F.lit(start), F.lit(end)))
-        .groupBy("bin")
+        .groupBy(*keys, "bin")
         .agg(F.sum("cnt").alias("cnt"))
     )
-    cum_w = Window.orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
+    by_bin = Window.partitionBy(*keys).orderBy("bin")
     cum = merged.select(
+        *keys,
         "bin",
         "cnt",
-        F.sum("cnt").over(cum_w).alias("cum"),
         F.sum("cnt").over(
-            Window.orderBy("bin").rangeBetween(
+            by_bin.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ).alias("cum"),
+        F.sum("cnt").over(
+            by_bin.rangeBetween(
                 Window.unboundedPreceding, Window.unboundedFollowing
             )
         ).alias("n"),
@@ -117,91 +127,15 @@ def range_quantiles(
             / F.col("cnt")
         )
     )
-    return ranked.select("q", F.round(est, 6).alias("est")).orderBy("q")
-
-
-def histogram_rollup_by(
-    events: DataFrame,
-    key_col: str,
-    value_col: str = "value",
-    ts_col: str = "ts",
-    lo: float = 0.0,
-    hi: float = 512.0,
-    n_bins: int = 64,
-) -> DataFrame:
-    """Keyed rollup: (key, day, bin, cnt) — per-segment percentile
-    state (per event type, per tenant, per endpoint). Still ONE
-    map-side-combined aggregate; the artifact is |keys| x |days| x
-    n_bins rows. Same binning rule (and null/NaN exclusion) as the
-    global rollup."""
-    w = (hi - lo) / n_bins
-    raw = F.floor((F.col(value_col) - F.lit(lo)) / F.lit(w)).cast("long")
-    bin_ = F.least(F.lit(n_bins - 1), F.greatest(F.lit(0), raw))
-    return (
-        events.where(
-            F.col(value_col).isNotNull() & ~F.isnan(value_col)
-        )
-        .select(
-            F.col(key_col).alias("key"),
-            F.to_date(ts_col).alias("day"),
-            bin_.alias("bin"),
-        )
-        .groupBy("key", "day", "bin")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-def range_quantiles_by(
-    hist: DataFrame,
-    start: str,
-    end: str,
-    qs: tuple[float, ...] = (0.5, 0.9, 0.99),
-    lo: float = 0.0,
-    hi: float = 512.0,
-    n_bins: int = 64,
-) -> DataFrame:
-    """Per-key quantiles for days in [start, end] from the keyed
-    rollup: (key, q, est). Unlike the global variant, every window
-    here partitions BY KEY — no single-partition stage at any key
-    cardinality (the plan the global form only approximates via its
-    bounded-64-row whitelist)."""
-    w = (hi - lo) / n_bins
-    merged = (
-        hist.where(F.col("day").between(F.lit(start), F.lit(end)))
-        .groupBy("key", "bin")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    cum_w = Window.partitionBy("key").orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    tot_w = Window.partitionBy("key")
-    cum = merged.select(
-        "key",
-        "bin",
-        "cnt",
-        F.sum("cnt").over(cum_w).alias("cum"),
-        F.sum("cnt").over(tot_w).alias("n"),
-    ).withColumn("cum_before", F.col("cum") - F.col("cnt"))
-    q_df = local_df(
-        hist.sparkSession, [(float(q),) for q in qs], "q double"
-    )
-    ranked = cum.join(
-        F.broadcast(q_df),
-        (F.ceil(F.col("q") * F.col("n")) > F.col("cum_before"))
-        & (F.ceil(F.col("q") * F.col("n")) <= F.col("cum")),
-    )
-    est = (
-        F.lit(lo)
-        + F.lit(w)
-        * (
-            F.col("bin")
-            + (F.ceil(F.col("q") * F.col("n")) - F.col("cum_before"))
-            / F.col("cnt")
-        )
-    )
     return ranked.select(
-        "key", "q", F.round(est, 6).alias("est")
-    ).orderBy("key", "q")
+        *keys, "q", F.round(est, 6).alias("est")
+    ).orderBy(*keys, "q")
+
+
+# the keyed spellings: the same functions, keyed by their second argument
+# (histogram_rollup) or by the rollup's ``key`` column (range_quantiles)
+histogram_rollup_by = histogram_rollup
+range_quantiles_by = range_quantiles
 
 
 def logbucket_quantiles(

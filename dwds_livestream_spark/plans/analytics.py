@@ -3485,20 +3485,17 @@ FROM det d JOIN seas s ON d.event_type = s.event_type AND d.dow = s.dow
 
 def q_quantile_rollup_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type range percentiles from the KEYED histogram
-    rollup (operators/quantile_hist.py histogram_rollup_by /
-    range_quantiles_by) — per-segment p50/p90/p99, the grouped form of
-    ``quantile_rollup``. Every window partitions BY KEY, so unlike the
-    global variant no stage is single-partition at any key
-    cardinality; the quantile join stays a broadcast of the 3-row
-    q-list.
+    rollup (operators/quantile_hist.py histogram_rollup keyed by
+    event_type, then range_quantiles) — per-segment p50/p90/p99, the
+    grouped form of ``quantile_rollup``. Every window partitions BY
+    KEY, so unlike the global variant no stage is single-partition at
+    any key cardinality; the quantile join stays a broadcast of the
+    3-row q-list.
     """
-    from ..operators.quantile_hist import (
-        histogram_rollup_by,
-        range_quantiles_by,
-    )
+    from ..operators.quantile_hist import histogram_rollup, range_quantiles
 
-    hist = histogram_rollup_by(_t(spark, sf_dir, "events"), "event_type")
-    return range_quantiles_by(hist, "2024-01-08", "2024-01-22")
+    hist = histogram_rollup(_t(spark, sf_dir, "events"), "event_type")
+    return range_quantiles(hist, "2024-01-08", "2024-01-22")
 
 
 ORACLE_QUANTILE_ROLLUP_BY_TYPE = """

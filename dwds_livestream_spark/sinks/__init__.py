@@ -1,2 +1,2 @@
 """Sinks (SURVEY.md §2.7): micro-batched fact-table sink (K4/K5),
-JSONL/SSE wire framing (K2/K3), per-subscriber sampling (W4)."""
+JSONL/SSE serving (K2/K3) with each client's ``?epm=N`` (W4)."""

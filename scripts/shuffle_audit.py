@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dwds_livestream_spark.session import build_session  # noqa: E402
 from dwds_livestream_spark.plans.registry import QUERIES  # noqa: E402
-from dwds_livestream_spark.shuffle_metrics import measure_execution  # noqa: E402
+from dwds_livestream_spark.measure import measure_execution  # noqa: E402
 
 # query -> the scale claim being measured (kept next to the numbers in
 # the generated report so each row is an auditable statement)
@@ -456,11 +456,6 @@ AUDITS: dict[str, str] = {
     ),
 }
 
-def audit_one(spark, name: str, sf_dir: str) -> dict:
-    r = measure_execution(spark, lambda: QUERIES[name](spark, sf_dir))
-    return {"query": name, **r}
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
@@ -474,7 +469,8 @@ def main() -> int:
     rows = []
     for name in names:
         spark.catalog.clearCache()
-        r = audit_one(spark, name, args.sf_dir)
+        r = {"query": name, **measure_execution(
+            spark, lambda: QUERIES[name](spark, args.sf_dir))}
         rows.append(r)
         print(
             f"{name:22s} scan={r['scan_rows']:>10,}  "

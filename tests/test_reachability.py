@@ -20,7 +20,7 @@ KEPT_UNREACHED = {
     f"{PACKAGE}.streaming.stateful": (
         "reference streaming implementation the registry twins are "
         "compared against (test_stream_twins_skyline, "
-        "test_streaming_windows); sinks/sampling.py points users to it"
+        "test_streaming_windows)"
     ),
     f"{PACKAGE}.streaming.metrics": (
         "ThroughputListener, the micro-batch metrics listener that "

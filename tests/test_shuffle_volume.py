@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 
 from dwds_livestream_spark.plans.registry import QUERIES
-from dwds_livestream_spark.shuffle_metrics import measure_execution
+from dwds_livestream_spark.measure import measure_execution
 
 # Slow tier (pytest.ini): full-registry sweep / hypothesis suite —
 # deselected from the default driver-budget run, in the release gate.
@@ -20,7 +20,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_metric_string_parsers():
-    from dwds_livestream_spark.shuffle_metrics import (
+    from dwds_livestream_spark.measure import (
         parse_metric_bytes,
         parse_metric_count,
     )
@@ -37,6 +37,31 @@ def test_metric_string_parsers():
     assert parse_metric_count("1,040,695") == 1040695
     assert parse_metric_count("400 (100, 100, 100)") == 400
     assert parse_metric_count("") == 0
+
+
+def test_job_reader_counts_jobs_outside_sql_executions(spark):
+    """The status-store job reader sees an eager localCheckpoint's job,
+    which runs outside any SQL execution, and the aggregation's map and
+    result stages after it — with the UI off, as every session here
+    runs."""
+    from pyspark.sql import functions as F
+
+    from dwds_livestream_spark.measure import jobs_since, last_job_id
+
+    assert spark.conf.get("spark.ui.enabled") == "false"
+    before = last_job_id(spark)
+    pinned = spark.range(0, 1000, numPartitions=4).localCheckpoint(eager=True)
+    mid = last_job_id(spark)
+    ckpt = jobs_since(spark, before)
+    assert [(j["job"], j["stages"], j["tasks"]) for j in ckpt] == [(mid, 1, 4)]
+
+    pinned.groupBy((F.col("id") % 7).alias("k")).count().collect()
+    agg = jobs_since(spark, mid)
+    assert [j["job"] for j in agg] == list(range(mid + 1, mid + 1 + len(agg)))
+    assert agg and all(j["dur_ms"] is not None for j in agg), agg
+    # the shuffle-map stage, then the result stage (a result job lists
+    # the map stage it reuses among its stage ids)
+    assert sum(j["stages"] for j in agg) >= 2, agg
 
 
 def _measure(spark, name):

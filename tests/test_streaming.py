@@ -1,6 +1,5 @@
 """Structured Streaming parity tests (SURVEY.md §3): live pipeline,
-collector persistence with exactly-once restart, epm sampling, metrics
-listener."""
+collector persistence with exactly-once restart, metrics listener."""
 
 from __future__ import annotations
 
@@ -17,9 +16,8 @@ from dwds_livestream_spark.functions.access_log import access_log_to_events
 from dwds_livestream_spark.operators.enrich import enrich
 from dwds_livestream_spark.functions.encode import to_json_events
 from dwds_livestream_spark.operators.dedup_dim import dedup_dimension
-from dwds_livestream_spark.schemas import DIMENSION, ENRICHED_EVENT
+from dwds_livestream_spark.schemas import DIMENSION
 from dwds_livestream_spark.sinks.fact_sink import parquet_writer, start_fact_sink
-from dwds_livestream_spark.sinks.sampling import sample_epm
 from dwds_livestream_spark.sources.dimension import dimension_lookup
 from dwds_livestream_spark.streaming.metrics import ThroughputListener
 from dwds_livestream_spark.streaming.pipeline import collector_stream, start_live_server
@@ -78,7 +76,7 @@ PARITY_PATHS = ["obskur", "unknown", "Band", "leer", "Zitat%22x", "back%5Cslash"
                 "zwei%0AZeilen", "M%C3%BC%C3%9Figg%C3%A4nger"]
 
 
-def _run_live(spark, logdir, ckpt, lookup, epm=None) -> list[str]:
+def _run_live(spark, logdir, ckpt, lookup) -> list[str]:
     published: list[str] = []
     q = start_live_server(
         spark,
@@ -87,7 +85,6 @@ def _run_live(spark, logdir, ckpt, lookup, epm=None) -> list[str]:
         checkpoint=str(ckpt),
         publish=lambda lines, bid: published.extend(lines),
         trigger={"availableNow": True},
-        epm=epm,
     )
     q.awaitTermination(60)
     return published
@@ -123,12 +120,6 @@ def test_live_pipeline_end_to_end(spark, tmp_path, raw_dim, dim):
     from_raw = _run_live(spark, logdir, tmp_path / "ckpt_raw",
                          dimension_lookup(raw_dim))
     assert sorted(r.value for r in batch.collect()) == sorted(from_raw)
-
-    # the same with engine-side epm sampling: 3 newest of the minute
-    sampled = _run_live(spark, logdir, tmp_path / "ckpt_epm", lookup, epm=3)
-    batch = to_json_events(sample_epm(enrich(events_df, dim), 3))
-    assert len(sampled) == 3
-    assert sorted(r.value for r in batch.collect()) == sorted(sampled)
 
 
 def test_dimension_refresh_mid_stream(spark, tmp_path, monkeypatch):
@@ -240,32 +231,6 @@ def test_collector_exactly_once_restart(spark, tmp_path):
     r = {x.lemma: x for x in rows}["Band#1"]
     assert r.ts == dt.datetime(2024, 12, 8, 23, 0, 18)
     assert r.article_date == dt.date(1974, 1, 1)
-
-
-def test_sample_epm_newest_wins(spark):
-    base = dt.datetime(2024, 12, 8, 23, 0, 0)
-    rows = [
-        Row(timestamp=base + dt.timedelta(seconds=i), lemma=f"l{i}", hidx=None,
-            lemma_type=None, form_type=None, article_type=None, source=None,
-            date=None)
-        for i in range(50)
-    ]
-    df = spark.createDataFrame(rows, ENRICHED_EVENT)
-    out = sample_epm(df, epm=10, ts_col="timestamp")
-    kept = sorted(r.lemma for r in out.collect())
-    # all 50 in one minute -> keep the 10 newest (drop-oldest conflation)
-    assert kept == sorted(f"l{i}" for i in range(40, 50))
-
-    with pytest.raises(ValueError):
-        sample_epm(df, epm=0)
-
-    # the transformation-shaped streaming variant is an intentional
-    # capability gate (VERDICT r7 nit): the real forms are foreachBatch
-    # sample_epm, rate_limit_stateful, and the per-subscriber hub limit
-    from dwds_livestream_spark.sinks.sampling import sample_epm_streaming
-
-    with pytest.raises(NotImplementedError, match="foreachBatch"):
-        sample_epm_streaming(df, epm=10)
 
 
 def test_throughput_listener(spark, tmp_path, dim):
