@@ -133,40 +133,31 @@ def to_edn_events(df: DataFrame) -> DataFrame:
 def from_json_events(
     df: DataFrame,
     column: str = "value",
-    drop_malformed: bool = True,
-    observe: bool = False,
 ) -> DataFrame:
     """P11 — JSONL lines -> typed enriched-event rows
     (collector.clj:32-34, 65) with the P9 casts applied.
 
-    ``drop_malformed`` extends the reference's F7 malformed-line guard
-    (access_log.clj:80,92-93) to the JSONL path: unparseable lines
+    The reference's F7 malformed-line guard (access_log.clj:80,92-93)
+    extends to the JSONL path: unparseable lines
     (``from_json`` -> null struct) and records missing the required
     timestamp/lemma are dropped instead of flowing on as all-null rows
     — at 100 TB one poisoned upstream file must not null-pollute the
     fact table or crash the collector (the reference would hit the
     exception-retry loop, collector.clj:48-53)."""
     parsed = df.select(F.from_json(F.col(column), ENRICHED_EVENT_WIRE).alias("e"))
-    if observe:
-        # named observation surfaced in every progress event
-        # (observedMetrics.parse) — the drop is counted, never silent;
-        # ThroughputListener accumulates it (streaming/metrics.py)
-        bad = (
-            F.col("e").isNull()
-            | F.col("e.timestamp").isNull()
-            | F.col("e.lemma").isNull()
-        )
-        parsed = parsed.observe(
-            "parse",
-            F.count(F.when(bad, 1)).alias("n_malformed"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    if drop_malformed:
-        parsed = parsed.where(
-            F.col("e").isNotNull()
-            & F.col("e.timestamp").isNotNull()
-            & F.col("e.lemma").isNotNull()
-        )
+    bad = (
+        F.col("e").isNull()
+        | F.col("e.timestamp").isNull()
+        | F.col("e.lemma").isNull()
+    )
+    # named observation surfaced in every streaming progress event
+    # (observedMetrics.parse) — the drop is counted, never silent;
+    # ThroughputListener accumulates it (streaming/metrics.py)
+    parsed = parsed.observe(
+        "parse",
+        F.count(F.when(bad, 1)).alias("n_malformed"),
+        F.count(F.lit(1)).alias("n_lines"),
+    ).where(~bad)
     return parsed.select(
         F.to_timestamp("e.timestamp").alias("timestamp"),
         F.col("e.lemma").alias("lemma"),
@@ -179,9 +170,7 @@ def from_json_events(
     )
 
 
-def events_to_sink_rows(
-    df: DataFrame, max_lemma_len: int = DEFAULT_CONFIG.max_lemma_len
-) -> DataFrame:
+def events_to_sink_rows(df: DataFrame) -> DataFrame:
     """P8+P9+F6 — enriched events -> persisted fact rows
     (event->db, collector.clj:82-88)."""
     encoded = encode_lemma_hidx(F.col("lemma"), F.col("hidx"))
@@ -193,5 +182,5 @@ def events_to_sink_rows(
             F.col("source").alias("article_source"),
             F.col("date").alias("article_date"),
         )
-        .where(F.length("lemma") < max_lemma_len)  # F6
+        .where(F.length("lemma") < DEFAULT_CONFIG.max_lemma_len)  # F6
     )

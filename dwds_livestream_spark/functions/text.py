@@ -185,7 +185,6 @@ def winnowing_fingerprints(
     id_col: str = "doc_id",
     k: int = 5,
     window: int = 4,
-    hash_fn: str = "murmur3",
 ) -> DataFrame:
     """Winnowing (rolling-hash) fingerprints: hash every k-gram, then
     keep the minimum hash of each sliding window of ``window``
@@ -193,26 +192,15 @@ def winnowing_fingerprints(
     k-gram hashing and window minima via higher-order array functions;
     output exploded (id, fp) for inverted-index overlap joins.
 
-    ``hash_fn`` picks the k-gram hash: ``murmur3`` (Spark's F.hash,
-    int fp — the cheap scale default) or ``md5_32`` (first 8 hex chars
-    of md5 as a string fp — engine-independent, so the result is
-    reproducible outside Spark; lexicographic min over fixed-width
-    lowercase hex equals numeric min, so the winnowing semantics are
-    identical). Selected positions agree between the two variants only
-    by chance — the variant choice is part of the fingerprint identity.
+    The k-gram hash is ``md5_32``: the first 8 hex chars of md5 as a
+    string fp — engine-independent, so the result is reproducible
+    outside Spark; lexicographic min over fixed-width lowercase hex
+    equals numeric min, so the window minima are the winnowing ones.
 
     Each intermediate array is materialized as its own projection —
     inlining ``grams`` into the window-minimum lambda makes Spark
     re-evaluate the whole k-gram array per window element (O(n²·k) per
     document; measured 150x slower at sf0.1)."""
-    if hash_fn == "murmur3":
-        gram_hash = lambda s: F.hash(s)  # noqa: E731
-        empty_t = "array<int>"
-    elif hash_fn == "md5_32":
-        gram_hash = lambda s: F.substring(F.md5(s), 1, 8)  # noqa: E731
-        empty_t = "array<string>"
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
     out = (
         df.withColumn("__toks", tokens(F.col(text_col)))
         .withColumn(
@@ -227,11 +215,11 @@ def winnowing_fingerprints(
                     F.sequence(
                         F.lit(1), F.size("__toks") - (k - 1)
                     ),
-                    lambda i: gram_hash(
-                        F.array_join(F.slice("__toks", i, k), " ")
+                    lambda i: F.substring(
+                        F.md5(F.array_join(F.slice("__toks", i, k), " ")), 1, 8
                     ),
                 ),
-            ).otherwise(F.array().cast(empty_t)),
+            ).otherwise(F.array().cast("array<string>")),
         )
         .withColumn(
             "__wmins",
@@ -243,7 +231,7 @@ def winnowing_fingerprints(
                     ),
                     lambda i: F.array_min(F.slice("__grams", i, window)),
                 ),
-            ).otherwise(F.array().cast(empty_t)),
+            ).otherwise(F.array().cast("array<string>")),
         )
     )
     return out.select(

@@ -19,10 +19,6 @@ index once and makes every later probe a pruned scan:
   PartitionFilters in the scan node, asserted by the tests. Scoring is
   an equi-join on cell (queries broadcast) + pairwise cosine + per-
   query top-k window: shuffle O(candidates), never O(corpus).
-- ``ivf_index_append``: assign new vectors against the SAME persisted
-  centroids and append their cells — incremental ingest without
-  retraining (the standard IVF trade-off: cells drift as the
-  distribution moves; re-run ivf_index_write to re-center).
 
 The quantizer, assignment, and scoring are shared with
 ``similarity.ivf_topk``, so an index built with identical parameters
@@ -87,30 +83,6 @@ def ivf_index_write(
 def _load_centroids(spark: SparkSession, path: str) -> np.ndarray:
     rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
     return np.stack([np.asarray(r.centroid, dtype=np.float64) for r in rows])
-
-
-def ivf_index_append(
-    spark: SparkSession,
-    path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Assign ``new_vectors`` against the persisted centroids and
-    append — incremental ingest, no retraining, no read of the
-    existing vectors."""
-    cent = _load_centroids(spark, path)
-    assign = _assign_centroids_udf(cent, nprobe=1)
-    (
-        new_vectors.select(
-            F.col(id_col).alias("vec_id"),
-            _as_double(vec_col).alias("embedding"),
-        )
-        .withColumn("cell", F.element_at(assign(F.col("embedding")), 1))
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(f"{path}/vectors")
-    )
 
 
 def ivf_index_query(

@@ -101,53 +101,3 @@ def bpe_train(
         rules.append((a, b, cnt))
         vocab = _merge_pair(vocab, a, b).localCheckpoint()
     return rules
-
-
-def bpe_segment(
-    df: DataFrame,
-    rules: list[tuple[str, str, int]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Apply learned rules to segment documents: doc_id, n_tokens,
-    tokens (the per-word symbol arrays flattened, END markers kept).
-    Map-only given the (driver-small) rule list."""
-    chars = lambda w: F.split(w, "")  # noqa: E731
-    doc_words = df.select(
-        F.col(id_col), tokens(F.lower(F.col(text_col))).alias("ws")
-    )
-    sym = F.transform(
-        F.col("ws"),
-        lambda w: F.concat(
-            F.slice(chars(w), 1, F.greatest(F.size(chars(w)) - 1, F.lit(0))),
-            F.array(F.concat(F.element_at(chars(w), -1), F.lit(END))),
-        ),
-    )
-    out = doc_words.select(id_col, sym.alias("wsyms"))
-    for a, b, _ in rules:
-        merged = F.lit(a + b)
-        out = out.select(
-            id_col,
-            F.transform(
-                F.col("wsyms"),
-                lambda syms: F.aggregate(
-                    syms,
-                    F.array().cast("array<string>"),
-                    lambda acc, x: F.when(
-                        (F.size(acc) > 0)
-                        & (F.element_at(acc, -1) == F.lit(a))
-                        & (x == F.lit(b)),
-                        F.concat(
-                            F.slice(acc, 1, F.size(acc) - 1),
-                            F.array(merged),
-                        ),
-                    ).otherwise(F.concat(acc, F.array(x))),
-                ),
-            ).alias("wsyms"),
-        )
-    flat = F.flatten(F.col("wsyms"))
-    return out.select(
-        id_col,
-        F.size(flat).cast("int").alias("n_tokens"),
-        flat.alias("tokens"),
-    )

@@ -21,7 +21,7 @@ Scale design notes (100 TB corpus, 1000 executors):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
@@ -549,23 +549,6 @@ def weighted_sample_per_key(
         )
         .withColumn("rank", F.row_number().over(w).cast("int"))
         .where(F.col("rank") <= k)
-    )
-
-
-def curriculum_shards(
-    df: DataFrame, order_col: str, n_shards: int = 8
-) -> DataFrame:
-    """Globally ordered shards WITHOUT a global sort: repartitionByRange
-    samples range bounds (one small sampling job), every task then sorts
-    only its own slice — shard i's max ``order_col`` ≤ shard i+1's min.
-    The curriculum-training write path (easy→hard by quality/ppl
-    score): `.write.partitionBy('shard')` after this and shard files
-    ARE the curriculum order. No SinglePartition anywhere in the plan.
-    """
-    return (
-        df.repartitionByRange(n_shards, F.col(order_col))
-        .sortWithinPartitions(order_col)
-        .withColumn("shard", F.spark_partition_id())
     )
 
 

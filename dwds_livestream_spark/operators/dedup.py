@@ -7,19 +7,16 @@ Python UDFs — so they scale to the 100 TB tier:
 
 - exact_dedup:        hash-groupBy on a content digest; one shuffle with
                       map-side partial aggregation.
-- shingles:           word n-gram shingling via higher-order array
-                      functions (transform/sequence/slice) — pure
-                      projection, no shuffle.
 - ngram_jaccard_pairs: candidate generation by shared shingle
                       (equi-join), exact Jaccard verification by
                       intersection counting. The inverted-index join is
                       the scalable formulation (never all-pairs); a
                       stop-shingle cap bounds frequent-shingle skew.
-- minhash_signatures / minhash_lsh_pairs: MinHash (k independent
-                      murmur3 seeds folded in ONE aggregate pass) +
-                      banded LSH bucketing; candidate pairs meet in
-                      band buckets — shuffle is O(docs·bands), not
-                      O(docs²).
+- minhash_signatures / minhash_lsh_pairs: MinHash (an md5 shingle
+                      hash mixed by k multiply-add permutations in ONE
+                      projection) + banded LSH bucketing; candidate
+                      pairs meet in band buckets — shuffle is
+                      O(docs·bands), not O(docs²).
 - simhash_signatures: 64-bit SimHash via per-bit signed sums in one
                       aggregate pass.
 """
@@ -71,36 +68,6 @@ def exact_dedup(
     )
 
 
-def shingles(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 5,
-    distinct: bool = True,
-) -> DataFrame:
-    """Word n-gram shingling -> (id, shingle) long format.
-
-    Built entirely from array higher-order functions so the whole thing
-    is one codegen'd projection + explode; no Python in the loop.
-    The token array is materialized as its own projection first —
-    inlining the split into the transform lambda re-splits the text
-    once per gram (O(tokens^2) per doc).
-    """
-    with_toks = df.withColumn("__toks", F.split(F.col(text_col), " "))
-    n_pos = F.greatest(F.size("__toks") - (n - 1), F.lit(0))
-    # guard: sequence(1, 0) is DESCENDING in Spark — a doc with fewer
-    # than n tokens must hit the empty branch, not crash slice(.., 0)
-    sh = F.when(
-        n_pos > 0,
-        F.transform(
-            F.sequence(F.lit(1), n_pos),
-            lambda i: F.array_join(F.slice("__toks", i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    out = with_toks.select(F.col(id_col), F.explode(sh).alias("shingle"))
-    return out.distinct() if distinct else out
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -133,9 +100,7 @@ def ngram_jaccard_pairs(
     partitioned by doc id so the size fold and both size re-attach
     sides are exchange-free from the cache (guide §2.3/§2.4).
     """
-    sh = pinned(
-        _shingle_digest_rows(df, text_col, id_col, n, partition_by_id=True)
-    )
+    sh = pinned(_shingle_digest_rows(df, text_col, id_col, n))
     if max_shingle_freq is not None:
         freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
         sh = (
@@ -187,9 +152,7 @@ def containment_pairs(
     :func:`ngram_jaccard_pairs` for the digest-basis rationale and
     collision bound (the oracle folds raw strings and certifies it).
     """
-    sh = pinned(
-        _shingle_digest_rows(df, text_col, id_col, n, partition_by_id=True)
-    )
+    sh = pinned(_shingle_digest_rows(df, text_col, id_col, n))
     if max_shingle_freq is not None:
         freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
         sh = (
@@ -220,7 +183,6 @@ def minhash_signatures(
     id_col: str = "doc_id",
     n: int = 5,
     k: int = 128,
-    hash_fn: str = "xxhash64",
     partition_by_id: bool = False,
 ) -> DataFrame:
     """k-permutation MinHash signature per document.
@@ -230,11 +192,10 @@ def minhash_signatures(
     doc id, map-side combine, independent of k in shuffle volume.
     Output: id, sig (array<int> length k).
 
-    ``hash_fn``: ``xxhash64`` hashes the token slice directly (no
-    intermediate string — the scale default) or ``md5_64`` (md5 of the
-    space-joined shingle, engine-independent so the signatures are
-    reproducible outside Spark; the permutation mixing consumes only
-    the top 32 hash bits either way).
+    The shingle hash is ``md5_64``: md5 of the space-joined shingle,
+    engine-independent so the signatures are reproducible outside
+    Spark (the registry oracles replicate them in SQL); the
+    permutation mixing consumes only its top 32 bits.
     """
     # Scan-side partition floor: every consumer now PINS this frame
     # (spread.pinned), so the kernel runs exactly once — as the single
@@ -256,8 +217,7 @@ def minhash_signatures(
     # price of the one exchange the floor was paying anyway.
     df = df.repartition(id_col) if partition_by_id else spread(df)
     # Design: signature is a PURE PROJECTION — no explode, no shuffle.
-    # Each shingle is hashed once JVM-side (xxhash64 over the token
-    # slice — no intermediate string build) into a per-doc array; an
+    # Each shingle is hashed once JVM-side into a per-doc array; an
     # Arrow-vectorized kernel then mixes each hash with k multiply-add
     # "permutations" (numpy broadcast, wrap-around uint64) and takes the
     # k per-doc minimums via one segment-min (np.minimum.reduceat) per
@@ -268,14 +228,13 @@ def minhash_signatures(
     idx = F.sequence(
         F.lit(1), F.greatest(F.size("__toks") - (n - 1), F.lit(0))
     )
-    if hash_fn == "xxhash64":
-        gram_hash = lambda i: F.xxhash64(F.slice("__toks", i, n))  # noqa: E731
-    elif hash_fn == "md5_64":
-        # first 8 md5 hex chars of the joined shingle, shifted into the
-        # HIGH half so the kernel's f32 = hash >> 32 recovers exactly
-        # those bits (the wrap to negative long is the same
-        # two's-complement pattern the kernel views as uint64)
-        gram_hash = lambda i: F.shiftleft(  # noqa: E731
+    # first 8 md5 hex chars of the joined shingle, shifted into the
+    # HIGH half so the kernel's f32 = hash >> 32 recovers exactly those
+    # bits (the wrap to negative long is the same two's-complement
+    # pattern the kernel views as uint64)
+    grams = F.transform(
+        idx,
+        lambda i: F.shiftleft(
             F.conv(
                 F.substring(
                     F.md5(F.array_join(F.slice("__toks", i, n), " ")), 1, 8
@@ -284,10 +243,8 @@ def minhash_signatures(
                 10,
             ).cast("long"),
             32,
-        )
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    grams = F.transform(idx, gram_hash)
+        ),
+    )
 
     # 32-bit universal hashing: 64-bit integer multiply is NOT
     # SIMD-vectorized (measured ~100x slower than u32 on this hardware);
@@ -329,7 +286,7 @@ def minhash_signatures(
 
 
 def _minhash_band_buckets(
-    sig: DataFrame, id_col: str, k: int, bands: int, hash_fn: str
+    sig: DataFrame, id_col: str, k: int, bands: int
 ) -> DataFrame:
     """(id, band, key) LSH bucket rows from a signature frame — the
     exchanged unit of every banded consumer: the self-join candidate
@@ -342,17 +299,20 @@ def _minhash_band_buckets(
     if k % bands != 0:
         raise ValueError(f"k ({k}) must be divisible by bands ({bands})")
     r = k // bands
-    if hash_fn == "md5_64":
-        band_key = lambda sl: F.md5(  # noqa: E731
-            F.array_join(F.transform(sl, lambda x: x.cast("string")), ",")
-        )
-    else:
-        band_key = F.hash
+    # engine-independent band key: md5 of the band's comma-joined ints
     band_cols = F.array(
         *[
             F.struct(
                 F.lit(b).alias("band"),
-                band_key(F.slice("sig", b * r + 1, r)).alias("key"),
+                F.md5(
+                    F.array_join(
+                        F.transform(
+                            F.slice("sig", b * r + 1, r),
+                            lambda x: x.cast("string"),
+                        ),
+                        ",",
+                    )
+                ).alias("key"),
             )
             for b in range(bands)
         ]
@@ -367,7 +327,6 @@ def _minhash_band_candidates(
     id_col: str,
     k: int,
     bands: int,
-    hash_fn: str,
     dedup_key: str | None = None,
 ) -> DataFrame:
     """Banded-LSH candidate pairs (doc_a < doc_b, deduplicated) from a
@@ -383,7 +342,7 @@ def _minhash_band_candidates(
     requirement, and a consumer that immediately joins on the same
     column (e.g. the signature re-attach) reuses the exchange
     (guide §2.4) — pass the key the FIRST downstream join uses."""
-    buckets = _minhash_band_buckets(sig, id_col, k, bands, hash_fn)
+    buckets = _minhash_band_buckets(sig, id_col, k, bands)
     a = buckets.select(F.col(id_col).alias("doc_a"), "band", "key")
     b = buckets.select(F.col(id_col).alias("doc_b"), "band", "key")
     pairs = (
@@ -404,7 +363,6 @@ def minhash_lsh_pairs(
     k: int = 128,
     bands: int = 32,
     threshold: float = 0.5,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """MinHash + banded LSH near-dup candidates with estimated Jaccard.
 
@@ -413,10 +371,8 @@ def minhash_lsh_pairs(
     shuffle is O(docs·bands); estimated similarity = fraction of equal
     signature positions (exact eq/k — a dyadic rational when k is a
     power of two, so the value is engine-independent with no rounding
-    step). Output: doc_a, doc_b, est_jaccard.
-
-    ``hash_fn`` selects the shingle hash (see minhash_signatures) and,
-    for ``md5_64``, an engine-independent band key too.
+    step). Output: doc_a, doc_b, est_jaccard. Shingle hash and band
+    key are both md5-based, so the output is engine-independent.
     """
     if k % bands != 0:
         raise ValueError(f"k ({k}) must be divisible by bands ({bands})")
@@ -436,14 +392,9 @@ def minhash_lsh_pairs(
     # (guide §2.4; before r12: dedup + two re-keys + two sig-side
     # exchanges)
     sig = pinned(
-        minhash_signatures(
-            df, text_col, id_col, n=n, k=k, hash_fn=hash_fn,
-            partition_by_id=True,
-        )
+        minhash_signatures(df, text_col, id_col, n=n, k=k, partition_by_id=True)
     )
-    cand = _minhash_band_candidates(
-        sig, id_col, k, bands, hash_fn, dedup_key="doc_b"
-    )
+    cand = _minhash_band_candidates(sig, id_col, k, bands, dedup_key="doc_b")
     sa = sig.select(F.col(id_col).alias("doc_a"), F.col("sig").alias("sig_a"))
     sb = sig.select(F.col(id_col).alias("doc_b"), F.col("sig").alias("sig_b"))
     eq = F.size(
@@ -478,7 +429,6 @@ def simhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """64-bit SimHash over word tokens.
 
@@ -486,10 +436,8 @@ def simhash_signatures(
     takes the sign of each position's sum. 64 conditional sums in one
     aggregate pass (columnar, no UDF). Output: id, simhash (bigint).
 
-    ``hash_fn``: ``xxhash64`` (cheapest, Spark-specific — the scale
-    default) or ``md5_64`` (engine-independent, so signatures and the
-    near-pair set are reproducible outside Spark for verification).
-    The bit-voting and banding logic is identical either way.
+    The token hash is ``_md5_64`` (engine-independent, so signatures
+    and the near-pair set are reproducible outside Spark).
     """
     # Pure projection, no shuffle: token hashes are computed JVM-side
     # into a per-doc array; an Arrow kernel unpacks each 64-bit hash
@@ -501,17 +449,11 @@ def simhash_signatures(
     # (see minhash_signatures; measured 2.0 s -> 0.6 s at sf0.1);
     # no-op at scale.
     df = spread(df)
-    if hash_fn == "xxhash64":
-        tok_hash = lambda t: F.xxhash64(t)  # noqa: E731 (variadic builtin)
-    elif hash_fn == "md5_64":
-        tok_hash = _md5_64
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
     tok_hashes = F.transform(
         F.filter(
             F.split(F.col(text_col), " "), lambda t: F.length(t) > 0
         ),
-        tok_hash,
+        _md5_64,
     )
 
     shifts = np.arange(64, dtype=np.uint64)
@@ -553,7 +495,6 @@ def simhash_near_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     blocks: int = 4,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """SimHash near-dup pairs by banded bit-blocks (pigeonhole: two sigs
     within ``max_hamming`` of each other agree exactly on at least one
@@ -573,7 +514,7 @@ def simhash_near_pairs(
     # MATERIALIZED (operators/spread.pinned) so the Arrow signing
     # kernel runs once (16 bytes/doc) — a bare .cache() lets the two
     # concurrently-submitted join-side stages each re-run it (r12)
-    sig = pinned(simhash_signatures(df, text_col, id_col, hash_fn))
+    sig = pinned(simhash_signatures(df, text_col, id_col))
     width = 64 // blocks
     block_cols = F.array(
         *[
@@ -696,7 +637,6 @@ def minhash_levenshtein_pairs(
     k: int = 128,
     bands: int = 32,
     max_dist: int = 60,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """THE at-scale edit-distance composition: MinHash banded-LSH
     candidates -> exact thresholded Levenshtein as the VERIFIER.
@@ -713,8 +653,8 @@ def minhash_levenshtein_pairs(
     the exact formulation by construction (a pair qualifies only if
     some band of the MinHash signatures agrees) — asserted against
     levenshtein_near_pairs in tests; the banded OUTPUT itself is a
-    deterministic function with ``hash_fn='md5_64'`` and replicated
-    exactly by the generated DuckDB oracle (plans/llm.py).
+    deterministic function (md5-based shingle hash and band key)
+    replicated exactly by the generated DuckDB oracle (plans/llm.py).
 
     Docs with fewer than ``n`` tokens have no shingles and drop out
     (minhash_signatures semantics), exactly as in the oracle's toks CTE.
@@ -723,10 +663,8 @@ def minhash_levenshtein_pairs(
     # materialized so the kernel runs once instead of twice (the
     # concurrent-AQE-stage duplication measured in r12 — see
     # operators/spread.pinned)
-    sig = pinned(
-        minhash_signatures(df, text_col, id_col, n=n, k=k, hash_fn=hash_fn)
-    )
-    cand = _minhash_band_candidates(sig, id_col, k, bands, hash_fn)
+    sig = pinned(minhash_signatures(df, text_col, id_col, n=n, k=k))
+    cand = _minhash_band_candidates(sig, id_col, k, bands)
     # re-attach TEXT to candidate pairs only; spread the pair frame so
     # the per-pair dynamic programs don't serialize in one
     # AQE-coalesced task (the same measured 10x as
@@ -833,7 +771,6 @@ def minhash_ledger_replay(
     k: int = 128,
     bands: int = 32,
     threshold: float = 0.5,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Incremental cross-snapshot NEAR-dup ledger replay — the MinHash
     extension of :func:`incremental_dedup_replay` (VERDICT r9 #4's
@@ -903,8 +840,7 @@ def minhash_ledger_replay(
     # (guide §2.4: operations keyed the same way share one exchange).
     sig = pinned(
         minhash_signatures(
-            replayed, text_col, id_col, n=n, k=k, hash_fn=hash_fn,
-            partition_by_id=True,
+            replayed, text_col, id_col, n=n, k=k, partition_by_id=True
         )
     )
     # the batch tag is joined in ONCE at pin time (bucket side already
@@ -912,7 +848,7 @@ def minhash_ledger_replay(
     # before r12 the buckets⋈ids join was re-evaluated inside every
     # step's probe query
     buckets = pinned(
-        _minhash_band_buckets(sig, id_col, k, bands, hash_fn).join(ids, id_col)
+        _minhash_band_buckets(sig, id_col, k, bands).join(ids, id_col)
     )
 
     eq = F.size(
@@ -1287,8 +1223,7 @@ def paragraph_ledger_replay(
 
 
 def _shingle_digest_rows(
-    df: DataFrame, text_col: str, id_col: str, n: int,
-    partition_by_id: bool = False,
+    df: DataFrame, text_col: str, id_col: str, n: int
 ) -> DataFrame:
     """Distinct (id, shingle-digest) rows: xxhash64 over each word
     n-gram's token slice, exploded to long format — the membership
@@ -1297,20 +1232,20 @@ def _shingle_digest_rows(
     curation.py's _with_shingle_hashes, which cannot be reused here
     because it lowercases through tokens()).
 
-    MUST tokenize exactly like shingles()/minhash_signatures (plain
-    single-space split, no case fold): a consumer that mixes this
+    MUST tokenize exactly like minhash_signatures (plain single-space
+    split, no case fold): a consumer that mixes this
     frame with signature estimates (minhash_jaccard_error) needs both
     sides over the SAME shingle universe or the error surface
-    silently skews. The when-guard mirrors shingles(): sequence(1, 0)
-    is DESCENDING in Spark, so sub-n-token docs must hit the typed
-    empty branch, not crash slice(.., 0).
+    silently skews. The when-guard is needed because sequence(1, 0) is
+    DESCENDING in Spark: sub-n-token docs must hit the typed empty
+    branch, not crash slice(.., 0).
 
-    ``partition_by_id=True`` hash-partitions the exploded rows by the
-    doc id BEFORE the distinct: hashpartitioning(id) satisfies the
-    distinct's (id, shingle) clustering, so the dedup re-uses that
-    exchange, and every id-keyed consumer of the (pinned) result —
-    per-doc size folds, candidate re-attach joins — reads the
-    partitioning instead of re-exchanging the frame (guide §2.4)."""
+    The exploded rows are hash-partitioned by the doc id BEFORE the
+    distinct: hashpartitioning(id) satisfies the distinct's (id,
+    shingle) clustering, so the dedup re-uses that exchange, and every
+    id-keyed consumer of the (pinned) result — per-doc size folds,
+    candidate re-attach joins — reads the partitioning instead of
+    re-exchanging the frame (guide §2.4)."""
     with_toks = df.withColumn("__toks", F.split(F.col(text_col), " "))
     n_pos = F.greatest(F.size("__toks") - (n - 1), F.lit(0))
     grams = F.when(
@@ -1321,9 +1256,7 @@ def _shingle_digest_rows(
         ),
     ).otherwise(F.array().cast("array<bigint>"))
     out = with_toks.select(F.col(id_col), F.explode(grams).alias("shingle"))
-    if partition_by_id:
-        out = out.repartition(id_col)
-    return out.distinct()
+    return out.repartition(id_col).distinct()
 
 
 def minhash_jaccard_error(
@@ -1333,7 +1266,6 @@ def minhash_jaccard_error(
     n: int = 5,
     k: int = 128,
     bands: int = 32,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Sketch-accuracy surface of the MinHash pipeline: for every
     banded-LSH candidate pair, the signature ESTIMATE (eq/k — the
@@ -1369,8 +1301,7 @@ def minhash_jaccard_error(
     # on the second pass) — measured 2x the whole estimate subtree.
     est = pinned(
         minhash_lsh_pairs(
-            df, text_col, id_col, n=n, k=k, bands=bands,
-            threshold=0.0, hash_fn=hash_fn,
+            df, text_col, id_col, n=n, k=k, bands=bands, threshold=0.0
         )
     )
     # the exact-Jaccard legs never expose shingle TEXT — only set
@@ -1387,9 +1318,9 @@ def minhash_jaccard_error(
     # lazily — unlike the old string frame (measured cheaper to
     # re-derive than materialize), the digest frame is 16 B/row, so
     # one explode+hash execution beats three.
-    sh = _shingle_digest_rows(
-        df, text_col, id_col, n, partition_by_id=True
-    ).localCheckpoint(eager=False)
+    sh = _shingle_digest_rows(df, text_col, id_col, n).localCheckpoint(
+        eager=False
+    )
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     pairs = est.select("doc_a", "doc_b")
     inter = (

@@ -26,17 +26,16 @@ def argmin_dedup(
     df: DataFrame,
     key: str,
     order_col: str,
-    null_value: int = 0,
     tie_breakers: list[str] | None = None,
 ) -> DataFrame:
-    """Keep, per ``key``, the row minimizing ``coalesce(order_col,
-    null_value)``; optional tie-breaker columns make the choice total
-    (the reference's fold keeps the first-seen row on ties, an
-    arrival-order artifact — at scale a deterministic tie-break is the
-    correct semantic).
+    """Keep, per ``key``, the row minimizing ``coalesce(order_col, 0)``
+    (nil counts as 0, as in the reference); optional tie-breaker
+    columns make the choice total (the reference's fold keeps the
+    first-seen row on ties, an arrival-order artifact — at scale a
+    deterministic tie-break is the correct semantic).
     """
     payload = [c for c in df.columns if c != key]
-    rank = F.coalesce(F.col(order_col), F.lit(null_value))
+    rank = F.coalesce(F.col(order_col), F.lit(0))
     order = F.struct(rank.alias("__rank"), *[F.col(t) for t in (tie_breakers or [])])
     agg = F.min_by(F.struct(*payload), order).alias("__best")
     return (

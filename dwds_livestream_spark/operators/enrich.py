@@ -26,15 +26,11 @@ def enrich(
     events: DataFrame,
     dimension: DataFrame,
     on: str = "lemma",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
-    """Left-join dimension metadata onto events.
+    """Left-join dimension metadata onto events, the dimension broadcast.
 
     Column layout follows the enriched-event schema: event columns
-    first, then dimension metadata (nullable on miss). ``broadcast_dim``
-    exists for the (unusual) case of a dimension too large to broadcast,
-    where a shuffled sort-merge join on a pre-bucketed dimension is the
-    scale path.
+    first, then dimension metadata (nullable on miss).
     """
     dim = dimension
     # Never let the dimension's join key collide with event columns
@@ -42,8 +38,6 @@ def enrich(
     dup = [c for c in dim.columns if c != on and c in events.columns]
     for c in dup:
         dim = dim.withColumnRenamed(c, f"dim_{c}")
-    if broadcast_dim:
-        dim = F.broadcast(dim)
-    return events.join(dim, on=on, how="left").select(
+    return events.join(F.broadcast(dim), on=on, how="left").select(
         *events.columns, *[c for c in dim.columns if c != on]
     )

@@ -106,15 +106,3 @@ def triangle_count(
     return per_edge.agg(
         F.coalesce(F.sum("t"), F.lit(0)).cast("long").alias("n_triangles")
     )
-
-
-def node_degrees(
-    edges: DataFrame, src: str = "a", dst: str = "b"
-) -> DataFrame:
-    """Per-node degree of the canonical undirected graph."""
-    e = canonical_edges(edges, src, dst)
-    return (
-        e.select(F.explode(F.array("u", "v")).alias("node"))
-        .groupBy("node")
-        .agg(F.count("*").cast("int").alias("degree"))
-    )

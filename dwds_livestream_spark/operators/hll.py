@@ -15,7 +15,6 @@ the events, no COUNT(DISTINCT) shuffle of raw keys.
 - ``rolling_distinct``: exact-sliding-window union over the sketch
   table — a RANGE window of day-sized rows, so the window input is
   |days| rows, never |events|.
-- ``range_distinct``: one union_agg over a date slice.
 
 Error: DataSketches HLL_4, lgK=12 → ~1.6% relative standard error;
 gated against exact distincts in tests/test_hll.py.
@@ -63,19 +62,4 @@ def rolling_distinct(
         F.hll_sketch_estimate(F.hll_union_agg("sketch").over(w))
         .cast("long")
         .alias("est_distinct"),
-    )
-
-
-def range_distinct(
-    sketches: DataFrame, start: str, end: str
-) -> DataFrame:
-    """Distinct estimate over [start, end] — one union of the slice's
-    sketch rows, no event scan."""
-    return (
-        sketches.where(F.col("day").between(F.lit(start), F.lit(end)))
-        .agg(
-            F.hll_sketch_estimate(F.hll_union_agg("sketch"))
-            .cast("long")
-            .alias("est_distinct")
-        )
     )

@@ -18,12 +18,10 @@ Scale design (100 TB):
   exploded frame is reused); both aggregate with map-side partial
   combine — two keyed shuffles whose width is the n-gram vocabulary,
   not the corpus.
-- Scoring joins each doc bigram against the model. The unigram table
-  and V are broadcast (vocab is always small); the bigram table is
-  broadcast when it fits (default here) and degrades to a shuffle
-  hash join on the bigram key when the corpus vocabulary explodes —
-  flip ``broadcast_model=False``. Per-doc reduce is the same keyed
-  aggregate the bigram explode already partitioned by.
+- Scoring joins each doc bigram against the model. The unigram table,
+  V and the bigram table are broadcast (an n-gram vocabulary, not the
+  corpus). Per-doc reduce is the same keyed aggregate the bigram
+  explode already partitioned by.
 """
 
 from __future__ import annotations
@@ -94,7 +92,6 @@ def lm_perplexity(
     add_k: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """Per-document bigram-LM stats: doc_id, n_bigrams, avg_nll, ppl
     (both rounded 1e-6)."""
@@ -109,9 +106,7 @@ def lm_perplexity(
     vocab = uni.agg(F.count("*").alias("v"))
     doc_bi = _doc_bigrams(base)
 
-    model = bi.join(uni, "w1")
-    if broadcast_model:
-        model = F.broadcast(model)
+    model = F.broadcast(bi.join(uni, "w1"))
     scored = doc_bi.join(model, ["w1", "w2"]).crossJoin(F.broadcast(vocab))
     return _per_doc_stats(scored, add_k)
 
@@ -157,7 +152,6 @@ def lm_score(
     add_k: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """Score ``documents`` under the PERSISTED model at ``path`` —
     same output shape as ``lm_perplexity`` (doc_id, n_bigrams,
@@ -169,16 +163,14 @@ def lm_score(
     the add-k floor — c2 = 0 / c1 = 0 via left joins — instead of
     being dropped, so out-of-domain text gets the high perplexity it
     deserves rather than a hole in the score."""
-    bi = spark.read.parquet(f"{path}/bigrams")
-    uni = spark.read.parquet(f"{path}/unigrams")
+    bi = F.broadcast(spark.read.parquet(f"{path}/bigrams"))
+    uni = F.broadcast(spark.read.parquet(f"{path}/unigrams"))
     meta = spark.read.parquet(f"{path}/meta")
 
     doc_bi = _doc_bigrams(_tokenized(documents, text_col, id_col))
     # join the two count tables SEPARATELY: a pre-joined model table
     # would lose w1's unigram count for seen-context/unseen-bigram
     # pairs (left-join miss drops the whole row's c1)
-    if broadcast_model:
-        bi, uni = F.broadcast(bi), F.broadcast(uni)
     scored = (
         doc_bi.join(bi, ["w1", "w2"], "left")
         .withColumn("c2", F.coalesce("c2", F.lit(0)))

@@ -132,12 +132,6 @@ def range_quantiles(
     ).orderBy(*keys, "q")
 
 
-# the keyed spellings: the same functions, keyed by their second argument
-# (histogram_rollup) or by the rollup's ``key`` column (range_quantiles)
-histogram_rollup_by = histogram_rollup
-range_quantiles_by = range_quantiles
-
-
 def logbucket_quantiles(
     df: DataFrame,
     value_col: str = "n_chars",

@@ -105,19 +105,3 @@ def scd2_merge(
         .unionByName(closed_now)
         .unionByName(new_open)
     )
-
-
-def as_of_version(
-    history: DataFrame,
-    at: str,
-    from_col: str = "valid_from",
-    to_col: str = "valid_to",
-) -> DataFrame:
-    """The dimension as it was at ``at`` — the version whose
-    [valid_from, valid_to) interval covers the instant (point-in-time
-    read for reproducible re-enrichment)."""
-    at_lit = F.lit(at).cast("timestamp")
-    return history.where(
-        (F.col(from_col) <= at_lit)
-        & (F.col(to_col).isNull() | (F.col(to_col) > at_lit))
-    ).drop(from_col, to_col)

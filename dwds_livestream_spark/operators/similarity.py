@@ -186,19 +186,14 @@ def _with_buckets(
     dim: int,
     n_planes: int,
     n_tables: int,
-    keep_vec: bool = True,
     exact_bits: bool = False,
 ) -> DataFrame:
-    """(id, vec) -> exploded (id, [vec,] table, bucket) bucket keys."""
+    """(id, vec) -> exploded (id, table, bucket) bucket keys."""
     keys_udf = _make_lsh_keys_udf(dim, n_planes, n_tables, exact_bits)
-    base = df.select(
+    return df.select(
         F.col(id_col).alias(id_out),
-        _as_double(vec_col).alias(f"{id_out}_vec"),
         F.posexplode(keys_udf(_as_double(vec_col))).alias("table", "bucket"),
     )
-    if not keep_vec:
-        base = base.drop(f"{id_out}_vec")
-    return base
 
 
 def cosine_topk(
@@ -280,11 +275,11 @@ def lsh_topk(
     # broadcast, corpus by one keyed join
     qk = _with_buckets(
         queries, "query_id", id_col, vec_col, dim, n_planes, n_tables,
-        keep_vec=False, exact_bits=exact_bits,
+        exact_bits=exact_bits,
     )
     ck = _with_buckets(
         corpus, "neighbor_id", id_col, vec_col, dim, n_planes, n_tables,
-        keep_vec=False, exact_bits=exact_bits,
+        exact_bits=exact_bits,
     )
     cand = (
         ck.join(F.broadcast(qk), ["table", "bucket"])
@@ -483,8 +478,7 @@ def embedding_near_dup_pairs(
         # re-attached to the deduped candidate pairs afterwards (the
         # same keys-then-reattach shape as minhash_lsh_pairs).
         keys = _with_buckets(
-            df, "id", id_col, vec_col, dim, n_planes, n_tables,
-            keep_vec=False,
+            df, "id", id_col, vec_col, dim, n_planes, n_tables
         ).localCheckpoint()
         a = keys.select(F.col("id").alias("id_a"), "table", "bucket")
         b = keys.select(F.col("id").alias("id_b"), "table", "bucket")

@@ -58,48 +58,3 @@ def salted_join(
         d = dim.withColumn("__salt", F.explode(all_salts))
 
     return f.join(d, on=[on, "__salt"], how=how).drop("__salt")
-
-
-def detect_hot_keys(
-    df: DataFrame,
-    on: str,
-    share_threshold: float = 0.05,
-    sample_fraction: float = 0.01,
-    min_sample_rows: int = 100_000,
-    approx_rows: int | None = None,
-) -> list:
-    """Sample-based hot-key detection feeding :func:`salted_join`.
-
-    Returns keys whose share of a uniform sample exceeds
-    ``share_threshold`` (default: any key holding >=5% of rows — the
-    kind AQE's partition splitting cannot fully spread). The sample is
-    seeded, so a given input yields the same key list run over run.
-
-    Scale: ONE sampled scan (ADVICE r1). The per-key counts are
-    persisted (tiny: distinct sampled keys), the sample total is the
-    sum of those counts — not a second scan — and the only full-table
-    job is the row count used to honor ``min_sample_rows``, which
-    callers skip entirely by passing ``approx_rows`` (a catalog
-    estimate; err LOW — an under-estimate merely over-samples, while
-    an over-estimate shrinks the realized sample below
-    ``min_sample_rows`` and weakens detection on small tables).
-    At 100 TB sample_fraction=0.01 still sees ~1B rows — more than
-    enough to find >=5%-share keys; keys the sample misses are exactly
-    the keys that did not need salting.
-    """
-    if not 0 < share_threshold <= 1:
-        raise ValueError(f"share_threshold in (0, 1]: {share_threshold}")
-    n = approx_rows if approx_rows is not None else df.count()
-    frac = min(1.0, max(sample_fraction, min_sample_rows / max(n, 1)))
-    sampled = df.select(on) if frac >= 1.0 else df.select(on).sample(
-        fraction=frac, seed=42
-    )
-    counts = sampled.groupBy(on).count().persist()
-    try:
-        total = counts.agg(F.sum("count")).first()[0] or 0
-        if total == 0:
-            return []
-        hot = counts.where(F.col("count") >= share_threshold * total)
-        return [r[0] for r in hot.select(on).collect()]
-    finally:
-        counts.unpersist()

@@ -55,10 +55,8 @@ def pinned(df: DataFrame) -> DataFrame:
     return df
 
 
-def spread(
-    df: DataFrame, min_fraction: float = 1.0, force: bool = False
-) -> DataFrame:
-    """Ensure at least ``min_fraction * defaultParallelism`` partitions.
+def spread(df: DataFrame, force: bool = False) -> DataFrame:
+    """Ensure at least ``defaultParallelism`` partitions.
 
     ``force=False`` probes ``rdd.getNumPartitions`` and skips the
     repartition when the plan already has enough splits. That probe is
@@ -84,9 +82,7 @@ def spread(
     working barrier is a Generate: predicates referencing a generated
     output cannot cross it — see functions/access_log.parse_log_lines.
     """
-    target = int(
-        df.sparkSession.sparkContext.defaultParallelism * min_fraction
-    )
+    target = df.sparkSession.sparkContext.defaultParallelism
     if target <= 1:
         return df
     if not force and df.rdd.getNumPartitions() >= target:

@@ -29,9 +29,8 @@ Scale design (100 TB):
 - the gram KEY is an 8-byte ``xxhash64``, never the gram text — the
   wide shuffle moves (hash, doc, pos) triples only;
 - step-2 aggregate gets map-side partial combine; its output (the
-  duplicated-gram set) is usually corpus-small — the re-join broadcasts
-  it when it fits (``broadcast_dups``), else falls back to a shuffle
-  hash join on the hash key;
+  duplicated-gram set) is usually corpus-small, and the re-join
+  broadcasts it;
 - step-3 is one window + one aggregate, both keyed by doc_id — a
   single co-partitioned lineage.
 False positives from 64-bit hash collisions: P ~ n^2/2^64 windows —
@@ -54,7 +53,6 @@ def duplicate_spans(
     min_count: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_dups: bool = True,
     hash_grams: bool = True,
     min_docs: int | None = None,
 ) -> DataFrame:
@@ -116,9 +114,7 @@ def duplicate_spans(
             .where(F.col("n") >= min_count)
             .select("gram")
         )
-    if broadcast_dups:
-        dups = F.broadcast(dups)
-    hits = win.join(dups, "gram").select("doc_id", "pos")
+    hits = win.join(F.broadcast(dups), "gram").select("doc_id", "pos")
 
     w = Window.partitionBy("doc_id").orderBy("pos")
     new_span = F.when(

@@ -8,6 +8,6 @@ cast to DECIMAL before summing so results are exact and engine-
 independent; averages are rounded doubles.
 """
 
-from .registry import ORACLE_SQL, QUERIES, load_tables
+from .registry import ORACLE_SQL, QUERIES
 
-__all__ = ["QUERIES", "ORACLE_SQL", "load_tables"]
+__all__ = ["QUERIES", "ORACLE_SQL"]

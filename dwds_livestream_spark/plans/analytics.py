@@ -66,10 +66,13 @@ FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
 
 
 def q_argmin_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 parity: per-key argmin via one hash aggregate (min_by) —
+    """A1 parity: per-key argmin via one min_by aggregate —
     reference keeps the min-hidx homograph per lemma (wbdb.clj:20-28).
-    Here: per order, the lowest line number's row. One shuffle on the
-    group key, map-side partial agg; no sort, no window.
+    Here: per order, the lowest line number's row. min_by's struct
+    buffer is not HashAggregate-eligible, so the plan is Sort ->
+    SortAggregate(partial) -> Exchange -> Sort -> SortAggregate: one
+    shuffle on the group key, map-side partial agg, no window
+    (operators/dedup_dim.py).
     """
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity"

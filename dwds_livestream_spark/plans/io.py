@@ -98,23 +98,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # naive-µs semantics so oracle value hashes agree.
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, suffix: str = ""
-) -> list[str]:
-    """Register every testdata table as a temp view (``region``,
-    ``nation``, … + optional suffix) so the whole engine is reachable
-    from plain ``spark.sql`` — the same surface the DuckDB oracle gets.
-    Returns the view names. Views are lazy: no data moves until a
-    query runs, and each carries the nanos-timestamp normalization
-    from :func:`load_table`.
-    """
-    from .registry import TABLES  # noqa: PLC0415 — avoid cycle at import
-
-    names = []
-    for t in TABLES:
-        name = f"{t}{suffix}"
-        load_table(spark, sf_dir, t).createOrReplaceTempView(name)
-        names.append(name)
-    return names

@@ -1,10 +1,10 @@
 """LLM-training-data pipeline queries over documents/embeddings
 (project brief; SURVEY.md §7 Phase 5).
 
-SQL-expressible operators carry a DuckDB oracle; hash-seeded operators
-(MinHash/SimHash/winnowing/LSH — Spark murmur3/xxhash64 have no DuckDB
-equivalent) are rows-only here and validated against exact brute-force
-results in tests/test_dedup_similarity.py instead.
+SQL-expressible operators carry a DuckDB oracle. MinHash, SimHash and
+winnowing hash with md5, which DuckDB has too, so their oracles
+replicate signatures and banding exactly; tests/test_dedup_similarity.py
+checks MinHash/SimHash recall against exact brute-force results.
 """
 
 from __future__ import annotations
@@ -123,14 +123,9 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     eq/k estimate are all deterministic integer functions, replicated
     exactly by the generated SQL oracle (the LSH banding stays lossy vs
     TRUE Jaccard — recall is asserted separately in tests — but the
-    banded OUTPUT itself is exact). xxhash64 stays the scale default."""
+    banded OUTPUT itself is exact)."""
     return minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"),
-        n=5,
-        k=128,
-        bands=32,
-        threshold=0.5,
-        hash_fn="md5_64",
+        _t(spark, sf_dir, "documents"), n=5, k=128, bands=32, threshold=0.5
     )
 
 
@@ -242,15 +237,10 @@ def q_dedup_minhash_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SCALE_SF1.md). md5_64 keeps the banding engine-independent; the
     DuckDB oracle regenerates the same candidates from the shared
     splitmix64 constants and verifies with DuckDB's OWN levenshtein(),
-    so a hash match checks banding and verifier independently.
-    xxhash64 stays the scale default (tests pin recall for both)."""
+    so a hash match checks banding and verifier independently (tests
+    pin recall)."""
     return minhash_levenshtein_pairs(
-        _t(spark, sf_dir, "documents"),
-        n=5,
-        k=128,
-        bands=32,
-        max_dist=60,
-        hash_fn="md5_64",
+        _t(spark, sf_dir, "documents"), n=5, k=128, bands=32, max_dist=60
     )
 
 
@@ -260,10 +250,8 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pigeonhole), the banded result is exactly the all-pairs set with
     hamming <= 3 — which is what the oracle computes directly, so a
     hash match proves both the signatures and the completeness of the
-    banded candidate generation. xxhash64 stays the scale default."""
-    return simhash_near_pairs(
-        _t(spark, sf_dir, "documents"), max_hamming=3, hash_fn="md5_64"
-    )
+    banded candidate generation."""
+    return simhash_near_pairs(_t(spark, sf_dir, "documents"), max_hamming=3)
 
 
 # SimHash replicated in SQL: per token, bit j of the 64-bit hash (the
@@ -786,11 +774,8 @@ FROM h
 def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprints with the engine-independent md5_32 k-gram
     hash so the full algorithm (k-gram windows, window minima, distinct,
-    explode) is oracle-checkable; the murmur3 scale default keeps its
-    property tests (tests/test_text_multimodal.py)."""
-    return winnowing_fingerprints(
-        _t(spark, sf_dir, "documents"), hash_fn="md5_32"
-    )
+    explode) is oracle-checkable."""
+    return winnowing_fingerprints(_t(spark, sf_dir, "documents"))
 
 
 # Same winnowing computation in DuckDB: 5-gram md5-prefix hashes,
@@ -3046,8 +3031,7 @@ def q_minhash_jaccard_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import minhash_jaccard_error
 
     return minhash_jaccard_error(
-        _t(spark, sf_dir, "documents"), n=5, k=128, bands=32,
-        hash_fn="md5_64",
+        _t(spark, sf_dir, "documents"), n=5, k=128, bands=32
     )
 
 
@@ -4224,7 +4208,7 @@ def _minhash_replay_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_ledger_replay(
         docs, text_col="text", id_col="doc_id", batch_col="batch",
         batch_values=[0, 1, 2], n=5, k=128, bands=32,
-        threshold=MINHASH_LEDGER_THRESHOLD, hash_fn="md5_64",
+        threshold=MINHASH_LEDGER_THRESHOLD,
     )
 
 

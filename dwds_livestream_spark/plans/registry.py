@@ -14,16 +14,11 @@ from pyspark.sql import DataFrame, SparkSession
 from . import analytics as A
 from . import llm as L
 from . import tpch as T
-from .io import load_table
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
 ).split()
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
 _ALL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

@@ -2,32 +2,17 @@
 
 The reference fixes schemas by construction (regex groups positionally
 zipped with declared keys, access_log.clj:33-34/56-60; sink DDL in
-collector/001-create-wb-page-request.up.sql). Here every stage gets an
-explicit StructType; nothing is inferred.
+collector/001-create-wb-page-request.up.sql). Here the records the
+engine reads from outside are declared: the extracted event, the
+dimension row and the collector's JSON wire record, plus the typed
+enriched row the tests round-trip through that wire form. Parsed log
+lines and persisted fact rows take their shape from the projections
+that build them (functions/access_log.py, functions/encode.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-# Raw access-log line stream: one string column, the shape of
-# spark.read(.readStream).text(...).
-ACCESS_LOG_LINE = T.StructType([T.StructField("value", T.StringType(), False)])
-
-# Parsed access-log record (reference keys at access_log.clj:33-34:
-# line/ip/timestamp/method/uri/status/size/referrer/user-agent).
-PARSED_LOG = T.StructType(
-    [
-        T.StructField("ip", T.StringType(), True),  # optional group
-        T.StructField("timestamp", T.TimestampType(), True),
-        T.StructField("method", T.StringType(), True),
-        T.StructField("uri", T.StringType(), True),
-        T.StructField("status", T.IntegerType(), True),
-        T.StructField("size", T.LongType(), True),
-        T.StructField("referrer", T.StringType(), True),
-        T.StructField("user_agent", T.StringType(), True),
-    ]
-)
 
 # Extracted event — the {timestamp, lemma} projection
 # (access_log.clj:90-91).
@@ -81,63 +66,5 @@ ENRICHED_EVENT_WIRE = T.StructType(
         T.StructField("article_type", T.StringType(), True),
         T.StructField("source", T.StringType(), True),
         T.StructField("date", T.StringType(), True),
-    ]
-)
-
-# Persisted fact row (collector/001-create-wb-page-request.up.sql:1-12,
-# event->db at collector.clj:82-88): lemma is "lemma" or "lemma#<hidx>".
-SINK_ROW = T.StructType(
-    [
-        T.StructField("ts", T.TimestampType(), False),
-        T.StructField("lemma", T.StringType(), False),
-        T.StructField("article_type", T.StringType(), True),
-        T.StructField("article_source", T.StringType(), True),
-        T.StructField("article_date", T.DateType(), True),
-    ]
-)
-
-# ---- driver testdata tables (TESTDATA.md / FIXTURES.md §6) ----
-
-EVENTS_TABLE = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), False),
-        T.StructField("ts", T.TimestampType(), False),
-        T.StructField("user_id", T.LongType(), False),
-        T.StructField("event_type", T.StringType(), False),
-        T.StructField("value", T.DoubleType(), False),
-        T.StructField("props", T.StringType(), True),
-    ]
-)
-
-DOCUMENTS_TABLE = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ]
-)
-
-EMBEDDINGS_TABLE = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType(), False),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), False),
-        T.StructField("label", T.IntegerType(), True),
-    ]
-)
-
-# Multimodal asset table (SURVEY.md §7 Phase 5 / project brief): opaque
-# binary payload + typed metadata; decode stubs in operators.multimodal.
-MULTIMODAL_ASSET = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("modality", T.StringType(), False),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("mime_type", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.LongType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
     ]
 )

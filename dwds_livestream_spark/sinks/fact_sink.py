@@ -28,7 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from ..config import DEFAULT_CONFIG, EngineConfig
+from ..config import DEFAULT_CONFIG
 from ..functions.encode import events_to_sink_rows
 
 
@@ -53,10 +53,9 @@ def jdbc_writer(
     url: str,
     table: str = "wb_page_request",
     properties: dict[str, str] | None = None,
-    config: EngineConfig = DEFAULT_CONFIG,
 ) -> Callable[[DataFrame, int], None]:
     props = dict(properties or {})
-    props.setdefault("batchsize", str(config.sink_batch_size))
+    props.setdefault("batchsize", str(DEFAULT_CONFIG.sink_batch_size))
     if table == "wb_page_request":
         # reference DDL parity (collector/001-…up.sql:1-8): VARCHAR
         # columns, not the dialect's unbounded-string default (Derby/
@@ -68,8 +67,8 @@ def jdbc_writer(
         )
 
     def write(batch: DataFrame, batch_id: int) -> None:
-        delay = config.sink_retry_base_ms / 1000.0
-        cap = config.sink_retry_cap_ms / 1000.0
+        delay = DEFAULT_CONFIG.sink_retry_base_ms / 1000.0
+        cap = DEFAULT_CONFIG.sink_retry_cap_ms / 1000.0
         while True:
             try:
                 batch.write.mode("append").jdbc(url, table, properties=props)
@@ -115,15 +114,14 @@ def start_fact_sink(
     enriched: DataFrame,
     writer: Callable[[DataFrame, int], None],
     checkpoint: str,
-    config: EngineConfig = DEFAULT_CONFIG,
     trigger: dict | None = None,
 ) -> StreamingQuery:
     """Collector pipeline tail: enriched events -> sink rows (P8/P9/F6)
     -> checkpointed micro-batched writes (at-least-once per batch)."""
-    rows = events_to_sink_rows(enriched, config.max_lemma_len)
+    rows = events_to_sink_rows(enriched)
     return (
         rows.writeStream.foreachBatch(writer)
         .option("checkpointLocation", checkpoint)
-        .trigger(**(trigger or {"processingTime": config.trigger_interval}))
+        .trigger(**(trigger or {"processingTime": DEFAULT_CONFIG.trigger_interval}))
         .start()
     )

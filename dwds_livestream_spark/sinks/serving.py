@@ -17,9 +17,10 @@ Reference parity (http.clj):
 The reference serves each client from a virtual thread
 (http.clj:146-148); here ``ThreadingHTTPServer`` gives
 thread-per-client. This is deliberately OUTSIDE the Spark query
-(SURVEY.md §1.4): the engine's streaming query stays exactly-once and
-publishes into the hub (``start_live_server(publish=hub.publish)``);
-lossiness is a per-subscriber serving property.
+(SURVEY.md §1.4): the engine's streaming query publishes into the hub
+(``start_live_server(publish=hub.publish)``) at-least-once per
+micro-batch — a batch replayed from the checkpoint is published again —
+and lossiness is a per-subscriber serving property.
 """
 
 from __future__ import annotations

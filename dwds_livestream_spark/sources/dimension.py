@@ -28,7 +28,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG, EngineConfig
+from ..config import DEFAULT_CONFIG
 from ..functions.encode import JSON_WIRE_OPTIONS
 from ..schemas import EVENT
 
@@ -44,12 +44,11 @@ def load_dimension_jdbc(
     spark: SparkSession,
     url: str,
     properties: dict[str, str] | None = None,
-    config: EngineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
     """S3 — JDBC dimension scan with the inner join pushed down; the
     raw rows, homographs included."""
     props = dict(properties or {})
-    props.setdefault("fetchsize", str(config.jdbc_fetch_size))
+    props.setdefault("fetchsize", str(DEFAULT_CONFIG.jdbc_fetch_size))
     raw = spark.read.jdbc(url, f"({LEMMA_ARTICLE_QUERY}) dim", properties=props)
     # dialect case-normalization: engines that canonicalize unquoted
     # identifiers to UPPER (Derby, Oracle, H2) hand back uppercase

@@ -15,10 +15,12 @@ dropped, so a backlogged tap gets slightly under epm: 44.5 per minute
 at epm 45 polled every 0.05 s (the SSE loop's interval). Carrying that
 fraction would let some 60 s window hold epm + 1.
 
-This is deliberately OUTSIDE the Spark query: the engine's streaming
-query stays exactly-once; lossiness is a per-subscriber serving-layer
-property. `BroadcastHub.publish` plugs directly into
-`streaming.pipeline.start_live_server(publish=hub.publish)`.
+This is deliberately OUTSIDE the Spark query; lossiness is a
+per-subscriber serving-layer property. `BroadcastHub.publish` plugs
+directly into `streaming.pipeline.start_live_server(publish=hub.publish)`,
+whose `foreachBatch` publishes before the offset commit: a batch replayed
+from the checkpoint after a crash is published again, so delivery into
+the hub is at-least-once per micro-batch.
 """
 
 from __future__ import annotations
@@ -49,12 +51,12 @@ class Subscription:
             self.dropped += max(0, len(lines) - room)
             self._buf.extend(lines)  # deque(maxlen) drops oldest
 
-    def poll(self, max_items: int | None = None) -> list[str]:
-        """Drain up to max_items, gated by the leaky bucket when epm is
-        set (one token of capacity, refilled continuously at epm/60 per
+    def poll(self) -> list[str]:
+        """Drain the buffer, gated by the leaky bucket when epm is set
+        (one token of capacity, refilled continuously at epm/60 per
         second)."""
         with self._lock:
-            budget = len(self._buf) if max_items is None else max_items
+            budget = len(self._buf)
             if self.epm is not None:
                 now = time.monotonic()
                 self._tokens = min(

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..config import DEFAULT_CONFIG, EngineConfig
+from ..config import DEFAULT_CONFIG
 from ..functions.access_log import access_log_to_events
 from ..functions.encode import JSON_WIRE_OPTIONS, from_json_events
 from ..sources.access_log_source import MAX_FILES_PER_TRIGGER, stream_access_log
@@ -27,7 +27,6 @@ def start_live_server(
     dimension_loader: Callable[[], Mapping[str, str]],
     checkpoint: str,
     publish: Callable[[list[str], int], None],
-    config: EngineConfig = DEFAULT_CONFIG,
     trigger: dict | None = None,
 ) -> StreamingQuery:
     """Live fan-out (K1-K3): every micro-batch's JSON lines are handed
@@ -61,7 +60,7 @@ def start_live_server(
     """
     lines = stream_access_log(spark, log_path)
     events = access_log_to_events(lines)
-    max_publish_rows = config.max_publish_rows
+    max_publish_rows = DEFAULT_CONFIG.max_publish_rows
 
     def process(batch: DataFrame, batch_id: int) -> None:
         lookup = dimension_loader()
@@ -107,7 +106,7 @@ def start_live_server(
     return (
         events.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint)
-        .trigger(**(trigger or {"processingTime": config.trigger_interval}))
+        .trigger(**(trigger or {"processingTime": DEFAULT_CONFIG.trigger_interval}))
         .start()
     )
 
@@ -142,4 +141,4 @@ def collector_stream(
             .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
             .load(jsonl_dir)
         )
-    return from_json_events(raw, observe=True)
+    return from_json_events(raw)

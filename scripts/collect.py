@@ -9,8 +9,7 @@ batch, as on the reference's JDBC path: a crash between the parquet
 append and the checkpoint commit re-appends that batch on restart.
 
 Composition of tested parts: streaming.pipeline.collector_stream +
-sinks.fact_sink.{parquet_writer, jdbc_writer, idempotent,
-start_fact_sink}.
+sinks.fact_sink.{parquet_writer, jdbc_writer, start_fact_sink}.
 
 Usage:
   python scripts/collect.py JSONL_DIR OUT_PATH \

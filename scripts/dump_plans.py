@@ -18,7 +18,7 @@ from dwds_livestream_spark.session import build_session  # noqa: E402
 HEADLINE = {
     "q1_pricing_summary": "TPC-H Q1: partial+final agg, shipdate filter pushed to scan",
     "events_enrich": "stream-static dimension enrich: broadcast left join, fact never shuffles",
-    "argmin_dedup": "min_by argmin dedup: one hash aggregate, no window sort",
+    "argmin_dedup": "min_by argmin dedup: partial+final sort aggregate, one shuffle, no window",
     "spend_percent_rank": "global percent_rank WITHOUT a global sort (distributed_rank buckets)",
     "ppl_buckets": "perplexity terciles: percentile bounds broadcast, map-only bucketing",
     "dedup_minhash_lsh": "banded MinHash-LSH: one Arrow signature kernel, bucket-key shuffle only",

@@ -4,7 +4,8 @@ synthetic spark.range data (nothing written to /root/testdata).
 The per-round bench (bench.py) proves correctness-scale performance;
 this script is the evidence that the *plans* hold when the fact side
 grows: broadcast enrichment never shuffles the fact table, argmin
-dedup stays a single hash aggregate, the as-of join stays one shuffle,
+dedup stays one partial+final min_by sort aggregate around a single
+shuffle (no window), the as-of join stays one shuffle,
 the salted join splits the hot key, streaming-style windowed counts
 stay map-side partial. Prints one JSON line per op with rows/sec.
 
@@ -78,7 +79,7 @@ def main() -> None:
     plan = j._jdf.queryExecution().executedPlan().toString()
     report("broadcast_enrich", rows, t0, plan, "BroadcastHashJoin", "SortMergeJoin")
 
-    # A1 at scale: one partial+final min_by aggregate, no window sort
+    # A1 at scale: one partial+final min_by sort aggregate, no window
     t0 = time.perf_counter()
     d = argmin_dedup(events.withColumn("hidx", (F.col("event_id") % 7).cast("int")),
                      key="user_id", order_col="hidx",

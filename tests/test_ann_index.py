@@ -1,6 +1,5 @@
 """Persisted IVF index (operators/ann_index.py): build → query with
-partition pruning; append without retraining; parity with the
-in-memory ivf_topk operator."""
+partition pruning; parity with the in-memory ivf_topk operator."""
 
 from __future__ import annotations
 
@@ -9,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from dwds_livestream_spark.operators.ann_index import (
-    ivf_index_append,
     ivf_index_query,
     ivf_index_write,
 )
@@ -76,22 +74,3 @@ def test_query_recall_vs_exact(spark, index_path, emb):
     a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
     assert len(a & e) / len(e) >= 0.5  # nprobe=4 of 8 cells
-
-
-def test_append_without_retraining(spark, index_path, emb, tmp_path):
-    # copy the index so the module-scoped fixture isn't mutated
-    import shutil
-
-    p = str(tmp_path / "idx2")
-    shutil.copytree(index_path, p)
-    new = emb.select(
-        (F.col("vec_id") + 100_000).alias("vec_id"), "embedding", "label"
-    ).where(F.col("vec_id") < 100_010)
-    ivf_index_append(spark, p, new)
-    vecs = spark.read.parquet(f"{p}/vectors")
-    assert vecs.count() == emb.count() + 10
-    # an appended duplicate vector must now be its twin's top neighbor
-    queries = emb.where(F.col("vec_id") == 3)
-    out = ivf_index_query(spark, p, queries, k=1, nprobe=2).collect()
-    assert out[0]["neighbor_id"] == 100_003
-    assert out[0]["cosine"] > 0.999999

@@ -9,7 +9,7 @@ import pytest
 
 from pyspark.sql import Row
 
-from dwds_livestream_spark.operators.bpe import bpe_segment, bpe_train
+from dwds_livestream_spark.operators.bpe import bpe_train
 
 CORPUS = [
     "low low low low low",
@@ -65,21 +65,6 @@ def test_merge_sequence_matches_reference(docs):
     got = bpe_train(docs, n_merges=8)
     want = _ref_bpe(CORPUS, 8)
     assert got == want
-
-
-def test_segment_applies_rules(docs, spark):
-    rules = bpe_train(docs, n_merges=6)
-    seg = {
-        r["doc_id"]: r
-        for r in bpe_segment(docs, rules).collect()
-    }
-    # token counts shrink monotonically vs raw chars and stay >= word count
-    raw_chars = sum(len(w) for w in CORPUS[0].split())
-    assert seg[0]["n_tokens"] < raw_chars
-    assert seg[0]["n_tokens"] >= len(CORPUS[0].split())
-    # every token is a concatenation the rules could build: reconstruct
-    joined = "".join(seg[0]["tokens"]).replace("</w>", "")
-    assert joined == "".join(CORPUS[0].split())
 
 
 def test_stops_when_no_pairs_left(spark):

@@ -310,23 +310,3 @@ def test_weighted_sample_props(spark):
     assert "WindowGroupLimit" in plan
 
 
-def test_curriculum_shards_globally_ordered(spark):
-    from dwds_livestream_spark.operators.curation import curriculum_shards
-
-    df = spark.range(10_000).select(
-        F.col("id"), (F.col("id") % 997 * 1.7).alias("score")
-    )
-    out = curriculum_shards(df, "score", n_shards=8)
-    bounds = (
-        out.groupBy("shard")
-        .agg(F.min("score").alias("lo"), F.max("score").alias("hi"))
-        .orderBy("shard")
-        .collect()
-    )
-    assert len(bounds) > 1
-    for a, b in zip(bounds, bounds[1:]):
-        assert a["hi"] <= b["lo"]
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning" in plan.lower()
-    assert "SinglePartition" not in plan
-    assert out.count() == 10_000

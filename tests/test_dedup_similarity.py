@@ -41,11 +41,7 @@ def test_exact_dedup_counts(spark, documents):
     assert out.agg(F.sum("n_dups")).collect()[0][0] == documents.count()
 
 
-@pytest.mark.parametrize("hash_fn", ["xxhash64", "md5_64"])
-def test_minhash_lsh_recall_against_exact_jaccard(spark, documents, hash_fn):
-    # both the scale default and the oracle-checkable md5 variant must
-    # clear the same recall bar — universality of the shingle hash is
-    # what the LSH guarantee rests on, whichever hash is plugged in
+def test_minhash_lsh_recall_against_exact_jaccard(spark, documents):
     exact = {
         (r.doc_a, r.doc_b)
         for r in ngram_jaccard_pairs(documents, n=5, threshold=0.8).collect()
@@ -54,7 +50,7 @@ def test_minhash_lsh_recall_against_exact_jaccard(spark, documents, hash_fn):
     approx = {
         (r.doc_a, r.doc_b)
         for r in minhash_lsh_pairs(
-            documents, n=5, k=128, bands=32, threshold=0.5, hash_fn=hash_fn
+            documents, n=5, k=128, bands=32, threshold=0.5
         ).collect()
     }
     recall = len(exact & approx) / len(exact)
@@ -75,8 +71,7 @@ def test_minhash_estimate_tracks_exact(spark, documents):
     assert errs and max(errs) < 0.15  # k=128 -> se ~ sqrt(j(1-j)/128) ~ 0.035
 
 
-@pytest.mark.parametrize("hash_fn", ["xxhash64", "md5_64"])
-def test_simhash_finds_near_duplicates(spark, documents, hash_fn):
+def test_simhash_finds_near_duplicates(spark, documents):
     exact = {
         (r.doc_a, r.doc_b)
         for r in ngram_jaccard_pairs(documents, n=5, threshold=0.9).collect()
@@ -85,9 +80,7 @@ def test_simhash_finds_near_duplicates(spark, documents, hash_fn):
         (r.doc_a, r.doc_b)
         # blocks must exceed max_hamming (pigeonhole guarantee) and
         # divide 64 evenly: 16 x 4-bit blocks
-        for r in simhash_near_pairs(
-            documents, max_hamming=8, blocks=16, hash_fn=hash_fn
-        ).collect()
+        for r in simhash_near_pairs(documents, max_hamming=8, blocks=16).collect()
     }
     if exact:
         recall = len(exact & near) / len(exact)
@@ -136,9 +129,7 @@ def test_simhash_md5_variant_matches_python_reference(spark):
     )
     got = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in simhash_near_pairs(
-            df, max_hamming=3, blocks=4, hash_fn="md5_64"
-        ).collect()
+        for r in simhash_near_pairs(df, max_hamming=3, blocks=4).collect()
     }
     assert expected, "planted near-identical docs should land within radius"
     assert got == expected
@@ -198,7 +189,7 @@ def test_minhash_md5_variant_matches_python_reference(spark):
     got = {
         (r_.doc_a, r_.doc_b): r_.est_jaccard
         for r_ in minhash_lsh_pairs(
-            df, n=n, k=k, bands=bands, threshold=0.5, hash_fn="md5_64"
+            df, n=n, k=k, bands=bands, threshold=0.5
         ).collect()
     }
     assert expected, "planted near-duplicate should collide in some band"
@@ -366,8 +357,7 @@ def test_levenshtein_band_blocking_exact(spark):
     assert (1, 3) in got  # cross-band pair found despite boundary
 
 
-@pytest.mark.parametrize("hash_fn", ["xxhash64", "md5_64"])
-def test_minhash_levenshtein_composition(spark, documents, hash_fn):
+def test_minhash_levenshtein_composition(spark, documents):
     """The at-scale composition (VERDICT r4 #4): MinHash-banded
     candidates -> exact thresholded Levenshtein verify. Two gates:
     (a) soundness — every emitted (pair, dist) matches the exact
@@ -387,7 +377,7 @@ def test_minhash_levenshtein_composition(spark, documents, hash_fn):
     got = {
         (r.doc_a, r.doc_b): r.edit_dist
         for r in minhash_levenshtein_pairs(
-            documents, n=5, k=128, bands=32, max_dist=60, hash_fn=hash_fn
+            documents, n=5, k=128, bands=32, max_dist=60
         ).collect()
     }
     assert got, "planted near-duplicates should survive the composition"
@@ -588,18 +578,18 @@ def test_ann_cluster_pair_recall_on_planted_duplicates(spark):
 
 def test_short_documents_do_not_crash_shingle_family(spark):
     """Review fix: sequence(1, 0) is DESCENDING in Spark — docs with
-    fewer than n tokens previously crashed shingles/_with_shingles/
-    winnowing with INVALID_PARAMETER_VALUE.START; they must contribute
-    zero shingles instead."""
+    fewer than n tokens previously crashed the shingle digests/
+    _with_shingles/winnowing with INVALID_PARAMETER_VALUE.START; they
+    must contribute zero shingles instead."""
     from dwds_livestream_spark.functions.text import winnowing_fingerprints
     from dwds_livestream_spark.operators.curation import decontaminate
-    from dwds_livestream_spark.operators.dedup import shingles
+    from dwds_livestream_spark.operators.dedup import _shingle_digest_rows
 
     docs = spark.createDataFrame(
         [(1, "only two"), (2, "a much longer document with many words here")],
         "doc_id long, text string",
     )
-    sh = shingles(docs, n=5)
+    sh = _shingle_digest_rows(docs, "text", "doc_id", 5)
     assert sh.where(F.col("doc_id") == 1).count() == 0
     assert sh.where(F.col("doc_id") == 2).count() > 0
 

@@ -1,16 +1,12 @@
 """Triangle counting (operators/graph.py): known counts on crafted
-graphs, hub-safety of the orientation, degree helper."""
+graphs, hub-safety of the orientation."""
 
 from __future__ import annotations
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from dwds_livestream_spark.operators.graph import (
-    canonical_edges,
-    node_degrees,
-    triangle_count,
-)
+from dwds_livestream_spark.operators.graph import canonical_edges, triangle_count
 
 
 def _edges(spark, pairs):
@@ -68,9 +64,3 @@ def test_orientation_caps_wedges_at_hub(spark):
     out_deg = d.groupBy("x").count().agg(F.max("count")).collect()[0][0]
     # every leaf points AT the hub; max out-degree is 1, not 1000
     assert out_deg == 1
-
-
-def test_node_degrees(spark):
-    e = _edges(spark, [(1, 2), (2, 3), (3, 1), (3, 4)])
-    deg = {r["node"]: r["degree"] for r in node_degrees(e).collect()}
-    assert deg == {1: 2, 2: 2, 3: 3, 4: 1}

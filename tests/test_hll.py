@@ -1,4 +1,4 @@
-"""HLL sketch table (operators/hll.py): rolling/range estimates from
+"""HLL sketch table (operators/hll.py): rolling estimates from
 persisted day sketches vs exact distincts."""
 
 from __future__ import annotations
@@ -7,11 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from dwds_livestream_spark.operators.hll import (
-    daily_sketches,
-    range_distinct,
-    rolling_distinct,
-)
+from dwds_livestream_spark.operators.hll import daily_sketches, rolling_distinct
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -58,18 +54,6 @@ def test_rolling_estimate_tracks_exact(spark, events, sketches):
     assert set(est) == set(exact)
     for day, e in exact.items():
         assert abs(est[day] - e) <= max(3, 0.05 * e), (day, est[day], e)
-
-
-def test_range_estimate_tracks_exact(spark, events, sketches):
-    lo, hi = "2024-01-01", "2030-01-01"
-    est = range_distinct(sketches, lo, hi).collect()[0]["est_distinct"]
-    exact = (
-        events.where(F.to_date("ts").between(F.lit(lo), F.lit(hi)))
-        .select("user_id")
-        .distinct()
-        .count()
-    )
-    assert abs(est - exact) <= max(3, 0.05 * exact)
 
 
 def test_sketches_merge_associatively(spark, events, sketches):

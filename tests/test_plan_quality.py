@@ -68,8 +68,9 @@ def test_range_join_is_hash_join_not_nested_loop(spark):
 
 def test_argmin_dedup_single_aggregate_no_sort(spark, sf_dir):
     plan = _plan(A.q_argmin_dedup(spark, sf_dir))
-    # min_by formulation: hash aggregate with map-side partial agg,
-    # no window sort over the fact table
+    # min_by formulation: partial + final SortAggregate around one
+    # exchange (a struct buffer is not HashAggregate-eligible), no
+    # window over the fact table
     assert "Window" not in plan
     assert plan.count("Exchange hashpartitioning") == 1
 

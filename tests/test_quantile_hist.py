@@ -166,20 +166,15 @@ def test_cluster_representative_ledger_invariants(spark):
 
 
 def test_keyed_rollup_matches_per_key_slices(spark, events):
-    """range_quantiles_by(key) == range_quantiles on each key's own
-    events — the grouped operator is exactly the per-segment
+    """range_quantiles over a keyed rollup == range_quantiles on each
+    key's own events — the grouped operator is exactly the per-segment
     composition of the global one."""
-    from dwds_livestream_spark.operators.quantile_hist import (
-        histogram_rollup_by,
-        range_quantiles_by,
-    )
-
-    hist = histogram_rollup_by(
+    hist = histogram_rollup(
         events, "event_type", lo=LO, hi=HI, n_bins=NBINS
     )
     got = {
         (r.key, r.q): r.est
-        for r in range_quantiles_by(
+        for r in range_quantiles(
             hist, "2024-01-01", "2024-12-31", lo=LO, hi=HI, n_bins=NBINS
         ).collect()
     }

@@ -41,21 +41,3 @@ def test_oracles_are_nonempty_sql():
         assert "SELECT" in sql.upper(), name
 
 
-def test_register_views_sql_surface(spark):
-    """plans/io.register_views: the full table set is reachable from
-    plain spark.sql, with the same timestamp normalization queries
-    get from load_table."""
-    from dwds_livestream_spark.plans.io import register_views
-    from dwds_livestream_spark.plans.registry import TABLES
-
-    names = register_views(spark, "/root/testdata/sf0.001", suffix="_v")
-    assert names == [f"{t}_v" for t in TABLES]
-    n = spark.sql(
-        "SELECT count(*) c FROM events_v WHERE ts >= '2024-01-01'"
-    ).first().c
-    assert n > 0
-    joined = spark.sql(
-        "SELECT count(*) c FROM lineitem_v l JOIN orders_v o "
-        "ON l.l_orderkey = o.o_orderkey"
-    ).first().c
-    assert joined > 0

@@ -167,13 +167,12 @@ def test_ledger_replay_excludes_foreign_batches_and_validates(spark):
         minhash_ledger_replay(df, batch_values=[])
 
 
-def test_ledger_replay_md5_matches_xxhash_on_exact_dups(spark):
-    # identical texts must pair under EITHER hash family (the md5_64
-    # path is what the oracle replicates)
+def test_ledger_replay_md5_pairs_exact_dups(spark):
+    # identical texts pair under the md5_64 shingle hash the oracle
+    # replicates
     rows = [(1, 0, _T["a"]), (2, 1, _T["a"])]
-    for hf in ("xxhash64", "md5_64"):
-        got = _replay(spark, rows, hash_fn=hf)
-        assert got[2] == (1, 1, 1.0), hf
+    got = _replay(spark, rows)
+    assert got[2] == (1, 1, 1.0)
 
 
 # ------------------------------------------------------------------

@@ -41,7 +41,7 @@ def test_minhash_replay_registry_entry_matches_operator(spark):
         for r in minhash_ledger_replay(
             docs, text_col="text", id_col="doc_id", batch_col="batch",
             batch_values=[0, 1, 2], n=5, k=128, bands=32,
-            threshold=L.MINHASH_LEDGER_THRESHOLD, hash_fn="md5_64",
+            threshold=L.MINHASH_LEDGER_THRESHOLD,
         ).collect()
     }
     assert via_registry == live and len(live) > 0

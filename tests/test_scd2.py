@@ -1,15 +1,11 @@
 """SCD2 dimension history (operators/scd2.py): change/delete/add
-classification, point-in-time reads, idempotent re-merge."""
+classification, idempotent re-merge."""
 
 from __future__ import annotations
 
 from pyspark.sql import Row
 
-from dwds_livestream_spark.operators.scd2 import (
-    as_of_version,
-    scd2_init,
-    scd2_merge,
-)
+from dwds_livestream_spark.operators.scd2 import scd2_init, scd2_merge
 
 KEYS = ["lemma"]
 ATTRS = ["article_type", "source"]
@@ -50,12 +46,6 @@ def test_merge_classifies_and_keeps_history(spark):
     )
     assert v[("Katze", "2024-02-01 00:00:00", "None")] == ("Vollartikel", "WDG")
     assert len(v) == 4
-
-    # point-in-time: January sees the old world, February the new
-    jan = {r.lemma: r.source for r in as_of_version(h2, "2024-01-15 00:00:00").collect()}
-    feb = {r.lemma: r.source for r in as_of_version(h2, "2024-02-15 00:00:00").collect()}
-    assert jan == {"Haus": "WDG", "Hund": "WDG"}
-    assert feb == {"Haus": "DWDS", "Katze": "WDG"}
 
 
 def test_remerge_identical_snapshot_is_noop(spark):

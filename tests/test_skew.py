@@ -48,25 +48,3 @@ def test_salt_spreads_hot_key_and_left_join_keeps_unmatched(spark):
     assert len(orphan) == 1 and orphan[0].label is None
 
 
-def test_detect_hot_keys_finds_planted_skew(spark):
-    from dwds_livestream_spark.operators.skew import detect_hot_keys, salted_join
-
-    # 60% of rows on key 0, rest uniform over 10k keys
-    fact = spark.range(200_000).selectExpr(
-        "CASE WHEN id % 10 < 6 THEN 0 ELSE id % 10000 END AS k",
-        "id AS v",
-    )
-    hot = detect_hot_keys(fact, "k", share_threshold=0.05)
-    assert hot == [0]
-
-    # and the detected keys drive the salted join end to end
-    dim = spark.range(10_000).selectExpr("id AS k", "id * 2 AS w")
-    joined = salted_join(fact, dim, on="k", salt=8, hot_keys=hot)
-    assert joined.count() == 200_000
-
-
-def test_detect_hot_keys_none_when_uniform(spark):
-    from dwds_livestream_spark.operators.skew import detect_hot_keys
-
-    fact = spark.range(100_000).selectExpr("id % 1000 AS k")
-    assert detect_hot_keys(fact, "k", share_threshold=0.05) == []

@@ -138,7 +138,7 @@ def test_winnowing_md5_variant_matches_python_reference(spark):
         [Row(doc_id=i, text=t) for i, t in texts.items()]
     )
     got = {}
-    for r in winnowing_fingerprints(df, k=k, window=w, hash_fn="md5_32").collect():
+    for r in winnowing_fingerprints(df, k=k, window=w).collect():
         got.setdefault(r.doc_id, set()).add(r.fp)
     for i, t in texts.items():
         assert got.get(i, set()) == ref(t), f"doc {i}"
