@@ -132,6 +132,22 @@ def _driver_java_options(driver_mem: str) -> str:
 # - A cold JVM logs hundreds of [warning][cds] lines ("Skipping ...:
 #   Signed JAR") to stdout, which is the Python process's stdout; cds
 #   logging is switched off.
+#
+# What the archive cannot hold, so every session still defines it (much
+# of the 5,855 of a live_tail driver's 21,397 classes that come from
+# outside the archive):
+# - Janino's classes. janino-3.1.9.jar and commons-compiler-3.1.9.jar
+#   are signed (META-INF/DUMMY.SF, DUMMY.DSA) and JDK 17's dump skips
+#   signed jars ("Skipping ...: Signed JAR"), so each session loads their
+#   classes from the jars (370 in that run), and JarVerifier checks the
+#   signatures with SHA-256 digests on the way: JFR puts those samples
+#   in the first whole-stage codegen.
+# - Scala closures' lambda proxies. Scala 2.13 compiles a closure to a
+#   serializable lambda (LambdaMetafactory.altMetafactory with
+#   FLAG_SERIALIZABLE), and JDK 17's LambdaProxyClassArchive neither
+#   records nor finds a serializable one: of that run's lambda proxies,
+#   288 of the 299 archived have a JDK or Java-library host class, and
+#   4,103 of the 4,156 defined anew a Scala one.
 _CDS_MAGIC = 0xF00BABA8  # JDK 17 dynamic archive, little-endian on disk
 _CDS_LOG_OFF = "-Xlog:cds*=off"
 # launcher inputs that add directories or jars to the driver classpath
@@ -375,6 +391,34 @@ def build_session(
         # convert in the loader (plans/io.py) — same ns->µs truncation
         # DuckDB applies internally.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Session extensions from spark.sql.extensions only: no
+        # SparkSessionExtensionsProvider loaded from the classpath. The
+        # one a Spark 4.1 install has is spark-mllib's
+        # InternalFunctionRegistration, which at every session start
+        # builds Scala's runtime-reflection universe and TypeTag
+        # encoders to put vector_to_array/array_to_vector into Spark's
+        # internal function registry. Only pyspark.ml.functions' two
+        # functions of those names resolve through it (plain SQL cannot),
+        # and nothing here imports pyspark.ml: in this factory's sessions
+        # those two fail with UNRESOLVED_ROUTINE, the rest of pyspark.ml
+        # works. extra_conf={"spark.sql.extensions.test.loadFromCp":
+        # "true"} loads classpath extensions again. Measured on a 4-core
+        # host, warm CDS cache, at session-ready: 2g driver
+        # sun.cls.classInitTime 2.3 -> 1.2-1.3 s, C1 compiles 4,610 ->
+        # 2,930, JIT 1.0 -> 0.6-0.7 s (3 runs a side); the 24g default's
+        # driver CPU 7.1 -> 4.7 s (medians, 5 runs a side); perfbench
+        # batch_queries setup_s 4.72 -> 3.36 CPU-s (10/10 pairs). Part
+        # of that is moved, not saved: the built-in function registry,
+        # which the extension's registration initialised, now
+        # initialises at the first query (batch_queries JIT during the
+        # passes 3.7 -> 3.8 s; cpu_ms_per_unit unmoved). A session that
+        # runs to_json (the live dimension snapshot) builds the universe
+        # anyway, later: to_json generates code for an Invoke, which
+        # loads ScalaReflection (live_tail setup_s -6%, inside the
+        # noise). Spark calls the flag test-only; tests/test_cli.py
+        # reads the internal registry from a fresh JVM, so a Spark that
+        # drops it fails there.
+        .config("spark.sql.extensions.test.loadFromCp", "false")
     )
     if master.startswith("local"):
         # Single-JVM local mode has no data locality to wait for, but

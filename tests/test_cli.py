@@ -1,10 +1,10 @@
 """CLI entry points: scripts/collect.py as a subprocess smoke with
 availableNow drain — JSONL in, typed homograph-encoded partitioned
 parquet out — scripts/serve.py's shutdown on SIGTERM, and the session
-factory's driver JVM options and checkpoint file manager, which only a
-fresh JVM shows. (serve.py shares every component with
-test_serving.py's full-topology test; its wall-clock streaming loop is
-exercised there without subprocess timing flakiness.)"""
+factory's driver JVM options, session extensions and checkpoint file
+manager, which only a fresh JVM shows. (serve.py shares every component
+with test_serving.py's full-topology test; its wall-clock streaming loop
+is exercised there without subprocess timing flakiness.)"""
 
 from __future__ import annotations
 
@@ -19,6 +19,7 @@ import threading
 import time
 
 import duckdb
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -111,32 +112,60 @@ jvm = spark.sparkContext._jvm
 mf = jvm.java.lang.management.ManagementFactory
 diag = mf.getPlatformMXBean(
     jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+internal = getattr(getattr(jvm.org.apache.spark.sql.catalyst.analysis,
+                           "FunctionRegistry$"), "MODULE$").internal()
 print(json.dumps({
     **{k: jvm.java.lang.System.getProperty(k)
        for k in ("user.timezone", "user.language", "probe.flag")},
     "tiered_stop": diag.getVMOption("TieredStopAtLevel").getValue(),
+    "load_from_cp": spark.conf.get("spark.sql.extensions.test.loadFromCp"),
+    "internal_functions": sorted(
+        str(f.funcName()) for f in
+        jvm.scala.jdk.javaapi.CollectionConverters.asJava(internal.listFunction())),
 }))
 spark.stop()
 """
 
 
-def test_session_java_options_merge_with_caller_extras():
-    """The factory's driver options (locale, timezone, and for a 2g
-    driver C1-only compilation) sit in defaultJavaOptions, so a caller's
-    extraJavaOptions adds to them instead of replacing them. A fresh
-    JVM is needed: options only apply at launch. The compiler level is
-    read back from HotSpot, not from the argument list — Spark adds
-    -XX:+IgnoreUnrecognizedVMOptions, so a misspelt flag would be
-    dropped silently."""
+@pytest.fixture(scope="module")
+def probed_session():
+    """What a fresh 2g driver JVM built by the factory reports. A fresh
+    JVM is needed: JVM options and static SQL confs only apply at
+    launch. One JVM serves the tests below."""
     env = dict(os.environ, PYTHONPATH=REPO, SPARK_GRAFT_DRIVER_MEM="2g")
     res = subprocess.run(
         [sys.executable, "-c", _PROBE_SESSION],
         capture_output=True, text=True, timeout=240, env=env,
     )
     assert res.returncode == 0, res.stderr[-2000:]
-    seen = json.loads(res.stdout.strip().splitlines()[-1])
+    return json.loads(res.stdout.strip().splitlines()[-1])
+
+
+def test_session_java_options_merge_with_caller_extras(probed_session):
+    """The factory's driver options (locale, timezone, and for a 2g
+    driver C1-only compilation) sit in defaultJavaOptions, so a caller's
+    extraJavaOptions adds to them instead of replacing them. The
+    compiler level is read back from HotSpot, not from the argument
+    list — Spark adds -XX:+IgnoreUnrecognizedVMOptions, so a misspelt
+    flag would be dropped silently."""
+    seen = {k: probed_session[k] for k in (
+        "user.timezone", "user.language", "probe.flag", "tiered_stop")}
     assert seen == {"user.timezone": "UTC", "user.language": "en",
                     "probe.flag": "1", "tiered_stop": "1"}
+
+
+def test_session_skips_classpath_extensions(probed_session):
+    """The factory turns off loading SparkSessionExtensionsProviders
+    from the classpath, so spark-mllib's InternalFunctionRegistration,
+    whose Scala reflection set-up cost every session start about a third
+    of its driver CPU, does not register pyspark.ml's vector_to_array/
+    array_to_vector in the internal registry. Spark calls the flag
+    test-only: a Spark that drops it ignores the conf, the extension
+    loads again, and the registry read here shows it."""
+    assert probed_session["load_from_cp"] == "false"
+    internal = set(probed_session["internal_functions"])
+    assert internal  # the registry was read
+    assert not internal & {"vector_to_array", "array_to_vector"}
 
 
 def test_c1_only_for_a_short_work_heap():

@@ -4,8 +4,6 @@ exists for."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from dwds_livestream_spark.operators.components import connected_components
 
 

@@ -7,8 +7,6 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from pyspark.sql import functions as F
-
 from dwds_livestream_spark.operators.embedding_ops import (
     embedding_covariance,
     embedding_pca,

@@ -13,7 +13,6 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from dwds_livestream_spark.operators.enrich import enrich
 from dwds_livestream_spark.operators.range_join import range_join
 from dwds_livestream_spark.plans import analytics as A
 
@@ -66,7 +65,7 @@ def test_range_join_is_hash_join_not_nested_loop(spark):
     assert "HashJoin" in plan or "SortMergeJoin" in plan
 
 
-def test_argmin_dedup_single_aggregate_no_sort(spark, sf_dir):
+def test_argmin_dedup_one_exchange_no_window(spark, sf_dir):
     plan = _plan(A.q_argmin_dedup(spark, sf_dir))
     # min_by formulation: partial + final SortAggregate around one
     # exchange (a struct buffer is not HashAggregate-eligible), no

@@ -13,8 +13,6 @@ import datetime as dt
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from pyspark.sql import functions as F
-
 from dwds_livestream_spark.operators.asof import asof_join
 from dwds_livestream_spark.operators.range_join import range_join
 

@@ -3,8 +3,6 @@ round's registry entries."""
 
 from __future__ import annotations
 
-import math
-
 import pytest
 
 from pyspark.sql import functions as F

@@ -281,8 +281,6 @@ def test_robust_scaler_rank_convention(spark):
     # percentile_approx with accuracy >= n picks the value at 1-based
     # rank ceil(p*n): for n=4 sorted [1,2,3,4] -> q1=1 (rank 1),
     # med=2 (rank 2), q3=3 (rank 3); iqr=2, so x=4 scales to 1.0
-    from dwds_livestream_spark.plans.analytics import q_robust_scaler  # noqa: F401
-
     df = spark.createDataFrame(
         [(i, [float(i + 1)]) for i in range(4)],
         "vec_id long, embedding array<double>",

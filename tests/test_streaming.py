@@ -10,7 +10,6 @@ import time
 import pytest
 
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from dwds_livestream_spark.functions.access_log import access_log_to_events
 from dwds_livestream_spark.operators.enrich import enrich
